@@ -6,8 +6,8 @@ import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 
-/** Executed-plan shape extraction shared by the golden-plan suite and
-  * the audit mains: counts the operators that RAN, by collecting first
+/** Executed-plan shape extraction shared by ContractSpec and the
+  * operator specs: counts the operators that RAN, by collecting first
   * and then descending materialized adaptive stages, stopping at
   * ReusedExchange/ReusedSubquery (those subtrees executed once
   * elsewhere). These five counts are the scale fingerprints of a query:
@@ -82,20 +82,7 @@ object PlanShapes {
   * suite exists to catch. */
 object GoldenPlans {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fresh temp warehouse: c12 saveAsTable's location must not
-      // collide with a previous run's ./spark-warehouse leftovers
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-golden-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = TestSession.spark
     val dir = "/root/testdata/sf0.001"
     val lines = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val shape = PlanShapes.executedShape(fn(spark, dir))
@@ -104,7 +91,7 @@ object GoldenPlans {
     }
     java.nio.file.Files.createDirectories(PlanShapes.goldenPath.getParent)
     java.nio.file.Files.writeString(PlanShapes.goldenPath,
-      ("# Executed-plan shapes at sf0.001 (GoldenPlanSpec; regenerate via" ::
+      ("# Executed-plan shapes at sf0.001 (ContractSpec; regenerate via" ::
         "# `sbt \"Test/runMain graft.GoldenPlans\"` and REVIEW the diff)" ::
         lines.toList).mkString("", "\n", "\n"))
     spark.stop()

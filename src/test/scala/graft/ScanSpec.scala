@@ -2,48 +2,14 @@ package graft
 
 import org.apache.spark.sql.execution.FileSourceScanExec
 
-/** Scan-discipline regression net, companion to PlanSpec: at 100 TB the
-  * difference between a query that works and one that doesn't is often
-  * whether its filters and projections reached the parquet scan. These
-  * tests pin that for representative queries, so a refactor that breaks
-  * pushdown (e.g. wrapping a column in an opaque expression before the
-  * filter) fails CI even though sf0.01 rows still match.
+/** Lineage and skew pins for the span-dedup operator on its own; the
+  * registry queries' scan pins live in ContractSpec.
   */
 class ScanSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def scans(name: String): Seq[FileSourceScanExec] = {
-    val plan = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan match {
-      // AQE wraps the physical plan; scans live under the inner plan
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    plan.collect { case s: FileSourceScanExec => s }
-  }
-
-  test("a9_project prunes the orders scan to exactly the consumed columns") {
-    val read = scans("a9_project").flatMap(_.requiredSchema.fieldNames).toSet
-    assert(read == Set("o_orderkey", "o_totalprice", "o_orderstatus", "o_orderdate"),
-      s"scan reads $read — projection did not prune")
-  }
-
-  test("b3_search_multi pushes its contains-predicates into the parquet scan") {
-    val pushed = scans("b3_search_multi").flatMap(_.metadata.get("PushedFilters")).mkString
-    assert(pushed.contains("StringContains(p_name,re)"), s"got: $pushed")
-    assert(pushed.contains("StringContains(p_type,AN)"), s"got: $pushed")
-  }
-
-  test("c1_pricing_summary reads only the six aggregated lineitem columns") {
-    val read = scans("c1_pricing_summary").flatMap(_.requiredSchema.fieldNames).toSet
-    // shipdate (filter) + flags (keys) + quantity/price/discount (measures)
-    assert(read.size <= 7 && read.contains("l_shipdate") && read.contains("l_quantity"),
-      s"scan reads $read")
-    val pushed = scans("c1_pricing_summary").flatMap(_.metadata.get("PushedFilters")).mkString
-    assert(pushed.contains("l_shipdate"), s"ship-date filter not pushed: $pushed")
-  }
-
-  // d28/d31 lineage + skew pins. The gram explosion executes exactly ONCE,
+  // Lineage + skew pins. The gram explosion executes exactly ONCE,
   // inside the eager Lineage.truncate of the per-(doc, gram) table; both
   // downstream consumers (the groupBy(gram) document-frequency aggregate and
   // the join probe) read the checkpoint. Two observables guard the two
@@ -71,166 +37,5 @@ class ScanSpec extends SparkSpec {
       s"checkpoint), got $n — the explosion has an untruncated consumer")
     assert(PlanShapes.walk(qe.executedPlan).windows == 0,
       "gram document-frequency regressed to a window — unsplittable under Zipf skew")
-  }
-
-  test("d28_dup_spans: 1 final-plan scan (source enrich), gram df not a window") {
-    val df = SparkEntry.queries("d28_dup_spans")(spark, dir)
-    val n = scans("d28_dup_spans").length
-    assert(n == 1, s"expected 1 documents scan in the final plan (source enrich; the " +
-      s"gram side ran once inside the truncate), got $n")
-    assert(PlanShapes.windowCount(df) == 0,
-      "gram document-frequency regressed to a window")
-  }
-
-  // r14 session 2: toks is spread + truncated ONCE (it had two plan
-  // parents — gram explosion and mask join — so tokenize ran twice,
-  // fused into the single-split scan); the mask side now reads the
-  // checkpoint blocks, so the FINAL plan has ZERO file scans.
-  test("d31_span_removal: 0 final-plan scans (mask reads the toks checkpoint), gram df not a window") {
-    val df = SparkEntry.queries("d31_span_removal")(spark, dir)
-    val n = scans("d31_span_removal").length
-    assert(n == 0, s"expected 0 documents scans in the final plan (toks truncated " +
-      s"once, mask reads checkpoint blocks), got $n — a consumer re-reads the source")
-    assert(PlanShapes.windowCount(df) == 0,
-      "gram document-frequency regressed to a window")
-  }
-
-  test("d31b_span_keepfirst: 0 final-plan scans, owner election rides the partial agg") {
-    val df = SparkEntry.queries("d31b_span_keepfirst")(spark, dir)
-    val n = scans("d31b_span_keepfirst").length
-    assert(n == 0, s"expected 0 documents scans in the final plan (toks truncated " +
-      s"once, mask reads checkpoint blocks), got $n — a consumer re-reads the source")
-    assert(PlanShapes.windowCount(df) == 0,
-      "owner election regressed to a window — unsplittable under Zipf skew")
-  }
-
-  // d37 lineage pin: the bigram explosion may execute at most TWICE
-  // (join-left + the bg stats chain — the documented map-stage re-run
-  // trade in CorpusStats.docBigramCrossEntropy); the third scan is the
-  // explode-free Σ(len−1) length pass. A regression to the naive
-  // 4-way-join formulation (3 explosions, 4 scans) must fail here.
-  // EXECUTED counts: collect() first, then descend materialized stages,
-  // stopping at ReusedExchange (those subtrees ran once elsewhere).
-  test("d37_bigram_xentropy executes ≤2 explosions and ≤3 scans") {
-    val df = SparkEntry.queries("d37_bigram_xentropy")(spark, dir)
-    df.collect()
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): (Int, Int) = p match {
-      case _: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => (0, 0)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => walk(q.plan)
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case s: FileSourceScanExec => (1, 0)
-      case g: org.apache.spark.sql.execution.GenerateExec =>
-        val (cs, cg) = g.children.map(walk).foldLeft((0, 0)) { case ((a1, b1), (a2, b2)) => (a1 + a2, b1 + b2) }
-        (cs, cg + 1)
-      case other =>
-        (other.children ++ other.subqueries).map(walk)
-          .foldLeft((0, 0)) { case ((a1, b1), (a2, b2)) => (a1 + a2, b1 + b2) }
-    }
-    val (scans, gens) = walk(df.queryExecution.executedPlan)
-    assert(gens <= 2, s"bigram explosion executed $gens times — lineage regressed")
-    assert(scans <= 3, s"expected ≤3 documents scans, got $scans")
-  }
-
-  // Executed-explosion budgets for the operators whose multi-parent
-  // re-execution was purged this round. Checkpointed operators (d2, d4,
-  // d12, d15, d38) must show ZERO explosions in the final query plan —
-  // every corpus-scale Generate runs exactly once inside an eager
-  // truncation; removing a Lineage.truncate makes the count jump and
-  // this fail. d16/d26 bound the live-plan explosions of their linear
-  // rewrites.
-  private val generateBudgets = Seq(
-    "d2_dedup_minhash" -> 0, "d4_ngram_jaccard" -> 0, "d12_embed_neardup" -> 0,
-    "d15_dedup_clusters" -> 0, "d38_semantic_dedup" -> 0,
-    "d16_tfidf" -> 2, "d26_source_divergence" -> 1,
-    // d25: one training-corpus explosion + one (small) eval-side explosion
-    "d25_decontaminate" -> 2,
-    // d35: join-left + the global-counts chain (the structural bound;
-    // stage reuse currently collapses them to 1 — the pin catches a
-    // regression to a third parent, e.g. re-deriving the total from
-    // the explosion instead of the narrow length scan)
-    "d35_doc_xentropy" -> 2)
-
-  generateBudgets.foreach { case (name, budget) =>
-    test(s"$name executes ≤$budget explosions in its final plan") {
-      val df = SparkEntry.queries(name)(spark, dir)
-      df.collect()
-      def gens(p: org.apache.spark.sql.execution.SparkPlan): Int = p match {
-        case _: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => 0
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => gens(q.plan)
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => gens(a.executedPlan)
-        case g: org.apache.spark.sql.execution.GenerateExec => 1 + g.children.map(gens).sum
-        case other => (other.children ++ other.subqueries).map(gens).sum
-      }
-      val n = gens(df.queryExecution.executedPlan)
-      assert(n <= budget, s"$name executed $n explosions (budget $budget) — re-execution regressed")
-    }
-  }
-
-  test("b9_active_users prunes the events scan to (ts, user_id)") {
-    val read = scans("b9_active_users").flatMap(_.requiredSchema.fieldNames).toSet
-    assert(read == Set("ts", "user_id"), s"scan reads $read — projection did not prune")
-  }
-
-  test("d57_token_budget reads only the columns the quota rule consumes") {
-    val read = scans("d57_token_budget").flatMap(_.requiredSchema.fieldNames).toSet
-    assert(read == Set("doc_id", "source", "n_chars", "text"),
-      s"scan reads $read — projection did not prune")
-  }
-
-  test("d60_balanced_shards reads only (doc_id, text) on every documents scan") {
-    scans("d60_balanced_shards").foreach { s =>
-      val read = s.requiredSchema.fieldNames.toSet
-      assert(read.subsetOf(Set("doc_id", "text")),
-        s"scan reads $read — projection did not prune")
-    }
-  }
-
-  test("c32_anomalies prunes the events scan to the five consumed columns") {
-    scans("c32_anomalies").foreach { s =>
-      val read = s.requiredSchema.fieldNames.toSet
-      assert(read.subsetOf(Set("event_id", "ts", "user_id", "event_type", "value")),
-        s"scan reads $read — props must stay unread")
-    }
-  }
-
-  test("b10_attribution pushes the event-type filters and never reads props") {
-    val all = scans("b10_attribution")
-    all.foreach { s =>
-      assert(!s.requiredSchema.fieldNames.contains("props"),
-        s"scan reads ${s.requiredSchema.fieldNames.mkString(",")}")
-    }
-    val pushed = all.flatMap(_.metadata.get("PushedFilters")).mkString
-    assert(pushed.contains("event_type"), s"touch/conv type filters not pushed: $pushed")
-  }
-
-  test("c31_triangles reads only the three edge-derivation lineitem columns") {
-    val li = scans("c31_triangles").filter(_.requiredSchema.fieldNames.exists(_.startsWith("l_")))
-    assert(li.nonEmpty)
-    li.foreach { s =>
-      val read = s.requiredSchema.fieldNames.toSet
-      assert(read == Set("l_partkey", "l_orderkey", "l_quantity"), s"scan reads $read")
-      assert(s.metadata("PushedFilters").contains("LessThanOrEqual(l_quantity,"),
-        s"quantity filter not pushed: ${s.metadata("PushedFilters")}")
-    }
-  }
-
-  test("c30_pit_join never reads props or value on either events consumer") {
-    scans("c30_pit_join").foreach { s =>
-      val read = s.requiredSchema.fieldNames.toSet
-      assert(read.subsetOf(Set("event_id", "ts", "user_id", "event_type")),
-        s"scan reads $read")
-    }
-  }
-
-  test("c3_star_join pushes the region filter and prunes every dimension scan") {
-    val all = scans("c3_star_join")
-    val regionScan = all.find(_.requiredSchema.fieldNames.contains("r_name")).get
-    assert(regionScan.metadata("PushedFilters").contains("EqualTo(r_name,"),
-      s"region predicate not pushed: ${regionScan.metadata("PushedFilters")}")
-    // no star-join scan reads a table's full width
-    all.foreach { s =>
-      assert(s.requiredSchema.fieldNames.length <= 4,
-        s"scan reads ${s.requiredSchema.fieldNames.mkString(",")} — dimension not pruned")
-    }
   }
 }

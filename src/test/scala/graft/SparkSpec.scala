@@ -8,9 +8,9 @@ object TestSession {
   lazy val spark: SparkSession = newSession()
 
   /** Builder shared with [[SparkSpec]]-family helpers that need an
-    * isolated session. WARN logging: the 6 forked test shards otherwise
-    * stream the INFO firehose through sbt's output capture — measured
-    * wall-clock tax on the driver's `sbt test` budget. */
+    * isolated session. WARN logging: each forked test JVM otherwise
+    * streams the INFO firehose through sbt's output capture — a
+    * measured wall-clock tax on `sbt test`. */
   private def newSession(): SparkSession = {
     val s = builder().getOrCreate()
     s.sparkContext.setLogLevel("WARN")

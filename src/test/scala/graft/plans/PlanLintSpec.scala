@@ -1,6 +1,10 @@
 package graft.plans
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -47,22 +51,23 @@ class PlanLintSpec extends SparkSpec {
     assert(!rules(pruned).contains("UNPRUNED_WIDE_SCAN"))
   }
 
-  test("the library's own query surface lints clean of global windows and cartesians") {
-    val dir = "/root/testdata/sf0.001"
-    // spot-check a representative cross-section of the driver queries
-    val names = Seq("c1_pricing_summary", "c5_window_topk", "c10_sessionize",
-      "c33_global_rank", "d66_sorted_neighborhood",
-      "c37_nearest_join", "d68_span_corrupt")
-    names.foreach { n =>
-      val found = PlanLint.lint(graft.SparkEntry.queries(n)(spark, dir))
-        .filter(f => f.rule == "GLOBAL_WINDOW" || f.rule == "CARTESIAN")
-      assert(found.isEmpty, s"$n flagged: $found")
+  test("CARTESIAN / NESTED_LOOP see joins that AQE hides from executedPlan.collect") {
+    val a = spark.range(10).toDF("x")
+    val b = spark.range(10).toDF("y")
+    def joins(p: SparkPlan) = p.collect {
+      case j @ (_: CartesianProductExec | _: BroadcastNestedLoopJoinExec) => j
     }
-    // b11's lift rollup keeps ONE global window BY DESIGN — it runs over
-    // at most `buckets` rows (the linter cannot know cardinality; this
-    // is the documented benign instance, pinned here at exactly one)
-    val b11 = PlanLint.lint(graft.SparkEntry.queries("b11_decile_lift")(spark, dir))
-      .filter(_.rule == "GLOBAL_WINDOW")
-    assert(b11.length === 1, s"expected exactly the bounded lift window, got $b11")
+    def check(df: DataFrame, rule: String): Unit = {
+      // the aggregate's shuffle makes AQE wrap the plan in a leaf node
+      assert(df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec])
+      assert(joins(df.queryExecution.executedPlan).isEmpty)
+      assert(joins(df.queryExecution.sparkPlan).nonEmpty)
+      assert(rules(df).contains(rule))
+    }
+    check(a.crossJoin(b).groupBy().count(), "NESTED_LOOP")
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try check(a.crossJoin(b).groupBy().count(), "CARTESIAN")
+    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
   }
 }
