@@ -5,8 +5,11 @@ import org.apache.spark.sql.SparkSession
   * JSON line. Each query is fully materialized through the `noop` sink —
   * unlike `.count()`, this evaluates every output column, so
   * projection-only queries (text quality, fingerprints) measure the real
-  * operator cost, not a pruned row count. Failures are recorded per-query
-  * in an `errors` map instead of being silently swallowed.
+  * operator cost, not a pruned row count. Each query runs once cold and
+  * [[WarmRuns]] times warm, and every run is reported as measured: the
+  * spread of the warm runs is the artifact's own noise estimate.
+  * Failures are recorded per-query in an `errors` map instead of being
+  * silently swallowed.
   */
 object Bench {
 
@@ -14,10 +17,9 @@ object Bench {
     * name → (best cold s, best warm s). Whitespace-tolerant — the file
     * is written with `json.dump(..., indent=1)`, so every `:`/`{`/`,`
     * is followed by a newline; a compact-only pattern matches NOTHING
-    * against the committed file (the r10 dead-self-heal defect:
-    * baseline_ratio was null for all 260 queries and the "baseline"
-    * requeue trigger could never fire). BaselineSpec pins this against
-    * the committed file itself. */
+    * against the committed file (the r10 defect: baseline_ratio was
+    * null for all 260 queries). BaselineSpec pins this against the
+    * committed file itself. */
   private[graft] def parseBaseline(txt: String): Map[String, (Double, Double)] = {
     val re = ("\"([^\"]+)\"\\s*:\\s*\\{\\s*\"cold\"\\s*:\\s*([0-9.eE+\\-]+)\\s*,\\s*" +
       "\"warm\"\\s*:\\s*([0-9.eE+\\-]+)\\s*\\}").r
@@ -26,59 +28,13 @@ object Bench {
       .toMap
   }
 
-  /** Noise floor for the baseline ratchet: BENCH_BASELINE.json keeps
+  /** Noise floor for `baseline_ratio`: BENCH_BASELINE.json keeps
     * per-query BEST-EVER timings, which only tighten round over round;
-    * for 0.2–0.4 s queries the 2× bar lands at ~0.5 s — inside ambient
-    * GC/JIT jitter, so the ratchet cries wolf on sub-second absolute
-    * deltas (r11's five 1.5–1.6× "regressions" were all noise). Every
-    * baseline comparison reads `max(base, Floor)` instead: a query is
-    * only history-anomalous when it exceeds 2× of at-least-half-a-
-    * second, i.e. a full second of real wall — the smallest delta
-    * worth a requeue slot. */
+    * for 0.2–0.4 s queries a 2× ratio lands at ~0.5 s — inside ambient
+    * GC/JIT jitter (r11's five 1.5–1.6× "regressions" were all noise).
+    * Every ratio divides by `max(base, Floor)` instead, so a query only
+    * reads 2× when it lost a full second of real wall. */
   private[graft] val BaselineFloorSec = 0.5
-
-  /** Quiet-machine gate for timed work. Two consecutive graded rounds
-    * shipped driver bench artifacts compromised by ambient load (r12
-    * started at 1-min loadavg 2.53 and climbed to 3.13, producing five
-    * spurious >2× baseline ratios that all collapse to ≤1.27× on a
-    * quiet machine), while the canonical numbers lived only in a
-    * locally-committed quiet rerun. Make the DRIVER artifact quiet by
-    * construction instead: before any timed work — and again before
-    * each requeue second opinion, which is worthless if measured under
-    * the same load that polluted the first — poll /proc/loadavg and
-    * sleep while the 1-min figure exceeds [[QuietLoadThreshold]], up
-    * to a bounded budget. The committed r12 quiet artifact ran at
-    * loadavg 1.86 with median ratio 1.03, so 2.0 admits a healthy
-    * machine whose own JVM/compile tail is still draining while
-    * rejecting the 2.5+ regime that manufactured the phantoms. */
-  private[graft] val QuietLoadThreshold = 2.0
-
-  /** Pure gate for the quiet-wait loop (spec-pinned): keep sleeping
-    * while a 1-min loadavg sample exceeds the threshold. `None` (an
-    * unreadable /proc/loadavg) never blocks. */
-  private[graft] def stillNoisy(load1m: Option[Double],
-      threshold: Double = QuietLoadThreshold): Boolean =
-    load1m.exists(_ > threshold)
-
-  /** Requeue decision for one measured query: Some(trigger) when it
-    * deserves a second opinion — "ratio" when cold/warm disagree in
-    * either direction (load landed on one phase), "baseline" when
-    * either phase exceeds 2× the query's FLOORED best committed
-    * history ([[BaselineFloorSec]]; load inflated BOTH phases, which
-    * keeps a plausible ratio — the r9 17.4 s-warm PageRank phantom).
-    * Pure so BaselineSpec can demonstrate the baseline trigger firing
-    * on a synthetic 3× timing without running a suite. */
-  private[graft] def requeueTrigger(cold: Double, warm: Option[Double],
-      base: Option[(Double, Double)]): Option[String] = {
-    val ratioAnomalous = warm.exists(w => cold > 3 * w || w > 2 * cold)
-    val baseAnomalous = base.exists { case (bc, bw) =>
-      cold > 2 * math.max(bc, BaselineFloorSec) ||
-        warm.exists(_ > 2 * math.max(bw, BaselineFloorSec))
-    }
-    if (ratioAnomalous) Some("ratio")
-    else if (baseAnomalous) Some("baseline")
-    else None
-  }
 
   /** Parse a Bench-written artifact line (out/bench.json /
     * BENCH_r*_local.json) into its cold `queries` map. The committed
@@ -102,124 +58,65 @@ object Bench {
       .split("\\s+").take(3).map(_.toDouble).toSeq
     catch { case _: Throwable => Seq.empty }
 
-  /** Sleep-poll until the 1-min loadavg drops under the threshold or
-    * the budget is spent; returns seconds actually waited. Bounded so
-    * a busy-forever machine still produces an artifact (with the
-    * elevated loadavg recorded for the grader to adjudicate). */
-  private def waitForQuiet(maxWaitS: Double): Double = {
-    val t0 = System.nanoTime()
-    var l = loadavg().headOption
-    while (stillNoisy(l) && (System.nanoTime() - t0) / 1e9 < maxWaitS) {
-      Thread.sleep(15000)
-      l = loadavg().headOption
-    }
-    (System.nanoTime() - t0) / 1e9
-  }
+  /** MemTotal of /proc/meminfo in MB, if readable. */
+  private def memTotalMb(): Option[Long] =
+    try java.nio.file.Files.readAllLines(java.nio.file.Paths.get("/proc/meminfo"))
+      .toArray(Array.empty[String]).collectFirst {
+        case l if l.startsWith("MemTotal:") => l.split("\\s+")(1).toLong / 1024
+      }
+    catch { case _: Throwable => None }
+
+  /** Timed runs after the cold one; `queries_warm` is their lower
+    * median, which sheds the one roaming multi-second stall a full
+    * suite shows (a full-heap GC landing on whichever query is live). */
+  private val WarmRuns = 2
 
   def main(args: Array[String]): Unit = {
-    // Quiet-by-construction pre-flight — BEFORE session startup so the
-    // wait overlaps nothing timed. SPARK_GRAFT_NO_PREFLIGHT=1 skips it
-    // for dev subset iterations where wall matters more than noise.
-    val preflightWaitS =
-      if (sys.env.contains("SPARK_GRAFT_NO_PREFLIGHT")) 0.0
-      else waitForQuiet(maxWaitS = 600.0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Spark 4 default ANSI mode — the library must run clean under it.
-      .config("spark.sql.ansi.enabled", "true")
-      // events.parquet stores TIMESTAMP(NANOS); see Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bucketed-table queries (c12) saveAsTable here; keep it out of
-      // the repo and fresh per invocation
-      .config("spark.sql.warehouse.dir",
-        graft.sources.Tmp.dir("graft-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the JVM (class loading, Janino codegen compiler, shuffle
-    // machinery) on a synthetic job so the first timed query measures
-    // its operator, not session startup. Touches no benchmark tables.
-    spark.range(1000000L).selectExpr("sum(id * 2)").write.format("noop").mode("overwrite").save()
+    val spark = Harness.session()
     val errors = scala.collection.mutable.Map[String, String]()
     // Dev aid: SPARK_GRAFT_ONLY=q1,q2 times a subset while iterating on a
     // hot spot. Unset (the driver's invocation) → the full suite.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val selected = only.fold(SparkEntry.queries)(names => SparkEntry.queries.filter(q => names(q._1)))
-    // SPARK_GRAFT_REPEAT=N runs each query N times: run 1 is the cold
-    // time ("queries", comparable round-over-round), runs 2..N feed a
-    // warm MEDIAN ("queries_warm") that strips one-off JIT/IO noise and
-    // ambient machine load — the signal a load-polluted cold run lies
-    // about. Default 3: with a single warm run (REPEAT=2) the "median"
-    // IS that run, and the one roaming multi-second stall each full
-    // suite exhibits (full-heap GC landing on a live query) pollutes
-    // it; two warm runs take the lower-median, which sheds it.
-    val repeat = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt)
-    // Iterative queries (PageRank, BPE, star-contraction) localCheckpoint
-    // intermediates; nothing unpersists them once the query returns, so
-    // 100+ queries × repeats accumulate orphaned blocks in the
-    // BlockManager and later queries pay the GC bill — measured as 2-3×
-    // inflation on the tail of the full suite vs the same queries in
-    // isolation. Release between runs so each timing is the query's own
-    // cost. The release itself runs OUTSIDE the timed window.
-    // Even with blocks released, one query per full run was eating a
-    // ~15 s stall (a roaming spike: d34b, then d39, then d25 across
-    // otherwise-identical runs) — a full-heap collection of ~60 queries'
-    // garbage landing on whichever query is live. A periodic explicit
-    // GC in the untimed gap amortizes that debt where it isn't measured.
+    // Even with each run's blocks released, one query per full run was
+    // eating a ~15 s stall (a roaming spike: d34b, then d39, then d25
+    // across otherwise-identical runs) — a full-heap collection of ~60
+    // queries' garbage landing on whichever query is live. A periodic
+    // explicit GC in the untimed gap amortizes that debt where it isn't
+    // measured.
     var runsSinceGc = 0
-    def releaseRunState(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      runsSinceGc += 1
-      if (runsSinceGc >= 24) { runsSinceGc = 0; System.gc() }
-    }
     val loadStart = loadavg()
+    /** One timed run: its seconds (the time to failure if it failed)
+      * and whether it succeeded; a failure is recorded under `errKey`. */
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
              errKey: String): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          errors(errKey) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-          false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      releaseRunState()
-      (dt, ok)
+      val (dt, err) = Harness.timeNoop(fn(spark, sfDir))
+      err.foreach(e => errors(errKey) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
+      Harness.release(spark)
+      runsSinceGc += 1
+      if (runsSinceGc >= 24) { runsSinceGc = 0; System.gc() }
+      (dt, err.isEmpty)
     }
-    def coldAndWarm(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                    keySuffix: String): (Double, Option[Double], Boolean) = {
-      val (cold, ok) = once(fn, s"$name$keySuffix")
-      // skip warm reruns of a cold failure; a warm-ONLY failure (flaky
-      // IO, OOM) is recorded under its own key so the graded cold entry
-      // stays clean, and its time-to-failure never enters the median
+    // Run 1 is the cold time ("queries", comparable round over round,
+    // the time to failure if it failed). A cold failure skips the warm
+    // runs; a warm-only failure (flaky IO, OOM) is recorded under its
+    // own key so the graded cold entry stays clean, and its time never
+    // enters the warm column.
+    val results = selected.toSeq.map { case (name, fn) =>
+      val (cold, ok) = once(fn, name)
       val warms =
-        if (ok) (1 until repeat).map(i => once(fn, s"$name$keySuffix#warm$i"))
-          .filter(_._2).map(_._1)
+        if (ok) (1 to WarmRuns).map(i => once(fn, s"$name#warm$i")).collect { case (t, true) => t }
         else Seq.empty[Double]
-      (cold, warms.sorted.drop((warms.size - 1) / 2).headOption, ok)
+      (name, cold, warms, warms.sorted.drop((warms.size - 1) / 2).headOption)
     }
-    val firstPass = selected.toSeq.map { case (name, fn) =>
-      val (cold, warmMedian, ok) = coldAndWarm(name, fn, "")
-      (name, fn, cold, warmMedian, ok)
-    }
-    // Per-query rolling baseline: best (cold, warm) each query has ever
-    // recorded in a committed artifact (tools/make_baseline.py refreshes
-    // the file from BENCH_r*.json each round). History catches what the
-    // ratio rule is blind to — a query inflated in BOTH phases by
-    // ambient load keeps a plausible cold/warm ratio (one graded round
-    // shipped a 17.4 s warm PageRank whose history says 6.2 s) but can
-    // never fool its own past.
+    val loadEnd = loadavg()
+    // Per-query best (cold, warm) each query has ever recorded in a
+    // committed artifact (tools/make_baseline.py refreshes the file
+    // from BENCH_r*.json each round); `baseline_ratio` reports against it.
     val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE",
       "/root/repo/BENCH_BASELINE.json")
-    // A missing/empty baseline must be LOUD, not silently Map.empty:
-    // the r10 artifact shipped with the entire history half of the
-    // self-heal dead because a parse failure was swallowed here. The
+    // A missing/empty baseline must be LOUD, not silently Map.empty: the
     // entry count lands in the artifact (baseline_entries) so a graded
     // round can't claim history coverage it didn't have.
     val baseline: Map[String, (Double, Double)] =
@@ -230,61 +127,16 @@ object Bench {
       }
     if (baseline.isEmpty)
       System.err.println(s"[bench] WARNING: no baseline entries parsed from $baselinePath " +
-        "- the history half of the self-heal is OFF for this run")
-    // Ambient-load self-heal: a full-suite artifact shares the machine
-    // with whatever else runs during its ~10 min window, and one graded
-    // round showed 9 queries inflated ~5× by external load (d59 188 s
-    // cold vs 2.9 s warm; c61 warm 47.5 s vs cold 8.7 s — disproven in
-    // isolation). A query gets a second measured opinion at suite end
-    // when EITHER (a) its cold/warm ratio is anomalous in either
-    // direction, or (b) either phase exceeds 2× its committed rolling
-    // baseline. The graded entry keeps the FIRST measurement unless the
-    // second MATERIALLY disagrees (second × 1.5 ≤ first) — external
-    // load only inflates, so a much-lower second opinion is the closer
-    // estimate, while an agreeing second opinion must not min() the
-    // artifact into a systematic optimistic bias on legitimately
-    // variable queries. Both generations are recorded verbatim in
-    // `requeued`.
-    val requeued = scala.collection.mutable.Map[String, String]()
-    def heal(first: Double, second: Double): Double =
-      if (second * 1.5 <= first) second else first
-    // Cumulative quiet-wait budget across all requeues: each second
-    // opinion first waits (up to 120 s, 600 s total) for the load that
-    // likely polluted the first measurement to drain — without this the
-    // requeue remeasures under the very conditions it exists to escape.
-    var requeueWaitS = 0.0
-    val results = firstPass.map { case (name, fn, cold, warmOpt, ok) =>
-      val trigger = requeueTrigger(cold, warmOpt, baseline.get(name))
-      if (!ok || trigger.isEmpty) (name, cold, warmOpt)
-      else {
-        if (requeueWaitS < 600.0)
-          requeueWaitS += waitForQuiet(maxWaitS = math.min(120.0, 600.0 - requeueWaitS))
-        val (cold2, warm2, ok2) = coldAndWarm(name, fn, "#requeue")
-        requeued(name) =
-          s"""{"cold1":$cold,"warm1":${warmOpt.getOrElse(-1.0)},""" +
-            s""""cold2":$cold2,"warm2":${warm2.getOrElse(-1.0)},"ok2":$ok2,""" +
-            s""""trigger":"${trigger.get}"}"""
-        // a FAILED requeue's time-to-failure must never enter the heal —
-        // the same invariant the warm median keeps above
-        val bestCold = if (ok2) heal(cold, cold2) else cold
-        val bestWarm = (warmOpt, warm2) match {
-          case (Some(w1), Some(w2)) if ok2 => Some(heal(w1, w2))
-          case (w1, w2) => w1.orElse(if (ok2) w2 else None)
-        }
-        (name, bestCold, bestWarm)
-      }
-    }
-    val loadEnd = loadavg()
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    val qs = results.map { case (k, v, _) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-    val warm = results.collect { case (k, _, Some(w)) => s"${jstr(k)}:$w" }.mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+        "- baseline_ratio is null for every query")
+    import Harness.jstr
+    def jarr(xs: Seq[Double]) = xs.mkString("[", ",", "]")
+    def jobj(kvs: Seq[(String, String)]) = kvs.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+    val qs = jobj(results.map { case (k, c, _, _) => k -> c.toString })
+    val warm = jobj(results.collect { case (k, _, _, Some(w)) => k -> w.toString })
+    val warmRuns = jobj(results.collect { case (k, _, ws, _) if ws.nonEmpty => k -> jarr(ws) })
+    val errs = jobj(errors.toSeq.map { case (k, v) => k -> jstr(v) })
     val total = results.map(_._2).sum
-    val totalWarm = results.flatMap(_._3).sum
+    val totalWarm = results.flatMap(_._4).sum
     // The 40 E-series entries drive real micro-batch machinery (file
     // source + checkpoint + sink round-trips) at a constant per-drive
     // cost that dwarfs their batch mirrors (e5 ~18 s vs ~0.5 s) — at
@@ -293,27 +145,24 @@ object Bench {
     // suite for round-over-round continuity.
     def isStream(name: String) = name.matches("e\\d.*")
     val streamWall = results.filter(r => isStream(r._1)).map(_._2).sum
-    val streamWallWarm = results.filter(r => isStream(r._1)).flatMap(_._3).sum
-    val req = requeued.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+    val streamWallWarm = results.filter(r => isStream(r._1)).flatMap(_._4).sum
     // graded-cold / max(best-historical-cold, floor) per query (null =
     // no history yet, i.e. a query new this round); a clean run reads
     // ~1.0. The floor keeps sub-second queries' ratios out of GC-noise
     // territory — see BaselineFloorSec.
-    val baseRatios = results.map { case (k, c, _) =>
-      val r = baseline.get(k)
-        .map(b => f"${c / math.max(b._1, BaselineFloorSec)}%.4f").getOrElse("null")
-      s"${jstr(k)}:$r"
-    }.mkString("{", ",", "}")
-    def jarr(xs: Seq[Double]) = xs.mkString("[", ",", "]")
+    val baseRatios = jobj(results.map { case (k, c, _, _) =>
+      k -> baseline.get(k).map(b => f"${c / math.max(b._1, BaselineFloorSec)}%.4f").getOrElse("null")
+    })
+    val machine = s"""{"nproc":${Runtime.getRuntime.availableProcessors},""" +
+      s""""mem_total_mb":${memTotalMb().fold("null")(_.toString)},"master":"local[${Harness.cpus}]"}"""
     val line = s"""{"metric":"total","value":$total,"unit":"sec","total_warm":$totalWarm,""" +
       s""""stream_wall":$streamWall,"stream_wall_warm":$streamWallWarm,""" +
       s""""batch_wall":${total - streamWall},"batch_wall_warm":${totalWarm - streamWallWarm},""" +
-      s""""queries":$qs,"queries_warm":$warm,"errors":$errs,"requeued":$req,""" +
+      s""""queries":$qs,"queries_warm":$warm,"queries_warm_runs":$warmRuns,"errors":$errs,""" +
       s""""baseline_entries":${baseline.size},""" +
       s""""baseline_ratio":$baseRatios,""" +
       s""""loadavg_start":${jarr(loadStart)},"loadavg_end":${jarr(loadEnd)},""" +
-      s""""quiet_wait_s":{"preflight":$preflightWaitS,"requeue":$requeueWaitS},""" +
-      s""""sf":"$sfDir"}"""
+      s""""machine":$machine,"sf":${jstr(sfDir)}}"""
     println(line)
     // The stdout line travels through sbt's log, which truncates long
     // tails — per-round grading lost 18 of 83 timings to that. Always

@@ -1,7 +1,7 @@
 package graft
 
 import graft.vectors.VectorOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Micro-benchmark for the three dot-product formulations the library
@@ -23,14 +23,7 @@ object DotBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_DOT_N", "1000000").toLong
     val dims = 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import graft.expressions.VectorExpressions.dotNative
 
     val dir = graft.sources.Tmp.dir("graft-dotbench").resolve("pairs").toString
@@ -49,9 +42,9 @@ object DotBench {
       "native" -> pairs.select(dotNative(col("a"), col("b")).as("d")))
 
     def time(df: DataFrame): Double = {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+      val (t, err) = Harness.timeNoop(df)
+      err.foreach(throw _)
+      t
     }
     val runs = variants.map { case (name, df) =>
       time(df); time(df) // warm-up: codegen compile + JIT, untimed

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1): for each named
   * query, run once untimed (JIT/codegen warm), then re-run under a
@@ -23,85 +22,75 @@ object Profile {
     val outDir = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val cold = args.length > 3 && args(3) == "cold"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", graft.sources.Tmp.dir("graft-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    spark.range(1000000L).selectExpr("sum(id * 2)")
-      .write.format("noop").mode("overwrite").save()
-
-    final class JobTimes extends SparkListener {
-      case class J(start: Long, desc: String, var stages: Int = 0, var tasks: Int = 0)
-      val jobs = scala.collection.mutable.LinkedHashMap[Int, (J, Long)]()
-      private val open = scala.collection.mutable.Map[Int, J]()
-      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-        val d = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        open(e.jobId) = J(System.nanoTime(), d.take(90))
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
-        open.values.foreach { j => j.stages += 1; j.tasks += e.stageInfo.numTasks }
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-        open.remove(e.jobId).foreach(j => jobs(e.jobId) = (j, System.nanoTime()))
-      }
-    }
-
-    def releaseRunState(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
 
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => println(s"== $name: NOT FOUND ==")
         case Some(fn) =>
           if (!cold) {
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-            catch { case e: Throwable => println(s"== $name warmup FAILED: ${e.getMessage}") }
-            releaseRunState()
+            Harness.timeNoop(fn(spark, sfDir))._2
+              .foreach(e => println(s"== $name warmup FAILED: ${e.getMessage}"))
+            Harness.release(spark)
           }
           val lis = new JobTimes
           spark.sparkContext.addSparkListener(lis)
-          val t0 = System.nanoTime()
-          val df =
-            try {
-              val d = fn(spark, sfDir)
-              d.write.format("noop").mode("overwrite").save()
-              Some(d)
-            } catch { case e: Throwable =>
-              println(s"== $name FAILED: ${e.getMessage}"); None
-            }
-          val wall = (System.nanoTime() - t0) / 1e9
-          // let straggler listener events drain before reading
-          Thread.sleep(300)
+          var built: Option[org.apache.spark.sql.DataFrame] = None
+          val (wall, err) = Harness.timeNoop { val d = fn(spark, sfDir); built = Some(d); d }
+          err.foreach(e => println(s"== $name FAILED: ${e.getMessage}"))
+          Harness.drain(spark)
           spark.sparkContext.removeSparkListener(lis)
           println(f"== $name wall=$wall%.3f s jobs=${lis.jobs.size} ==")
-          lis.jobs.foreach { case (id, (j, end)) =>
-            val dur = (end - j.start) / 1e9
-            if (dur >= 0.005)
-              println(f"  job $id%3d $dur%7.3f s stages=${j.stages}%2d tasks=${j.tasks}%4d  ${j.desc}")
+          lis.jobs.foreach { case (id, j) =>
+            if (j.seconds >= 0.005)
+              println(f"  job $id%3d ${j.seconds}%7.3f s stages=${j.stages}%2d tasks=${j.tasks}%4d  ${j.desc}")
           }
-          val jobSum = lis.jobs.map { case (_, (j, e)) => (e - j.start) / 1e9 }.sum
-          println(f"  [sum of jobs $jobSum%.3f s; gap (driver/planning) ${wall - jobSum}%.3f s]")
-          df.foreach { d =>
+          val jobSum = lis.jobs.values.map(_.seconds).sum
+          println(f"  [sum of jobs $jobSum%.3f s; gap (driver/planning) ${wall - jobSum}%.3f s; " +
+            s"stages credited ${lis.jobs.values.map(_.stages).sum} of ${lis.stagesCompleted} completed]")
+          if (err.isEmpty) built.foreach { d =>
             val txt = d.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode)
             java.nio.file.Files.writeString(
               java.nio.file.Paths.get(s"$outDir/${name}_explain.txt"), txt)
           }
-          releaseRunState()
+          Harness.release(spark)
       }
     }
     spark.stop()
+  }
+}
+
+/** Per-job wall, stage and task counts from the listener events. Each
+  * completed stage is credited once, to the first job whose
+  * `SparkListenerJobStart` listed it: jobs overlap (AQE submits
+  * sub-jobs while its parent runs), so crediting every open job would
+  * count one stage several times. A job appears in `jobs` once it ends. */
+private[graft] final class JobTimes extends SparkListener {
+  final class Job(val startMs: Long, val desc: String) {
+    var endMs: Long = startMs
+    var stages = 0
+    var tasks = 0
+    def seconds: Double = (endMs - startMs) / 1e3
+  }
+  val jobs = scala.collection.mutable.LinkedHashMap[Int, Job]()
+  var stagesCompleted = 0
+  private val open = scala.collection.mutable.Map[Int, Job]()
+  private val owner = scala.collection.mutable.Map[Int, Job]() // stageId → job
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    val d = Option(e.properties)
+      .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+    val j = new Job(e.time, d.take(90))
+    open(e.jobId) = j
+    e.stageInfos.foreach(s => owner.getOrElseUpdate(s.stageId, j))
+  }
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+    stagesCompleted += 1
+    owner.get(e.stageInfo.stageId).foreach { j => j.stages += 1; j.tasks += e.stageInfo.numTasks }
+  }
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+    open.remove(e.jobId).foreach { j => j.endMs = e.time; jobs(e.jobId) = j }
   }
 }

@@ -102,19 +102,7 @@ object ScaleProbe {
     val sf01 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sf1 = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR",
       "/root/repo/target/scaleprobe/sf1.0")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        graft.sources.Tmp.dir("graft-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     generate(spark, sf01, sf1)
 
@@ -125,25 +113,10 @@ object ScaleProbe {
           tasks.add(TaskRec(te.stageId, te.taskMetrics.executorRunTime))
     })
 
-    // JVM warmup, same rationale as Bench
-    spark.range(1000000L).selectExpr("sum(id * 2)")
-      .write.format("noop").mode("overwrite").save()
-
-    def release(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
-
     /** One lo-vs-hi decade pass over `names`: lo measured twice (the
       * second run is JIT/IO-warm, the phase the single hi run gets),
-      * hi instrumented with the per-stage skew judgment and the
-      * self-heal (the Bench discipline): a single-sample breach of
-      * either bar gets a second measured opinion — one GC pause or
-      * JIT stall reads as a blow-up that no repeated run reproduces.
-      * Keep a clean generation if either run produced one; if both
-      * breach, keep the faster (the breach is then real and the
-      * artifact records its best-case form). Both generations land. */
+      * hi measured once, with the per-stage skew judgment, and recorded
+      * as measured. */
     def runPass(names: Seq[String], loDir: String, hiDir: String,
                 loField: String, hiField: String, outPath: String,
                 header: String,
@@ -151,10 +124,10 @@ object ScaleProbe {
       val entries: Seq[(String, String => DataFrame)] =
         names.map(n => n -> ((dir: String) => SparkEntry.queries(n)(spark, dir))) ++ extra
       def onceBy(fn: String => DataFrame, dir: String): Double = {
-        val t0 = System.nanoTime()
-        fn(dir).write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        release()
+        val (dt, err) = Harness.timeNoop(fn(dir))
+        err.foreach(throw _)
+        Harness.release(spark)
+        System.gc()
         dt
       }
       /** One instrumented hi-scale run: (wall s, total stages,
@@ -166,9 +139,10 @@ object ScaleProbe {
         * 3.5-ratio noise stage next to an 8%-cost 1.2-ratio stage is
         * not a breach — no single stage commits one). */
       def measureBy(fn: String => DataFrame, dir: String): (Double, Int, Int, Double, Double) = {
+        Harness.drain(spark) // no earlier run's task may land in this one
         tasks.clear()
         val t1 = onceBy(fn, dir)
-        Thread.sleep(1500) // listener bus drains asynchronously
+        Harness.drain(spark)
         val byStage = {
           import scala.jdk.CollectionConverters._
           tasks.asScala.toSeq.groupBy(_.stageId).view
@@ -185,28 +159,11 @@ object ScaleProbe {
       }
       val results = entries.map { case (name, fn) =>
         val tLo = math.min(onceBy(fn, loDir), onceBy(fn, loDir))
-        val gen1 = measureBy(fn, hiDir)
-        def breach(g: (Double, Int, Int, Double, Double)): Boolean =
-          g._1 / tLo > 12.0 || g._4 >= 3.0 // _4 = worst TAXING stage ratio
-        val (gen, requeued) =
-          if (!breach(gen1)) (gen1, None)
-          else {
-            val gen2 = measureBy(fn, hiDir)
-            val pick =
-              if (!breach(gen2)) gen2
-              else if (gen2._1 < gen1._1) gen2
-              else gen1
-            (pick, Some(gen1))
-          }
-        val (tHi, nStages, nMaterial, worstTaxing, worstAny) = gen
-        val reQ = requeued.map { g =>
-          f""","gen1":{"$hiField":${g._1}%.2f,"worst_taxing_ratio":${g._4}%.2f,"worst_stage_ratio":${g._5}%.2f}"""
-        }.getOrElse("")
+        val (tHi, nStages, nMaterial, worstTaxing, worstAny) = measureBy(fn, hiDir)
         val line = f"""{"$loField":$tLo%.2f,"$hiField":$tHi%.2f,"ratio":${tHi / tLo}%.2f,""" +
           f""""stages":$nStages,"material_stages":$nMaterial,""" +
-          f""""worst_taxing_ratio":$worstTaxing%.2f,"worst_stage_ratio":$worstAny%.2f$reQ}"""
-        println(f"SCALE $name%-24s lo=$tLo%7.2fs hi=$tHi%8.2fs ratio=${tHi / tLo}%6.2f taxing=$worstTaxing%5.2f any=$worstAny%5.2f" +
-          (if (requeued.isDefined) " (requeued)" else ""))
+          f""""worst_taxing_ratio":$worstTaxing%.2f,"worst_stage_ratio":$worstAny%.2f}"""
+        println(f"SCALE $name%-24s lo=$tLo%7.2fs hi=$tHi%8.2fs ratio=${tHi / tLo}%6.2f taxing=$worstTaxing%5.2f any=$worstAny%5.2f")
         name -> line
       }
       val ratios = results.map { case (_, l) =>

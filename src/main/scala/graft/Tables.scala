@@ -86,7 +86,7 @@ object Tables {
     *
     *  - parquet TIMESTAMP(NANOS): Spark cannot represent nanos natively;
     *    with `spark.sql.legacy.parquet.nanosAsLong=true` set at session
-    *    construction (Bench/Verify/test builders do) it arrives as LONG,
+    *    construction (`Harness.session` and the test sessions do) it arrives as LONG,
     *    and we rebuild microseconds with integer division (double division
     *    would lose precision above 2^53 ns).
     *  - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark reads

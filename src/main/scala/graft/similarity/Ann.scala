@@ -416,7 +416,9 @@ object Ann {
       // native fused ADC (bit-identical to the decode + zip_with fold
       // it replaces — see PqExpressions' exactness contract)
       .withColumn("__adc", pq.adcL2(col("qv"), col("__codes")))
-    val wAdc = Window.partitionBy("qid").orderBy(col("__adc").asc, col("cid").asc)
+    // A corpus row with a null embedding element has null codes, so a
+    // null __adc: it ranks after every scored candidate, never first.
+    val wAdc = Window.partitionBy("qid").orderBy(col("__adc").asc_nulls_last, col("cid").asc)
     if (rerank <= 0) {
       adc.withColumn("rank", row_number().over(wAdc).cast("long"))
         .filter(col("rank") <= k)
@@ -430,7 +432,7 @@ object Ann {
         .join(corpus.select(col(id).as("cid"), VectorOps.toDouble(col(vec)).as("__cv")), "cid")
         .withColumn("__dist", aggregate(zip_with(col("qv"), col("__cv"),
           (a, b) => (a - b) * (a - b)), lit(0.0), _ + _))
-      val w = Window.partitionBy("qid").orderBy(col("__dist").asc, col("cid").asc)
+      val w = Window.partitionBy("qid").orderBy(col("__dist").asc_nulls_last, col("cid").asc)
       exact.withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= k)
         .select(col("qid"), col("cid"), round(col("__dist"), 4).as("dist"), col("rank"))

@@ -41,8 +41,11 @@ object Pq {
     def subDim: Int = dim / m
     private def cbLit: Column = typedLit(codebooks.map(_.map(_.toSeq).toSeq).toSeq)
     /** Flattened codebooks for the native expressions:
-      * `flat[(j·kCodes + c)·subDim + d] = codebooks(j)(c)(d)`. */
-    private def cbFlat: Array[Double] = {
+      * `flat[(j·kCodes + c)·subDim + d] = codebooks(j)(c)(d)`. Built
+      * once: the expressions compare `books` by reference, so every
+      * expression from one model must share this array for
+      * canonicalisation and CSE to see them as equal. */
+    private lazy val cbFlat: Array[Double] = {
       val a = new Array[Double](m * kCodes * subDim)
       var j = 0
       while (j < m) {

@@ -12,3 +12,10 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
+
+/** The listener bus is `private[spark]`; this accessor lets a
+  * measurement wait until every posted event has been delivered, instead
+  * of sleeping a fixed time before reading listener state. */
+object BusBridge {
+  def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

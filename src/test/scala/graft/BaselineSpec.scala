@@ -2,14 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench self-heal's history half to the COMMITTED baseline
-  * file. Round 10 shipped the self-heal dead: the parse regex required
-  * compact JSON while tools/make_baseline.py writes indent=1, the
-  * `catch Throwable => Map.empty` swallowed the mismatch, and no spec
-  * loaded the real file — so baseline_ratio was null for all 260
-  * queries and the "baseline" requeue trigger was unreachable. This
-  * spec is the missing test: it parses the file the repo actually
-  * commits, and exercises the trigger logic the artifact depends on.
+/** Pins `Bench.parseBaseline`, which `baseline_ratio` reads, to the
+  * COMMITTED baseline file. Round 10 shipped it dead: the parse regex
+  * required compact JSON while tools/make_baseline.py writes indent=1,
+  * the `catch Throwable => Map.empty` swallowed the mismatch, and no
+  * spec loaded the real file — so baseline_ratio was null for all 260
+  * queries. This spec parses the file the repo actually commits.
   * No SparkSession — pure functions only. */
 class BaselineSpec extends AnyFunSuite {
 
@@ -22,7 +20,7 @@ class BaselineSpec extends AnyFunSuite {
   test("committed BENCH_BASELINE.json parses to >= 260 (cold, warm) entries") {
     val base = Bench.parseBaseline(committed)
     assert(base.size >= 260, s"parsed only ${base.size} baseline entries - " +
-      "the history half of the self-heal would silently no-op (the r10 defect)")
+      "baseline_ratio would silently read null (the r10 defect)")
     // every entry is a plausible timing, not a mis-grouped fragment
     base.foreach { case (name, (c, w)) =>
       assert(name.matches("[a-z]\\d+[a-z]?_.*"), s"non-query key parsed: $name")
@@ -50,61 +48,6 @@ class BaselineSpec extends AnyFunSuite {
       Map("q1_agg" -> (1.25, 0.5), "q2_join" -> (0.2, 0.1)))
     val compact = """{"queries":{"q1_agg":{"cold":1.25,"warm":0.5}}}"""
     assert(Bench.parseBaseline(compact) === Map("q1_agg" -> (1.25, 0.5)))
-  }
-
-  test("baseline trigger fires on a 3x-inflated timing with a clean cold/warm ratio") {
-    // both phases inflated 3x by ambient load: ratio looks healthy
-    // (cold ~2x warm is normal), only history can catch it - the r9
-    // c23/d15 phantom class this machinery was built for
-    val base = Some((6.0, 5.0))
-    assert(Bench.requeueTrigger(cold = 18.0, warm = Some(15.0), base) ===
-      Some("baseline"))
-    // clean run vs its own history: no trigger
-    assert(Bench.requeueTrigger(cold = 6.5, warm = Some(5.2), base) === None)
-    // ratio anomaly wins the label even when history also breaches
-    assert(Bench.requeueTrigger(cold = 40.0, warm = Some(5.0), base) ===
-      Some("ratio"))
-    // warm-only history breach still triggers
-    assert(Bench.requeueTrigger(cold = 7.0, warm = Some(11.0), base) ===
-      Some("baseline"))
-    // no history, clean ratio: nothing to compare against
-    assert(Bench.requeueTrigger(cold = 18.0, warm = Some(15.0), None) === None)
-  }
-
-  test("quiet-machine gate: noisy above threshold, unreadable loadavg never blocks") {
-    // r12's driver artifact started at loadavg 2.53 and manufactured
-    // five spurious >2x ratios; the committed quiet artifact ran at
-    // 1.86 with median ratio 1.03. The gate must separate exactly
-    // those two regimes.
-    assert(Bench.stillNoisy(Some(2.53)))
-    assert(!Bench.stillNoisy(Some(1.86)))
-    assert(Bench.QuietLoadThreshold === 2.0)
-    assert(Bench.stillNoisy(Some(2.01)) && !Bench.stillNoisy(Some(2.0)))
-    // an unreadable /proc/loadavg must never wedge the pre-flight
-    assert(!Bench.stillNoisy(None))
-  }
-
-  test("baseline trigger has a noise floor: sub-second best-evers don't cry wolf") {
-    // c15_histogram class: best-ever 0.24 s cold. A 0.45 s reading is
-    // 1.9x the raw base but a 0.2 s absolute delta - ambient GC noise.
-    // The floored bar is 2 * max(0.24, 0.5) = 1.0 s: no trigger.
-    assert(Bench.requeueTrigger(cold = 0.45, warm = Some(0.3),
-      Some((0.24, 0.2))) === None)
-    // even 0.9 s (3.75x raw) stays under the floored bar
-    assert(Bench.requeueTrigger(cold = 0.9, warm = Some(0.6),
-      Some((0.24, 0.2))) === None)
-    // but a full second of real wall still triggers
-    assert(Bench.requeueTrigger(cold = 1.1, warm = Some(0.7),
-      Some((0.24, 0.2))) === Some("baseline"))
-    // the floor is inert for queries whose base already exceeds it
-    assert(Bench.requeueTrigger(cold = 13.0, warm = Some(11.0),
-      Some((6.0, 5.0))) === Some("baseline"))
-    // warm side is floored identically (cold kept close enough that
-    // the ratio rule stays quiet and isolates the history decision)
-    assert(Bench.requeueTrigger(cold = 0.6, warm = Some(0.95),
-      Some((0.3, 0.2))) === None)
-    assert(Bench.requeueTrigger(cold = 0.6, warm = Some(1.05),
-      Some((0.3, 0.2))) === Some("baseline"))
   }
 }
 

@@ -39,7 +39,8 @@ class BenchArtifactSpec extends AnyFunSuite {
   test("parseBenchQueries handles the exact single-line shape Bench writes") {
     val line = """{"metric":"total","value":4.5,"unit":"sec","total_warm":3.1,""" +
       """"queries":{"q1_agg":1.25,"q2_join":2e-1,"e5_interval_join":16.8},""" +
-      """"queries_warm":{"q1_agg":0.5},"errors":{},"sf":"/x"}"""
+      """"queries_warm":{"q1_agg":0.5},"queries_warm_runs":{"q1_agg":[0.5,0.75]},"errors":{},""" +
+      """"machine":{"nproc":4,"mem_total_mb":15715,"master":"local[4]"},"sf":"/x"}"""
     assert(Bench.parseBenchQueries(line) ===
       Map("q1_agg" -> 1.25, "q2_join" -> 0.2, "e5_interval_join" -> 16.8))
     // no queries object: empty, never a throw

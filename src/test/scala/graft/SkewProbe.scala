@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *
   * For every query it reports per-stage task-time skew (max/median over
   * stages with enough tasks and material runtime) from a TaskEnd
-  * listener — the local[16] stand-in for "straggler ratio on the Spark
+  * listener — the local-mode stand-in for "straggler ratio on the Spark
   * UI". Stages below the material floor are noise, not stragglers.
   */
 object SkewProbe {
@@ -30,17 +30,7 @@ object SkewProbe {
 
   def main(args: Array[String]): Unit = {
     val probeDir = "/tmp/skewprobe"
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .appName("graft-skew-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     generate(spark, probeDir)
 
@@ -52,11 +42,12 @@ object SkewProbe {
     })
 
     def probe(name: String)(run: => Long): Unit = {
+      Harness.drain(spark)
       tasks.clear()
       val t0 = System.nanoTime()
       val rows = run
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1500) // listener bus drains asynchronously
+      Harness.drain(spark)
       val byStage = {
         import scala.jdk.CollectionConverters._
         tasks.asScala.toSeq.groupBy(_.stageId).view.mapValues(_.map(_.runMs).sorted).toMap

@@ -1,7 +1,7 @@
 package graft.similarity
 
 import graft.SparkSpec
-import graft.vectors.VectorOps
+import graft.vectors.{Pq, VectorOps}
 import org.apache.spark.sql.functions._
 
 class AnnSpec extends SparkSpec {
@@ -487,6 +487,24 @@ class AnnSpec extends SparkSpec {
     assert(clean == Seq(2L, 3L), "only the contaminated doc is removed")
     intercept[IllegalArgumentException] {
       Ann.contaminationPairs(corpus, evalSet, "vec_id", "embedding", 0.0)
+    }
+  }
+
+  test("a corpus row with a null embedding element never outranks a scored candidate") {
+    // its cosine scores are all null, so the argmax files it in list 1
+    // (probed here), and its PQ codes, ADC and exact distance are null
+    val corpus = Seq((0L, Seq(1.0, 0.0, 0.0, 0.0)), (1L, Seq(1.0, 0.0, 0.0, 0.0)),
+        (2L, Seq(0.0, 1.0, 0.0, 0.0)))
+      .toDF("vec_id", "embedding")
+      .union(spark.range(1).select(lit(9L).as("vec_id"),
+        expr("array(1.0d, cast(null as double), 0.0d, 0.0d)").as("embedding")))
+    val model = Pq.PqModel(dim = 4, m = 2, kCodes = 2,
+      Array(Array(Array(1.0, 0.0), Array(0.0, 1.0)), Array(Array(0.0, 0.0), Array(1.0, 0.0))))
+    Seq(0, 3).foreach { rerank =>
+      val top = Ann.ivfPqTopK(corpus, corpus.filter(col("vec_id") === 0L), "vec_id", "embedding",
+          k = 3, nLists = 1, nProbe = 1, pq = model, rerank = rerank)
+        .select("cid", "rank").as[(Long, Long)].collect().sortBy(_._2)
+      assert(top.map(_._1).toSeq == Seq(1L, 2L, 9L), s"rerank=$rerank")
     }
   }
 }

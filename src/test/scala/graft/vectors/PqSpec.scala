@@ -69,4 +69,19 @@ class PqSpec extends SparkSpec {
       Pq.train(df.limit(2), "id", "vec", dim = 8, m = 2, kCodes = 4)
     }
   }
+
+  test("two expressions from one model are semantically equal (one shared codebook)") {
+    val m = Pq.PqModel(dim = 4, m = 2, kCodes = 2,
+      Array.fill(2)(Array(Array(0.0, 1.0), Array(1.0, 0.0))))
+    // analysed, so the lambda variable of the double cast is resolved
+    // and canonicalisation can compare the two trees
+    def pair(c: => org.apache.spark.sql.Column) =
+      Seq((Seq(1.0, 0.0, 0.0, 1.0), Seq(0, 1))).toDF("vec", "codes")
+        .select(c.as("a"), c.as("b")).queryExecution.analyzed.expressions
+        .map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.Alias].child)
+    Seq(pair(m.quantErr(col("vec"))), pair(m.encode(col("vec"))),
+        pair(m.adcL2(col("vec"), col("codes")))).foreach { case Seq(a, b) =>
+      assert(a semanticEquals b, s"$a vs $b")
+    }
+  }
 }

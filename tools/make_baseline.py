@@ -2,10 +2,10 @@
 """Refresh BENCH_BASELINE.json: per-query best (cold, warm) over every
 committed bench artifact (BENCH_r*.json + out/bench.json if present).
 
-The minimum over rounds is the rolling baseline Bench.scala's self-heal
-compares against: ambient load only ever inflates a timing, so the best
-a query has ever recorded is the closest committed estimate of its own
-cost. Artifacts with truncated/partial JSON contribute whatever queries
+The minimum over rounds is the rolling baseline Bench.scala reports
+`baseline_ratio` against: ambient load only ever inflates a timing, so
+the best a query has ever recorded is the closest committed estimate of
+its own cost. Artifacts with truncated/partial JSON contribute whatever queries
 they still parse (r8's stdout tail was log-truncated).
 
 Usage: python3 tools/make_baseline.py [repo_root]
@@ -54,7 +54,8 @@ def main():
                 cur[1] = min(cur[1], float(w))
     out = {
         "note": "per-query best (cold, warm) seconds over committed "
-                "artifacts; Bench.scala requeues any phase >2x this",
+                "artifacts; Bench.scala reports each cold time's ratio to "
+                "this as baseline_ratio",
         "sources": used,
         "queries": {
             n: {"cold": round(c, 4), "warm": round(w, 4)}
