@@ -449,7 +449,7 @@ private[graft] object EtlQueries {
       val outRoot = graft.sources.Tmp.dir("graft-a11-out").toString
       val transform: DataFrame => DataFrame = _.filter(col("o_totalprice") > 100000)
       def silver(): Long =
-        if (Medallion.listPartitions(outRoot).isEmpty) 0L
+        if (Medallion.listPartitions(s, outRoot).isEmpty) 0L
         else s.read.parquet(outRoot).count()
       Medallion.writePartitioned(base.filter(part < 2), inRoot)
       val r1 = Medallion.runIncremental(s, inRoot, outRoot, transform)

@@ -113,10 +113,11 @@ object ScaleProbe {
           tasks.add(TaskRec(te.stageId, te.taskMetrics.executorRunTime))
     })
 
-    /** One lo-vs-hi decade pass over `names`: lo measured twice (the
-      * second run is JIT/IO-warm, the phase the single hi run gets),
-      * hi measured once, with the per-stage skew judgment, and recorded
-      * as measured. */
+    /** One lo-vs-hi decade pass over `names`: lo runs twice and the
+      * first run is warm-up (JIT, IO, code caches), so the recorded lo
+      * is the second run — one warm sample, the phase the single hi
+      * run gets; hi is measured once, with the per-stage skew judgment.
+      * Both sides are recorded as measured. */
     def runPass(names: Seq[String], loDir: String, hiDir: String,
                 loField: String, hiField: String, outPath: String,
                 header: String,
@@ -158,7 +159,8 @@ object ScaleProbe {
         (t1, byStage.size, material.size, worstTaxing, worst)
       }
       val results = entries.map { case (name, fn) =>
-        val tLo = math.min(onceBy(fn, loDir), onceBy(fn, loDir))
+        onceBy(fn, loDir) // warm-up
+        val tLo = onceBy(fn, loDir)
         val (tHi, nStages, nMaterial, worstTaxing, worstAny) = measureBy(fn, hiDir)
         val line = f"""{"$loField":$tLo%.2f,"$hiField":$tHi%.2f,"ratio":${tHi / tLo}%.2f,""" +
           f""""stages":$nStages,"material_stages":$nMaterial,""" +

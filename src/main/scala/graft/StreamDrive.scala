@@ -73,7 +73,7 @@ private[graft] object StreamDrive {
 
   /** Drives whose wall is checkpoint/state-store machinery, not
     * per-batch operator work — measured, not guessed: e5 16.8→11.4 s
-    * and e35 7.3→6.3 s under the override, while the foreachBatch
+    * and e35 7.3→6.3 s under the override, while the foreachEpoch
     * COMPOSITES (e10b SemDeDup 7.9→9.3 s, e13 clean-pipeline
     * 9.6→12.1 s) regressed because 4 partitions throttles the real
     * per-batch operator work they exist to measure — those keep the

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 /** E-series driver queries: STREAMING batch-equivalence, oracle-checked.
   *
   * Each query drives the real streaming state machinery — the exact
-  * per-micro-batch hooks `foreachBatch` calls in production
+  * per-micro-batch hooks `StreamOps.foreachEpoch` calls in production
   * ([[StreamOps]] `*Batch` + the state-table readers) — over THREE
   * deterministic micro-batches of the test tables, then returns the
   * rolled-up state table. The DuckDB oracle is the BATCH semantics over

@@ -448,12 +448,12 @@ private[graft] object StreamQueries2 {
         .orderBy("user_id", "session_start")
     }),
 
-    // E6 — streaming Bronze ingest through the REAL toBronze sink:
+    // E6 — streaming Bronze ingest through the REAL bronzeBatch sink:
     // three event-id-keyed micro-batches land append-only,
     // Hive-partitioned by the event-time-derived ingestion_date; the
     // per-day rollup of the landed Bronze must equal the batch
     // group-by over the full history — the append-only layout makes
-    // the micro-batch split invisible to readers. toBronze starts with
+    // the micro-batch split invisible to readers. foreachEpoch starts with
     // the default trigger, so the drive is processAllAvailable + stop
     // rather than AvailableNow.
 
@@ -469,7 +469,7 @@ private[graft] object StreamQueries2 {
       pinBuckets(e, pmod(col("event_id"), lit(3)).cast("int"), nBuckets = 3, dir = in)
       val stream = s.readStream.schema(e.schema)
         .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = StreamOps.toBronze(stream, "ts", out, ck)
+      val q = StreamOps.foreachEpoch(stream, ck)((b, _) => StreamOps.bronzeBatch(b, "ts", out))
       q.processAllAvailable(); q.stop()
       s.read.parquet(out)
         .groupBy(col(graft.etl.Medallion.PartitionCol).cast("string")
@@ -481,7 +481,7 @@ private[graft] object StreamQueries2 {
     }),
 
     // E7 — streaming content-hash-deduped Bronze ingest through the
-    // REAL toBronzeDeduped sink: ascending-doc_id micro-batches
+    // REAL bronzeDedupedBatch sink: ascending-doc_id micro-batches
     // (mtime-pinned), within-batch keep-min-id + the persisted hash
     // index across batches, so the streaming first-arrival winner IS
     // the batch operator's global min-doc_id (d1's keep rule). The
@@ -497,8 +497,8 @@ private[graft] object StreamQueries2 {
       pinIdTerciles(docs, "doc_id", in)
       val stream = s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = StreamOps.toBronzeDeduped(stream, "doc_id", "text", "ts",
-        out, idx, ck)
+      val q = StreamOps.foreachEpoch(stream, ck)((b, _) =>
+        StreamOps.bronzeDedupedBatch(b, "doc_id", "text", "ts", out, idx))
       q.processAllAvailable(); q.stop()
       s.read.parquet(out)
         .select(col("doc_id"),
@@ -509,7 +509,7 @@ private[graft] object StreamQueries2 {
     }),
 
     // E10 — streaming SemDeDup ingest through the REAL
-    // toSemanticDeduped sink: the quantizer is FROZEN on the full
+    // semanticDedupBatch sink: the quantizer is FROZEN on the full
     // corpus (the bootstrap contract), ascending-vec_id micro-batches
     // are judged against the persisted survivor index, and the oracle
     // replays the exact 3-stage survivor chain — epoch-0 pairwise
@@ -529,8 +529,8 @@ private[graft] object StreamQueries2 {
       pinIdTerciles(emb, "vec_id", in)
       val stream = s.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = StreamOps.toSemanticDeduped(stream, "vec_id", "embedding",
-        cents, 0.45, out, idx, ck)
+      val q = StreamOps.foreachEpoch(stream, ck)(
+        StreamOps.semanticDedupBatch(_, _, "vec_id", "embedding", cents, 0.45, out, idx))
       q.processAllAvailable(); q.stop()
       s.read.parquet(out)
         .select(col("vec_id"), col("batch").cast("long").as("epoch"))
@@ -561,15 +561,15 @@ private[graft] object StreamQueries2 {
       pinIdTerciles(emb, "vec_id", in)
       val stream = s.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = StreamOps.toSemanticDeduped(stream, "vec_id", "embedding",
-        hier, 0.45, out, idx, ck)
+      val q = StreamOps.foreachEpoch(stream, ck)(
+        StreamOps.semanticDedupBatch(_, _, "vec_id", "embedding", hier, 0.45, out, idx))
       q.processAllAvailable(); q.stop()
       s.read.parquet(out)
         .select(col("vec_id"), col("batch").cast("long").as("epoch"))
         .orderBy("vec_id")
     }),
 
-    // E13 — streaming CLEANED ingest through the REAL toCleanIngest
+    // E13 — streaming CLEANED ingest through the REAL cleanIngestBatch
     // sink: per batch boilerplate-line strip → Gopher quality +
     // repetition gates over the CLEANED text → cross-batch exact dedup
     // on the cleaned content (NO within-batch dedup — same-batch
@@ -584,7 +584,8 @@ private[graft] object StreamQueries2 {
       pinIdTerciles(docs, "doc_id", in)
       val stream = s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = StreamOps.toCleanIngest(stream, "doc_id", "text", out, idx, ck)
+      val q = StreamOps.foreachEpoch(stream, ck)(
+        StreamOps.cleanIngestBatch(_, _, "doc_id", "text", out, idx))
       q.processAllAvailable(); q.stop()
       s.read.parquet(out)
         .select(col("doc_id"), col("batch").cast("long").as("epoch"),

@@ -27,11 +27,9 @@ import org.apache.spark.sql.functions._
 object Bookmark {
 
   /** Current high-watermark, or None before the first [[advance]]. */
-  def read(spark: SparkSession, path: String): Option[Timestamp] = {
-    val dir = new java.io.File(path)
-    if (!dir.exists()) None
+  def read(spark: SparkSession, path: String): Option[Timestamp] =
+    if (!HadoopFs.exists(spark, path)) None
     else spark.read.parquet(path).collect().headOption.map(_.getTimestamp(0))
-  }
 
   /** Rows STRICTLY newer than the bookmark (everything on None). The
     * predicate is a plain pushable filter — partition pruning and

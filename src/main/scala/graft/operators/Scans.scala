@@ -46,7 +46,7 @@ object Scans {
   /** [[spread]] hardened against predicate pushdown: the spread frame
     * is rebuilt from its RDD, so the optimizer cannot move downstream
     * filters back below the inserted exchange. Measured necessity
-    * (e13's foreachBatch): the Gopher gate predicate was pushed through
+    * (e13's micro-batch sink): the Gopher gate predicate was pushed through
     * the `repartition`, dragging the whole gate — with the upstream
     * clean expression re-inlined once per flag reference — into the
     * single scan task the exchange existed to relieve. The RDD boundary

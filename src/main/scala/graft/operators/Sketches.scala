@@ -40,7 +40,7 @@ object Sketches {
 
   /** Collapse a sketch table holding multiple physical rows per key
     * (e.g. appended per micro-batch by
-    * [[graft.streaming.StreamOps.toSketchState]]) back to one row per
+    * [[graft.streaming.StreamOps.sketchStateBatch]]) back to one row per
     * key. Unions are lossless, so compaction never changes any rollup's
     * answer — it only bounds the state's row count. Output schema
     * matches [[sketchTable]]. */
@@ -123,7 +123,7 @@ object Sketches {
     * Unlike HLL/Theta union, the merge is NOT idempotent: the same
     * physical sketch row must enter a rollup exactly once, so streaming
     * state lands epoch-keyed-overwrite
-    * ([[graft.streaming.StreamOps.toFrequencyState]]), never blind
+    * ([[graft.streaming.StreamOps.frequencyStateBatch]]), never blind
     * append. */
   def cmRollup(
       sketches: DataFrame, keys: Seq[Column],

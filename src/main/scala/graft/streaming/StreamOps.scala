@@ -2,13 +2,19 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import graft.etl.HadoopFs
 import java.sql.Timestamp
 
 /** Structured Streaming operators: the streaming mirror of the batch
   * operators in [[graft.operators.Relational]]. Each works on any
   * streaming DataFrame (`readStream` source, kafka, MemoryStream in
   * tests) and carries a watermark so state is bounded at scale.
+  *
+  * The persisted-state sinks are plain `(batch, epochId, …) => Unit`
+  * functions named `*Batch`; [[foreachEpoch]] runs any of them as a
+  * checkpointed streaming query, and tests and driver queries call them
+  * directly to replay an epoch.
   */
 object StreamOps extends StreamOpsStateful {
 
@@ -132,43 +138,64 @@ object StreamOps extends StreamOpsStateful {
   def enrich(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
     stream.join(broadcast(dim), Seq(key), "left")
 
+  /** The one streaming sink: start `stream` with its checkpoint at
+    * `checkpoint` and hand every micro-batch, with its epoch id, to
+    * `batch` — one of the `*Batch` functions of this object, e.g.
+    * `foreachEpoch(events, ck)(aggStateBatch(_, _, keys, vals, statePath))`.
+    *
+    * Exactly-once is the Structured Streaming recipe (Armbrust et al.,
+    * SIGMOD 2018): after a crash the checkpoint replays an uncommitted
+    * epoch with the same content, and each `*Batch` tolerates the
+    * replay — the epoch-keyed sinks rewrite their own partition through
+    * [[writeEpoch]]; the append sinks ([[bronzeBatch]],
+    * [[bronzeDedupedBatch]], [[sketchStateBatch]]) re-append, which
+    * their readers tolerate; [[snapshotBatch]] writes one more version
+    * holding the same rows. Those four take no epoch id, so they run as
+    * `foreachEpoch(s, ck)((b, _) => bronzeBatch(b, ts, out))`. Returns
+    * the started query. */
+  def foreachEpoch(stream: DataFrame, checkpoint: String)(
+      batch: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(batch)
+      .start()
+
+  /** The replay rule of every epoch-keyed sink: write `df` to
+    * `root/batch=<epochId>` in OVERWRITE mode, so a replayed epoch
+    * rewrites its own partition instead of appending a second copy.
+    * Readers of `root` see `batch` as a partition column. */
+  def writeEpoch(df: DataFrame, root: String, epochId: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$root/batch=$epochId")
+
   /** Streaming → Bronze ingest: write each micro-batch Hive-partitioned
     * by `ingestion_date` derived from event time — the streaming mouth
     * of the [[graft.etl.Medallion]] layer (downstream incremental
     * Silver/Gold runs pick partitions up via `.done` markers exactly as
     * with batch ingest).
     *
-    * `foreachBatch` rather than a plain file sink so the partition
+    * A micro-batch sink rather than a plain file sink so the partition
     * column is derived per batch and the write path stays the shared
     * [[graft.etl.Medallion.writePartitioned]]. Exactly-once comes from
     * the checkpoint + append-only layout; re-processed batches re-append,
     * so downstream Silver dedups on the record key (A7) as the
-    * reference's pipeline does. Returns the started query. */
-  def toBronze(
-      events: DataFrame,
-      ts: String,
-      outRoot: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // Hash-cluster on the date before the partitioned write (guide
-        // §6 write distribution): a maxFilesPerTrigger=1 batch is ONE
-        // split, so the un-clustered write emitted all ~|dates| files
-        // serially on one task (profiled: 0.6-1.0 s single-task write
-        // jobs per batch; warm e6 3.8→2.5 s with this). Each date lands
-        // in exactly one task — one file per date, dates in parallel;
-        // the explicit count keeps AQE from coalescing the small-byte
-        // exchange back to one task.
-        val dated = batch.withColumn(graft.etl.Medallion.PartitionCol,
-          date_format(col(ts), "yyyy-MM-dd"))
-        graft.etl.Medallion.writePartitioned(
-          dated.repartition(
-            batch.sparkSession.sparkContext.defaultParallelism,
-            col(graft.etl.Medallion.PartitionCol)),
-          outRoot)
-      }
-      .start()
+    * reference's pipeline does. */
+  def bronzeBatch(batch: DataFrame, ts: String, outRoot: String): Unit = {
+    // Hash-cluster on the date before the partitioned write (guide
+    // §6 write distribution): a maxFilesPerTrigger=1 batch is ONE
+    // split, so the un-clustered write emitted all ~|dates| files
+    // serially on one task (profiled: 0.6-1.0 s single-task write
+    // jobs per batch; warm e6 3.8→2.5 s with this). Each date lands
+    // in exactly one task — one file per date, dates in parallel;
+    // the explicit count keeps AQE from coalescing the small-byte
+    // exchange back to one task.
+    val dated = batch.withColumn(graft.etl.Medallion.PartitionCol,
+      date_format(col(ts), "yyyy-MM-dd"))
+    graft.etl.Medallion.writePartitioned(
+      dated.repartition(
+        batch.sparkSession.sparkContext.defaultParallelism,
+        col(graft.etl.Medallion.PartitionCol)),
+      outRoot)
+  }
 
   /** Watermarked stream–stream inner join: match events from two
     * streams on a key within a bounded event-time interval (e.g. each
@@ -210,44 +237,34 @@ object StreamOps extends StreamOpsStateful {
     * 32-byte digests; (3) append survivors Hive-partitioned under
     * `outRoot`; (4) append survivors' hashes to the index. A batch
     * replayed after a crash between (3) and (4) re-appends its rows —
-    * same at-least-once contract as [[toBronze]]; downstream Silver
+    * same at-least-once contract as [[bronzeBatch]]; downstream Silver
     * key-dedup (A7) remains the exactly-once backstop. */
-  def toBronzeDeduped(
-      docs: DataFrame,
+  def bronzeDedupedBatch(
+      batch: DataFrame,
       id: String,
       text: String,
       ts: String,
       outRoot: String,
-      indexPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import graft.dedup.Dedup
-        val spark = batch.sparkSession
-        val inBatch = Dedup.exactDedup(batch, col(id), col(text))
-        // existence via the Hadoop filesystem of the path's own scheme —
-        // java.nio would answer false forever on hdfs:// or s3a:// and
-        // silently disable the cross-batch dedup this sink exists for
-        val hPath = new org.apache.hadoop.fs.Path(indexPath)
-        val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-        val novel =
-          if (fs.exists(hPath))
-            Dedup.exactDedupAgainst(inBatch, col(text), spark.read.parquet(indexPath))
-          else inBatch
-        // one batch, two actions — cache survivors so the text column is
-        // hashed once, not once per write
-        novel.persist()
-        try {
-          graft.etl.Medallion.writePartitioned(
-            novel.withColumn(graft.etl.Medallion.PartitionCol,
-              date_format(col(ts), "yyyy-MM-dd")),
-            outRoot)
-          Dedup.contentHashIndex(novel, col(text))
-            .write.mode("append").parquet(indexPath)
-        } finally novel.unpersist()
-      }
-      .start()
+      indexPath: String): Unit = {
+    import graft.dedup.Dedup
+    val spark = batch.sparkSession
+    val inBatch = Dedup.exactDedup(batch, col(id), col(text))
+    val novel =
+      if (HadoopFs.exists(spark, indexPath))
+        Dedup.exactDedupAgainst(inBatch, col(text), spark.read.parquet(indexPath))
+      else inBatch
+    // one batch, two actions — cache survivors so the text column is
+    // hashed once, not once per write
+    novel.persist()
+    try {
+      graft.etl.Medallion.writePartitioned(
+        novel.withColumn(graft.etl.Medallion.PartitionCol,
+          date_format(col(ts), "yyyy-MM-dd")),
+        outRoot)
+      Dedup.contentHashIndex(novel, col(text))
+        .write.mode("append").parquet(indexPath)
+    } finally novel.unpersist()
+  }
 
   /** Streaming exact dedup: drop records whose key was already seen,
     * with state bounded by the watermark — the streaming mirror of
@@ -264,25 +281,6 @@ object StreamOps extends StreamOpsStateful {
     events.withWatermark(ts, watermark)
       .dropDuplicatesWithinWatermark(keys.toSeq)
 
-  /** Streaming maintenance of a mergeable HLL sketch TABLE (the C8c
-    * Gold state, fed incrementally): each micro-batch aggregates its
-    * rows into per-(keys) sketches and APPENDS them to `statePath`.
-    * Append-only is the point — no read-modify-write of the state per
-    * batch: HLL unions are lossless and associative, so any number of
-    * physical rows per bucket roll up to exactly the sketch a full
-    * rescan would produce ([[graft.operators.Sketches.unionEstimate]]
-    * unions at read; [[graft.operators.Sketches.compactTable]] collapses
-    * rows periodically — the same append-then-compact lifecycle as the
-    * Bronze layer itself).
-    *
-    * `keys` reference batch columns — include the time bucket (e.g. a
-    * `date_format(ts)` column added upstream) so late data only ever
-    * appends to its own bucket. A replayed batch appends duplicate
-    * sketch rows, which inflate estimates of RE-SKETCHED rows only if
-    * the same underlying rows also re-appended upstream — distinct
-    * counting is idempotent under re-unioning the same values (the
-    * at-least-once story here is strictly better than for additive
-    * counters). */
   /** Streaming CDC apply: maintain a keyed SNAPSHOT table from a
     * change stream ([[graft.etl.Upsert]] per micro-batch). Each batch
     * merges into the latest snapshot version and writes a NEW
@@ -295,28 +293,12 @@ object StreamOps extends StreamOpsStateful {
     * updates again — upsert is idempotent per (key, version), so the
     * extra snapshot version holds the same ROWS (file layout may
     * differ), not wrong data. */
-  def toSnapshot(
-      updates: DataFrame,
-      keyCols: Seq[String],
-      version: String,
-      outRoot: String,
-      checkpoint: String,
-      tombstone: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        snapshotBatch(batch.toDF(), keyCols, version, outRoot, tombstone)
-      }
-      .start()
-
-  /** One micro-batch of [[toSnapshot]], exposed for replay tests and
-    * driver batch-equivalence queries. */
-  private[graft] def snapshotBatch(
+  def snapshotBatch(
       batch: DataFrame,
       keyCols: Seq[String],
       version: String,
       outRoot: String,
-      tombstone: Option[String]): Unit = {
+      tombstone: Option[String] = None): Unit = {
     val spark = batch.sparkSession
     val latest = latestSnapshotVersion(spark, outRoot)
     val cur = latest
@@ -328,7 +310,7 @@ object StreamOps extends StreamOpsStateful {
 
   private def latestSnapshotVersion(spark: SparkSession, outRoot: String): Option[Long] = {
     val root = new org.apache.hadoop.fs.Path(outRoot)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = HadoopFs.of(spark, root)
     if (!fs.exists(root)) None
     else fs.listStatus(root).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
@@ -336,7 +318,7 @@ object StreamOps extends StreamOpsStateful {
       .maxOption
   }
 
-  /** The current snapshot of a [[toSnapshot]] dir (`latest = max N` —
+  /** The current snapshot of a [[snapshotBatch]] dir (`latest = max N` —
     * the trivially atomic pointer the versioned layout buys). */
   def latestSnapshot(spark: SparkSession, outRoot: String): DataFrame =
     latestSnapshotVersion(spark, outRoot) match {
@@ -371,50 +353,7 @@ object StreamOps extends StreamOpsStateful {
     * the source replays the same batch content, which Structured
     * Streaming's checkpoint contract guarantees for replayable
     * sources. */
-  def toSemanticDeduped(
-      docs: DataFrame,
-      id: String,
-      vec: String,
-      centroids: DataFrame,
-      threshold: Double,
-      outRoot: String,
-      indexPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        semanticDedupBatch(batch.toDF(), epochId, id, vec, centroids, threshold,
-          outRoot, indexPath)
-      }
-      .start()
-
-  /** [[toSemanticDeduped]] through the two-level quantizer (D23b):
-    * identical sink semantics, but batch assignment and index rows go
-    * through [[graft.similarity.Ann.ivfAssignHier]] — the 10^10-vector
-    * indexing wall applies to a streaming semantic index exactly as it
-    * does to batch SemDeDup. The hier quantizer is FROZEN like the
-    * flat one: every batch and the index must shard identically. */
-  def toSemanticDeduped(
-      docs: DataFrame,
-      id: String,
-      vec: String,
-      hier: graft.similarity.Ann.HierCentroids,
-      threshold: Double,
-      outRoot: String,
-      indexPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        semanticDedupBatch(batch.toDF(), epochId, id, vec, hier, threshold,
-          outRoot, indexPath)
-      }
-      .start()
-
-  /** One micro-batch of [[toSemanticDeduped]] (flat quantizer), exposed
-    * for replay tests: running the same (batch, epochId) twice must
-    * leave identical output and index state. */
-  private[graft] def semanticDedupBatch(
+  def semanticDedupBatch(
       batch: DataFrame,
       epochId: Long,
       id: String,
@@ -430,8 +369,13 @@ object StreamOps extends StreamOpsStateful {
       indexOf = kept => Ann.semanticIndex(kept, id, vec, centroids))
   }
 
-  /** One micro-batch of the hierarchical-quantizer sink. */
-  private[graft] def semanticDedupBatch(
+  /** [[semanticDedupBatch]] through the two-level quantizer (D23b):
+    * identical sink semantics, but batch assignment and index rows go
+    * through [[graft.similarity.Ann.ivfAssignHier]] — the 10^10-vector
+    * indexing wall applies to a streaming semantic index exactly as it
+    * does to batch SemDeDup. The hier quantizer is FROZEN like the
+    * flat one: every batch and the index must shard identically. */
+  def semanticDedupBatch(
       batch: DataFrame,
       epochId: Long,
       id: String,
@@ -465,8 +409,8 @@ object StreamOps extends StreamOpsStateful {
     val kept = batch.join(keptIds, batch(id) === col("vid"), "left_semi")
     kept.persist()
     try {
-      kept.write.mode("overwrite").parquet(s"$outRoot/batch=$epochId")
-      indexOf(kept).write.mode("overwrite").parquet(s"$indexPath/batch=$epochId")
+      writeEpoch(kept, outRoot, epochId)
+      writeEpoch(indexOf(kept), indexPath, epochId)
     } finally kept.unpersist()
   }
 
@@ -484,30 +428,14 @@ object StreamOps extends StreamOpsStateful {
     * (overwrite per `batch=<epochId>`, index read excludes the
     * replaying epoch). Output columns: the input columns with `text`
     * REPLACED by the cleaned text. */
-  def toCleanIngest(
-      docs: DataFrame,
-      id: String,
-      text: String,
-      outRoot: String,
-      indexPath: String,
-      checkpoint: String,
-      minWords: Int = 50): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        cleanIngestBatch(batch.toDF(), epochId, id, text, outRoot, indexPath, minWords)
-      }
-      .start()
-
-  /** One micro-batch of [[toCleanIngest]], exposed for replay tests. */
-  private[graft] def cleanIngestBatch(
+  def cleanIngestBatch(
       batch: DataFrame,
       epochId: Long,
       id: String,
       text: String,
       outRoot: String,
       indexPath: String,
-      minWords: Int): Unit = {
+      minWords: Int = 50): Unit = {
     import graft.dedup.Dedup
     import graft.text.{Boilerplate, GopherFilter, GopherRepetition}
     // A maxFilesPerTrigger=1 micro-batch is ONE scan split, so the
@@ -530,9 +458,8 @@ object StreamOps extends StreamOpsStateful {
     val kept = Dedup.exactDedupAgainst(gated, col(text), index)
     kept.persist()
     try {
-      kept.write.mode("overwrite").parquet(s"$outRoot/batch=$epochId")
-      Dedup.contentHashIndex(kept, col(text))
-        .write.mode("overwrite").parquet(s"$indexPath/batch=$epochId")
+      writeEpoch(kept, outRoot, epochId)
+      writeEpoch(Dedup.contentHashIndex(kept, col(text)), indexPath, epochId)
     } finally kept.unpersist()
   }
 
@@ -547,16 +474,13 @@ object StreamOps extends StreamOpsStateful {
     * a TYPED zero-row frame, keeping the first batch on the exact code
     * path every other batch runs. */
   private def priorIndex(spark: SparkSession, indexPath: String, epochId: Long,
-                         emptyIndex: () => DataFrame): DataFrame = {
-    val hPath = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(hPath)) {
+                         emptyIndex: () => DataFrame): DataFrame =
+    if (HadoopFs.exists(spark, indexPath)) {
       val raw = spark.read.parquet(indexPath)
       if (raw.columns.contains("batch"))
         raw.filter(col("batch") =!= lit(epochId)).drop("batch")
       else raw
     } else emptyIndex()
-  }
 
   /** Streaming PARAGRAPH-dedup ingest: per micro-batch, judge arriving
     * documents' paragraphs against the persisted fingerprint index with
@@ -568,28 +492,11 @@ object StreamOps extends StreamOpsStateful {
     * forever, far beyond any watermark horizon, while novel paragraphs
     * of partially-duplicated documents still land.
     *
-    * Replay safety: identical contract to [[toSemanticDeduped]] — both
+    * Replay safety: identical contract to [[semanticDedupBatch]] — both
     * outputs under `batch=<epochId>` in OVERWRITE mode, index read
     * excludes the replaying epoch's own rows. Index state lives on
     * disk; executor loss costs nothing. */
-  def toParagraphDeduped(
-      docs: DataFrame,
-      id: String,
-      text: String,
-      outRoot: String,
-      indexPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        paragraphDedupBatch(batch.toDF(), epochId, id, text, outRoot, indexPath)
-      }
-      .start()
-
-  /** One micro-batch of [[toParagraphDeduped]], exposed for replay
-    * tests: running the same (batch, epochId) twice must leave
-    * identical output and index state. */
-  private[graft] def paragraphDedupBatch(
+  def paragraphDedupBatch(
       batch: DataFrame,
       epochId: Long,
       id: String,
@@ -602,17 +509,17 @@ object StreamOps extends StreamOpsStateful {
     val result = Dedup.paragraphDedupAgainst(batch, col(id), col(text), index)
     result.persist()
     try {
-      result.write.mode("overwrite").parquet(s"$outRoot/batch=$epochId")
+      writeEpoch(result, outRoot, epochId)
       // the kept paragraphs ARE clean_text's blocks: re-splitting
       // recovers them exactly (paragraph boundaries were consumed by
       // the original split, so the "\n\n" joins are unambiguous)
-      Dedup.paragraphIndex(result.filter(col("n_kept") > 0), col("clean_text"))
-        .write.mode("overwrite").parquet(s"$indexPath/batch=$epochId")
+      writeEpoch(Dedup.paragraphIndex(result.filter(col("n_kept") > 0), col("clean_text")),
+        indexPath, epochId)
     } finally result.unpersist()
   }
 
-  /** Streaming corpus profiling: each micro-batch APPENDS its mergeable
-    * [[graft.text.CorpusProfile.sketchCards]] rows to `cardsPath` —
+  /** Streaming corpus profiling: each micro-batch lands its mergeable
+    * [[graft.text.CorpusProfile.sketchCards]] rows under `cardsPath` —
     * the E8 append-only discipline (no read-modify-write on object
     * stores) applied to the corpus card. The global card at any moment
     * is `CorpusProfile.rollupCards(spark.read.parquet(cardsPath))`:
@@ -622,38 +529,20 @@ object StreamOps extends StreamOpsStateful {
     * matters; rollups are union-lossless either way.
     *
     * Replay safety: card rows are ADDITIVE counters (unlike
-    * [[toSketchState]]'s union-tolerant HLLs), so a plain append would
+    * [[sketchStateBatch]]'s union-tolerant HLLs), so a plain append would
     * double-count on an at-least-once replay. Each batch's cards land
     * under a `batch=<epochId>` subdirectory in OVERWRITE mode instead
     * — a replayed epoch rewrites its own rows, never inflates the
     * rollup. */
-  def toCorpusCards(
-      docs: DataFrame,
-      text: String,
-      source: String,
-      slice: String,
-      cardsPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        corpusCardsBatch(batch.toDF(), epochId, text, source, slice, cardsPath)
-      }
-      .start()
-
-  /** One micro-batch of [[toCorpusCards]], exposed for replay tests:
-    * running the same (batch, epochId) twice must not inflate the
-    * rolled-up counters. */
-  private[graft] def corpusCardsBatch(
+  def corpusCardsBatch(
       batch: DataFrame,
       epochId: Long,
       text: String,
       source: String,
       slice: String,
       cardsPath: String): Unit =
-    graft.text.CorpusProfile
-      .sketchCards(batch, col(text), col(source), col(slice))
-      .write.mode("overwrite").parquet(s"$cardsPath/batch=$epochId")
+    writeEpoch(graft.text.CorpusProfile.sketchCards(batch, col(text), col(source), col(slice)),
+      cardsPath, epochId)
 
   /** Streaming A/B experiment monitor ([[graft.analytics.Experiment]]'s
     * live form): each micro-batch lands its per-(entity, variant)
@@ -667,37 +556,21 @@ object StreamOps extends StreamOpsStateful {
     * event-volume-sized; conv/val partials are max/sum-mergeable, and
     * the epoch-keyed overwrite keeps at-least-once replay a no-op (the
     * E14 additive-counter contract). */
-  def toExperimentState(
-      events: DataFrame,
-      entity: String,
-      variant: org.apache.spark.sql.Column,
-      converted: org.apache.spark.sql.Column,
-      value: org.apache.spark.sql.Column,
-      statePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        experimentStateBatch(batch.toDF(), epochId, entity, variant, converted, value, statePath)
-      }
-      .start()
-
-  /** One micro-batch of [[toExperimentState]], exposed for replay tests. */
-  private[graft] def experimentStateBatch(
+  def experimentStateBatch(
       batch: DataFrame,
       epochId: Long,
       entity: String,
-      variant: org.apache.spark.sql.Column,
-      converted: org.apache.spark.sql.Column,
-      value: org.apache.spark.sql.Column,
+      variant: Column,
+      converted: Column,
+      value: Column,
       statePath: String): Unit =
-    batch
+    writeEpoch(batch
       .groupBy(col(entity).as("entity"), variant.as("variant"))
       .agg(max(converted.cast("int")).as("conv"),
-        sum(when(converted, value).otherwise(lit(0.0))).as("val"))
-      .write.mode("overwrite").parquet(s"$statePath/batch=$epochId")
+        sum(when(converted, value).otherwise(lit(0.0))).as("val")),
+      statePath, epochId)
 
-  /** Live readout over [[toExperimentState]] state: merge the per-epoch
+  /** Live readout over [[experimentStateBatch]] state: merge the per-epoch
     * entity partials (max/sum), then run the standard two-variant
     * algebra. The merged state feeds [[graft.analytics.Experiment.abTest]]
     * directly — its entity-grain collapse is idempotent over partials. */
@@ -720,34 +593,18 @@ object StreamOps extends StreamOpsStateful {
     * (stronger than the E14 overwrite contract — even a blind append
     * would only add duplicates the readout's key-dedup removes). State
     * is epochs × k rows; the stream is never re-scanned. */
-  def toWeightedSample(
-      events: DataFrame,
-      key: String,
-      weight: org.apache.spark.sql.Column,
-      k: Int,
-      salt: String,
-      statePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        weightedSampleBatch(batch.toDF(), epochId, key, weight, k, salt, statePath)
-      }
-      .start()
-
-  /** One micro-batch of [[toWeightedSample]], exposed for replay tests. */
-  private[graft] def weightedSampleBatch(
+  def weightedSampleBatch(
       batch: DataFrame,
       epochId: Long,
       key: String,
-      weight: org.apache.spark.sql.Column,
+      weight: Column,
       k: Int,
       salt: String,
       statePath: String): Unit =
-    graft.operators.Sampling.weightedSampleK(batch, col(key), weight, k, salt)
-      .write.mode("overwrite").parquet(s"$statePath/batch=$epochId")
+    writeEpoch(graft.operators.Sampling.weightedSampleK(batch, col(key), weight, k, salt),
+      statePath, epochId)
 
-  /** Live sample over [[toWeightedSample]] state: re-race the union of
+  /** Live sample over [[weightedSampleBatch]] state: re-race the union of
     * per-epoch candidates (epochs × k rows — metadata-scale). `weight`
     * must name the same column the sink raced on, `k`/`salt` the same
     * parameters; keys seen in several epochs dedup to one runner. */
@@ -767,122 +624,91 @@ object StreamOps extends StreamOpsStateful {
     * in OVERWRITE mode, and the live aggregate is
     * `AggState.mergeRows(read(statePath))` — key-cardinality work at
     * read time, the raw stream never re-scanned. Unlike
-    * [[toSketchState]] (HLL union is replay-tolerant by idempotence),
+    * [[sketchStateBatch]] (HLL union is replay-tolerant by idempotence),
     * additive counters DO inflate under at-least-once replay, so the
     * epoch-keyed overwrite is load-bearing here: a replayed epoch
     * rewrites its own partition byte-for-byte instead of appending a
     * second copy (the E11 corpus-cards contract). */
-  def toAggState(
-      events: DataFrame,
-      keys: Seq[String],
-      valueCols: Seq[String],
-      statePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        aggStateBatch(batch.toDF(), epochId, keys, valueCols, statePath)
-      }
-      .start()
-
-  /** Streaming drift-state maintenance: each micro-batch's (slice,
-    * bin) quality-histogram cells land under `batch=<epochId>` in
-    * overwrite mode (additive counters — the same replay contract as
-    * [[toAggState]]); the live drift report is
-    * `CorpusStats.qualityDriftFromCells(read(cellsPath))`, computed
-    * from key-cardinality state without re-scanning any batch. The
-    * streaming half of D52: continuous ingestion with a PSI alarm per
-    * source. */
-  def toDriftCells(
-      docs: DataFrame,
-      slice: String,
-      value: org.apache.spark.sql.Column,
-      cellsPath: String,
-      checkpoint: String,
-      nBins: Int = 10, lo: Double = 0.0, hi: Double = 1.0): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        driftCellsBatch(batch.toDF(), epochId, slice, value, cellsPath, nBins, lo, hi)
-      }
-      .start()
-
-  /** One micro-batch of [[toDriftCells]], exposed for replay tests. */
-  private[graft] def driftCellsBatch(
-      batch: DataFrame,
-      epochId: Long,
-      slice: String,
-      value: org.apache.spark.sql.Column,
-      cellsPath: String,
-      nBins: Int, lo: Double, hi: Double): Unit =
-    graft.text.CorpusStats.driftCells(batch, col(slice), value, nBins, lo, hi)
-      .write.mode("overwrite").parquet(s"$cellsPath/batch=$epochId")
-
-  /** One micro-batch of [[toAggState]], exposed for replay tests. */
-  private[graft] def aggStateBatch(
+  def aggStateBatch(
       batch: DataFrame,
       epochId: Long,
       keys: Seq[String],
       valueCols: Seq[String],
       statePath: String): Unit =
-    graft.operators.AggState.state(batch, keys, valueCols)
-      .write.mode("overwrite").parquet(s"$statePath/batch=$epochId")
+    writeEpoch(graft.operators.AggState.state(batch, keys, valueCols), statePath, epochId)
 
-  def toSketchState(
-      events: DataFrame,
+  /** Streaming drift-state maintenance: each micro-batch's (slice,
+    * bin) quality-histogram cells land under `batch=<epochId>` in
+    * overwrite mode (additive counters — the same replay contract as
+    * [[aggStateBatch]]); the live drift report is
+    * `CorpusStats.qualityDriftFromCells(read(cellsPath))`, computed
+    * from key-cardinality state without re-scanning any batch. The
+    * streaming half of D52: continuous ingestion with a PSI alarm per
+    * source. */
+  def driftCellsBatch(
+      batch: DataFrame,
+      epochId: Long,
+      slice: String,
+      value: Column,
+      cellsPath: String,
+      nBins: Int = 10, lo: Double = 0.0, hi: Double = 1.0): Unit =
+    writeEpoch(graft.text.CorpusStats.driftCells(batch, col(slice), value, nBins, lo, hi),
+      cellsPath, epochId)
+
+  /** Streaming maintenance of a mergeable HLL sketch TABLE (the C8c
+    * Gold state, fed incrementally): each micro-batch aggregates its
+    * rows into per-(keys) sketches and APPENDS them to `statePath`.
+    * Append-only is the point — no read-modify-write of the state per
+    * batch: HLL unions are lossless and associative, so any number of
+    * physical rows per bucket roll up to exactly the sketch a full
+    * rescan would produce ([[graft.operators.Sketches.unionEstimate]]
+    * unions at read; [[graft.operators.Sketches.compactTable]] collapses
+    * rows periodically — the same append-then-compact lifecycle as the
+    * Bronze layer itself).
+    *
+    * `keys` reference batch columns — include the time bucket (e.g. a
+    * `date_format(ts)` column added upstream) so late data only ever
+    * appends to its own bucket. A replayed batch appends duplicate
+    * sketch rows, which inflate estimates of RE-SKETCHED rows only if
+    * the same underlying rows also re-appended upstream — distinct
+    * counting is idempotent under re-unioning the same values (the
+    * at-least-once story here is strictly better than for additive
+    * counters). */
+  def sketchStateBatch(
+      batch: DataFrame,
       keys: Seq[String],
       value: String,
       statePath: String,
-      checkpoint: String,
-      lgK: Int = graft.operators.Sketches.DefaultLgK): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.Sketches.sketchTable(batch, keys.map(col), col(value), lgK)
-          .write.mode("append").parquet(statePath)
-      }
-      .start()
+      lgK: Int = graft.operators.Sketches.DefaultLgK): Unit =
+    graft.operators.Sketches.sketchTable(batch, keys.map(col), col(value), lgK)
+      .write.mode("append").parquet(statePath)
 
   /** Streaming COUNT-MIN frequency state (E17): each micro-batch lands
     * one `cmsketch` row per key group; any later point-frequency probe
     * rolls the stored state up with [[graft.operators.Sketches.cmRollup]]
     * and probes the merged bytes — raw traffic is never rescanned.
     *
-    * Unlike [[toSketchState]] (HLL union is idempotent, so a replayed
+    * Unlike [[sketchStateBatch]] (HLL union is idempotent, so a replayed
     * batch that appends twice cannot change any estimate), count-min
     * merge ADDS counters — a blind append would double-count on
     * replay. Batches therefore land under `batch=<epochId>` in
-    * OVERWRITE mode (the [[toSemanticDeduped]] epoch-keyed replay
+    * OVERWRITE mode (the [[semanticDedupBatch]] epoch-keyed replay
     * contract): a replayed epoch rewrites identical files and every
     * rollup over the log stays exact. Compact on the Bronze lifecycle
     * by materializing [[graft.operators.Sketches.cmRollup]] output to a
     * fresh path — each physical row enters that rollup exactly once. */
-  def toFrequencyState(
-      events: DataFrame,
-      keys: Seq[String],
-      value: String,
-      statePath: String,
-      checkpoint: String,
-      depth: Int = graft.expressions.CountMin.DefaultDepth,
-      width: Int = graft.expressions.CountMin.DefaultWidth,
-      seed: Int = graft.expressions.CountMin.DefaultSeed): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        frequencyStateBatch(batch.toDF(), epochId, keys, value, statePath, depth, width, seed)
-      }
-      .start()
-
-  /** One micro-batch of [[toFrequencyState]], exposed for replay tests. */
-  private[graft] def frequencyStateBatch(
+  def frequencyStateBatch(
       batch: DataFrame,
       epochId: Long,
       keys: Seq[String],
       value: String,
       statePath: String,
-      depth: Int, width: Int, seed: Int): Unit =
-    graft.operators.Sketches.cmSketchTable(batch, keys.map(col), col(value), depth, width, seed)
-      .write.mode("overwrite").parquet(s"$statePath/batch=$epochId")
+      depth: Int = graft.expressions.CountMin.DefaultDepth,
+      width: Int = graft.expressions.CountMin.DefaultWidth,
+      seed: Int = graft.expressions.CountMin.DefaultSeed): Unit =
+    writeEpoch(
+      graft.operators.Sketches.cmSketchTable(batch, keys.map(col), col(value), depth, width, seed),
+      statePath, epochId)
 
   /** Streaming content-diff ingest (the streaming half of
     * [[graft.etl.SnapshotDiff]] A23): classify each arriving document
@@ -902,30 +728,13 @@ object StreamOps extends StreamOpsStateful {
     * grows with change events, not with traffic. Reading the log is
     * the per-batch cost at 100 TB; compact it on the Bronze lifecycle
     * by materializing [[latestContentState]] to a fresh path
-    * (the append-then-compact discipline of [[toSketchState]]).
+    * (the append-then-compact discipline of [[sketchStateBatch]]).
     *
-    * Replay safety: the [[toSemanticDeduped]] contract — both outputs
+    * Replay safety: the [[semanticDedupBatch]] contract — both outputs
     * land under `batch=<epochId>` in OVERWRITE mode and the index read
     * excludes the current epoch, so a replayed batch is judged against
     * exactly the pre-batch state and rewrites identical files. */
-  def toContentDiff(
-      docs: DataFrame,
-      id: String,
-      contentCols: Seq[String],
-      outRoot: String,
-      indexPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        contentDiffBatch(batch.toDF(), epochId, id, contentCols, outRoot, indexPath)
-      }
-      .start()
-
-  /** One micro-batch of [[toContentDiff]], exposed for replay tests:
-    * running the same (batch, epochId) twice must leave identical
-    * change events and index state. */
-  private[graft] def contentDiffBatch(
+  def contentDiffBatch(
       batch: DataFrame,
       epochId: Long,
       id: String,
@@ -938,10 +747,8 @@ object StreamOps extends StreamOpsStateful {
     val cur = batch.select(col(id).as("key"),
         SnapshotDiff.digestOf(contentCols.map(batch(_))).as("digest"))
       .groupBy("key").agg(max("digest").as("digest"))
-    val hPath = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = hPath.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
     val prior =
-      if (fs.exists(hPath))
+      if (HadoopFs.exists(batch.sparkSession, indexPath))
         batch.sparkSession.read.parquet(indexPath)
           .filter(col("batch") =!= lit(epochId))
           .groupBy("key").agg(max_by(col("digest"), col("batch")).as("digest"))
@@ -955,13 +762,13 @@ object StreamOps extends StreamOpsStateful {
       .select("key", "change", "digest")
     classified.persist()
     try {
-      classified.write.mode("overwrite").parquet(s"$outRoot/batch=$epochId")
-      classified.filter(col("change") =!= lit("unchanged")).select("key", "digest")
-        .write.mode("overwrite").parquet(s"$indexPath/batch=$epochId")
+      writeEpoch(classified, outRoot, epochId)
+      writeEpoch(classified.filter(col("change") =!= lit("unchanged")).select("key", "digest"),
+        indexPath, epochId)
     } finally classified.unpersist()
   }
 
-  /** The current (key, digest) state of a [[toContentDiff]] index:
+  /** The current (key, digest) state of a [[contentDiffBatch]] index:
     * latest-batch-wins per key. Materialize this to a fresh path and
     * repoint the sink to compact the change log. */
   def latestContentState(spark: SparkSession, indexPath: String): DataFrame =
@@ -985,23 +792,7 @@ object StreamOps extends StreamOpsStateful {
     * E9/E16 contract, so a replayed epoch recomputes the identical
     * assignment and rewrites identical files. Current per-shard loads =
     * sum of deltas over the log ([[shardLoads]]). */
-  def toBalancedShards(
-      docs: DataFrame,
-      id: String,
-      cost: Column,
-      outRoot: String,
-      statePath: String,
-      checkpoint: String,
-      shards: Int): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        balancedShardBatch(batch.toDF(), epochId, id, cost, outRoot, statePath, shards)
-      }
-      .start()
-
-  /** One micro-batch of [[toBalancedShards]], exposed for replay tests. */
-  private[graft] def balancedShardBatch(
+  def balancedShardBatch(
       batch: DataFrame,
       epochId: Long,
       id: String,
@@ -1032,14 +823,12 @@ object StreamOps extends StreamOpsStateful {
       .drop("__pos", "__lr")
     assigned.persist()
     try {
-      assigned.drop("__c")
-        .write.mode("overwrite").parquet(s"$outRoot/batch=$epochId")
-      assigned.groupBy("shard").agg(sum("__c").as("tokens"))
-        .write.mode("overwrite").parquet(s"$statePath/batch=$epochId")
+      writeEpoch(assigned.drop("__c"), outRoot, epochId)
+      writeEpoch(assigned.groupBy("shard").agg(sum("__c").as("tokens")), statePath, epochId)
     } finally assigned.unpersist()
   }
 
-  /** Current per-shard token loads of a [[toBalancedShards]] state log. */
+  /** Current per-shard token loads of a [[balancedShardBatch]] state log. */
   def shardLoads(spark: SparkSession, statePath: String): DataFrame =
     spark.read.parquet(statePath)
       .groupBy("shard").agg(sum("tokens").as("tokens"))
@@ -1051,44 +840,24 @@ object StreamOps extends StreamOpsStateful {
     * (with `text` replaced by the cleaned text) under `keepRoot`, and
     * rejects (ORIGINAL text, plus a `reject_reasons` array naming
     * every failed gate) under `rejectRoot`. The reject stream is the
-    * operational half [[toCleanIngest]] drops silently: at corpus
+    * operational half [[cleanIngestBatch]] drops silently: at corpus
     * scale the drop-rate per gate IS the crawl-health dashboard, and
     * gate-tuning needs the rejected documents inspectable, not gone.
     *
     * Stateless across batches (no persisted index), so replay
     * idempotency is just the epoch-keyed overwrite: re-running an
     * epoch rewrites `batch=<epochId>` under both roots byte-identically. */
-  def toQualityRouted(
-      docs: DataFrame,
-      id: String,
-      text: String,
-      keepRoot: String,
-      rejectRoot: String,
-      checkpoint: String,
-      minLineWords: Int = 5,
-      minSentences: Int = 3,
-      badWords: Seq[String] = Nil,
-      minWords: Int = 50): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        qualityRoutedBatch(batch.toDF(), epochId, id, text, keepRoot, rejectRoot,
-          minLineWords, minSentences, badWords, minWords)
-      }
-      .start()
-
-  /** One micro-batch of [[toQualityRouted]], exposed for replay tests. */
-  private[graft] def qualityRoutedBatch(
+  def qualityRoutedBatch(
       batch: DataFrame,
       epochId: Long,
       id: String,
       text: String,
       keepRoot: String,
       rejectRoot: String,
-      minLineWords: Int,
-      minSentences: Int,
-      badWords: Seq[String],
-      minWords: Int): Unit = {
+      minLineWords: Int = 5,
+      minSentences: Int = 3,
+      badWords: Seq[String] = Nil,
+      minWords: Int = 50): Unit = {
     import graft.text.{C4Filter, GopherFilter}
     val judged = C4Filter.clean(batch, col(text), minLineWords, minSentences, badWords)
       .withColumn("__g", GopherFilter.flags(col("c4.clean_text"), minWords))
@@ -1107,14 +876,12 @@ object StreamOps extends StreamOpsStateful {
     val routed = judged.withColumn("__reasons", reasons)
     routed.persist()
     try {
-      routed.filter(col("flags.keep") && col("__g.keep"))
+      writeEpoch(routed.filter(col("flags.keep") && col("__g.keep"))
         .withColumn(text, col("c4.clean_text"))
-        .drop("c4", "flags", "__g", "__reasons")
-        .write.mode("overwrite").parquet(s"$keepRoot/batch=$epochId")
-      routed.filter(!(col("flags.keep") && col("__g.keep")))
+        .drop("c4", "flags", "__g", "__reasons"), keepRoot, epochId)
+      writeEpoch(routed.filter(!(col("flags.keep") && col("__g.keep")))
         .withColumn("reject_reasons", col("__reasons"))
-        .drop("c4", "flags", "__g", "__reasons")
-        .write.mode("overwrite").parquet(s"$rejectRoot/batch=$epochId")
+        .drop("c4", "flags", "__g", "__reasons"), rejectRoot, epochId)
     } finally routed.unpersist()
   }
 

@@ -3,8 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.etl.HadoopFs
 import java.sql.Timestamp
-import StreamOps.{ScoreEvent, ZState, ZAlert, TypedEvent, CepState, CepMatch, SilenceState, SilenceAlert}
+import StreamOps.{ScoreEvent, ZState, ZAlert, TypedEvent, CepState, CepMatch, SilenceState, SilenceAlert,
+  writeEpoch}
 
 /** The stateful-alerting / keyed-state half of [[StreamOps]], split
   * out along the SURVEY E-series boundary purely for file size (the
@@ -81,10 +83,11 @@ private[streaming] trait StreamOpsStateful {
   /** E22 — streaming point-in-time enrichment: each arriving fact is
     * joined to the SCD2 dimension version whose validity interval
     * contains the fact's event time (C30's `pointInTimeJoin`, run per
-    * micro-batch under `foreachBatch`). This is the streaming shape a
-    * native stream-stream join cannot express — interval containment
-    * is a non-equi condition, and the dimension is a SLOWLY-changing
-    * table, not a stream with a watermark; per-batch batch-API reuse
+    * micro-batch under [[StreamOps.foreachEpoch]]). This is the
+    * streaming shape a native stream-stream join cannot express —
+    * interval containment is a non-equi condition, and the dimension
+    * is a SLOWLY-changing table, not a stream with a watermark;
+    * per-batch batch-API reuse
     * is the canonical decomposition (the same C30 plan, candidates
     * bounded by the batch). Epoch-keyed overwrite under
     * `batch=<epochId>` makes replays byte-identical no-ops (the
@@ -92,23 +95,7 @@ private[streaming] trait StreamOpsStateful {
     * a dim updated mid-stream affects only later batches — the
     * at-ingest interpretation, matching how E9's CDC snapshots feed
     * this join. */
-  def toPitEnriched(
-      facts: DataFrame,
-      dim: DataFrame,
-      key: String,
-      factTs: String,
-      attrCols: Seq[String],
-      outRoot: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    facts.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        pitEnrichedBatch(batch.toDF(), epochId, dim, key, factTs, attrCols, outRoot)
-      }
-      .start()
-
-  /** One micro-batch of [[toPitEnriched]], exposed for replay tests. */
-  private[graft] def pitEnrichedBatch(
+  def pitEnrichedBatch(
       batch: DataFrame,
       epochId: Long,
       dim: DataFrame,
@@ -116,8 +103,8 @@ private[streaming] trait StreamOpsStateful {
       factTs: String,
       attrCols: Seq[String],
       outRoot: String): Unit =
-    graft.operators.Relational.pointInTimeJoin(batch, dim, key, factTs, attrCols)
-      .write.mode("overwrite").parquet(s"$outRoot/batch=$epochId")
+    writeEpoch(graft.operators.Relational.pointInTimeJoin(batch, dim, key, factTs, attrCols),
+      outRoot, epochId)
 
   /** E23 — streaming Bronze ingest with a LIVE per-file Bloom sidecar
     * (C40's index maintained at write time): each micro-batch lands
@@ -129,40 +116,21 @@ private[streaming] trait StreamOpsStateful {
     * already in memory, while indexing later re-reads every file (the
     * A27 "write compact beats compacting after" argument, applied to
     * indexes). Both roots overwrite per epoch → replay is a
-    * byte-identical no-op (the E14-E18 contract). */
-  def toBloomIndexedBronze(
-      docs: DataFrame,
-      column: String,
-      dataRoot: String,
-      indexRoot: String,
-      checkpoint: String,
-      expectedPerFile: Long = 1000000L,
-      fpp: Double = 0.01): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        bloomIndexedBatch(batch.toDF(), epochId, column, dataRoot, indexRoot,
-          expectedPerFile, fpp)
-      }
-      .start()
-
-  /** One micro-batch of [[toBloomIndexedBronze]], exposed for replay
-    * tests. The sidecar is built by re-reading the JUST-written epoch
-    * directory (file-bounded, page-cache-warm) so the `file` column
-    * holds the exact landed paths `input_file_name()` reports. */
-  private[graft] def bloomIndexedBatch(
+    * byte-identical no-op (the E14-E18 contract). The sidecar is built
+    * by re-reading the JUST-written epoch directory (file-bounded,
+    * page-cache-warm) so the `file` column holds the exact landed paths
+    * `input_file_name()` reports. */
+  def bloomIndexedBatch(
       batch: DataFrame,
       epochId: Long,
       column: String,
       dataRoot: String,
       indexRoot: String,
-      expectedPerFile: Long,
-      fpp: Double): Unit = {
-    val dataPath = s"$dataRoot/batch=$epochId"
-    batch.write.mode("overwrite").parquet(dataPath)
-    graft.sources.BloomIndex.build(batch.sparkSession, dataPath, column,
-        expectedPerFile, fpp)
-      .write.mode("overwrite").parquet(s"$indexRoot/batch=$epochId")
+      expectedPerFile: Long = 1000000L,
+      fpp: Double = 0.01): Unit = {
+    writeEpoch(batch, dataRoot, epochId)
+    writeEpoch(graft.sources.BloomIndex.build(batch.sparkSession, s"$dataRoot/batch=$epochId",
+        column, expectedPerFile, fpp), indexRoot, epochId)
   }
 
   /** Streaming heavy-hitter (frequent-items) state — E26, the streaming
@@ -176,34 +144,20 @@ private[streaming] trait StreamOpsStateful {
     * Like count-min (and unlike HLL union), top-k combine ADDS counts,
     * so a blind append would double-count a replayed batch. Batches
     * therefore land under `batch=<epochId>` in OVERWRITE mode (the
-    * [[toFrequencyState]] epoch-keyed replay contract): a replayed
-    * epoch rewrites identical files and every rollup over the log
-    * stays exact. Compact on the Bronze lifecycle by combining the log
-    * into one row per group at a fresh path. */
-  def toTopKState(
-      events: DataFrame,
-      keys: Seq[String],
-      value: String,
-      statePath: String,
-      checkpoint: String,
-      maxItemsTracked: Int = 10000): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        topKStateBatch(batch.toDF(), epochId, keys, value, statePath, maxItemsTracked)
-      }
-      .start()
-
-  /** One micro-batch of [[toTopKState]], exposed for replay tests. */
-  private[graft] def topKStateBatch(
+    * [[StreamOps.frequencyStateBatch]] epoch-keyed replay contract): a
+    * replayed epoch rewrites identical files and every rollup over the
+    * log stays exact. Compact on the Bronze lifecycle by combining the
+    * log into one row per group at a fresh path. */
+  def topKStateBatch(
       batch: DataFrame,
       epochId: Long,
       keys: Seq[String],
       value: String,
       statePath: String,
-      maxItemsTracked: Int): Unit =
-    graft.operators.Sketches.topKSketchTable(batch, keys.map(col), col(value), maxItemsTracked)
-      .write.mode("overwrite").parquet(s"$statePath/batch=$epochId")
+      maxItemsTracked: Int = 10000): Unit =
+    writeEpoch(
+      graft.operators.Sketches.topKSketchTable(batch, keys.map(col), col(value), maxItemsTracked),
+      statePath, epochId)
 
   /** Streaming PCA moment state — E28, the streaming half of D77: each
     * micro-batch lands ONE `(n, Σv, packed Σvvᵀ)` moment row
@@ -216,29 +170,15 @@ private[streaming] trait StreamOpsStateful {
     *
     * Moment sums ADD (the count-min class, not the HLL class), so
     * batches land under `batch=<epochId>` in OVERWRITE mode — the
-    * [[toFrequencyState]] epoch-keyed replay contract: a replayed epoch
-    * rewrites an equivalent row, never a double count. One nuance vs
-    * the integer sketches: double sums are not associative, so a
-    * replayed row matches to fp merge order (~1e-15 relative), not
-    * bit-for-bit. Compact on the Bronze lifecycle by merging rows. */
-  def toPcaMomentState(
-      vectors: DataFrame,
-      vecCol: String,
-      dim: Int,
-      statePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        pcaMomentStateBatch(batch.toDF(), epochId, vecCol, dim, statePath)
-      }
-      .start()
-
-  /** One micro-batch of [[toPcaMomentState]], exposed for replay tests. */
-  private[graft] def pcaMomentStateBatch(
+    * [[StreamOps.frequencyStateBatch]] epoch-keyed replay contract: a
+    * replayed epoch rewrites an equivalent row, never a double count.
+    * One nuance vs the integer sketches: double sums are not
+    * associative, so a replayed row matches to fp merge order (~1e-15
+    * relative), not bit-for-bit. Compact on the Bronze lifecycle by
+    * merging rows. */
+  def pcaMomentStateBatch(
       batch: DataFrame, epochId: Long, vecCol: String, dim: Int, statePath: String): Unit =
-    graft.vectors.Pca.momentTable(batch, vecCol, dim)
-      .write.mode("overwrite").parquet(s"$statePath/batch=$epochId")
+    writeEpoch(graft.vectors.Pca.momentTable(batch, vecCol, dim), statePath, epochId)
 
   /** Fit the current model from stored moment state (rows = batches —
     * bounded driver collect, the compaction-scale contract). */
@@ -267,32 +207,18 @@ private[streaming] trait StreamOpsStateful {
     *
     * Replay: epoch-keyed target dirs are deleted before the rename, so
     * a replayed epoch lands byte-identical in the SAME side (audits are
-    * deterministic) — the [[toFrequencyState]] overwrite contract. */
-  def toAuditedIngest(
-      docs: DataFrame,
-      checks: Seq[graft.etl.Checks.Check],
-      dataRoot: String,
-      quarantineRoot: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(checks.nonEmpty, "an audited ingest needs at least one check")
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        auditedIngestBatch(batch.toDF(), epochId, checks, dataRoot, quarantineRoot)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[toAuditedIngest]], exposed for replay tests. */
-  private[graft] def auditedIngestBatch(
+    * deterministic) — the [[StreamOps.frequencyStateBatch]] overwrite
+    * contract. */
+  def auditedIngestBatch(
       batch: DataFrame,
       epochId: Long,
       checks: Seq[graft.etl.Checks.Check],
       dataRoot: String,
       quarantineRoot: String): Unit = {
+    require(checks.nonEmpty, "an audited ingest needs at least one check")
     import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    val fs = new Path(dataRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = HadoopFs.of(spark, new Path(dataRoot))
     val staging = new Path(dataRoot, s"_staging_batch=$epochId")
     batch.write.mode("overwrite").parquet(staging.toString)
     val audit = graft.etl.Checks.audit(spark.read.parquet(staging.toString), checks)
@@ -305,9 +231,7 @@ private[streaming] trait StreamOpsStateful {
       fs.mkdirs(target.getParent)
       fs.delete(target, true) // replay overwrite contract
       require(fs.rename(staging, target), s"rename $staging -> $target failed")
-      if (!passed)
-        audit.write.mode("overwrite")
-          .parquet(new Path(quarantineRoot, s"_audit/batch=$epochId").toString)
+      if (!passed) writeEpoch(audit, s"$quarantineRoot/_audit", epochId)
     } finally audit.unpersist()
   }
 
@@ -448,7 +372,7 @@ private[streaming] trait StreamOpsStateful {
 
   /** E31 — streaming exponentially-decayed trending counts: "what is
     * hot NOW", where an event's weight halves every `halfLifeSeconds`.
-    * The recency-weighted complement of [[toTopKState]]'s all-time
+    * The recency-weighted complement of [[topKStateBatch]]'s all-time
     * heavy hitters (E26): a key with 10^6 hits last month loses to a
     * key with 10^3 hits this hour once the half-life is an hour.
     *
@@ -459,48 +383,30 @@ private[streaming] trait StreamOpsStateful {
     * timescale, and rows from different batches combine by decaying
     * both to a common reference and adding ([[trendingTopK]]). Weighted
     * sums ADD (the count-min class, not the HLL class), so batches land
-    * under `batch=<epochId>` in OVERWRITE mode — the [[toTopKState]]
+    * under `batch=<epochId>` in OVERWRITE mode — the [[topKStateBatch]]
     * epoch-keyed replay contract: a replayed epoch rewrites an
     * equivalent row, never a double count (fp-equal to merge order,
-    * the [[toPcaMomentState]] nuance). Per-batch cost is one partial-
+    * the [[pcaMomentStateBatch]] nuance). Per-batch cost is one partial-
     * aggregating groupBy plus a one-row batch-reference broadcast;
     * state is |keys| rows per epoch, compacted on the Bronze lifecycle
     * by merging rows through the same decay-and-add. */
-  def toDecayedTrendState(
-      events: DataFrame,
-      keys: Seq[String],
-      ts: String,
-      halfLifeSeconds: Double,
-      statePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(halfLifeSeconds > 0, s"halfLifeSeconds must be positive, got $halfLifeSeconds")
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        decayedTrendBatch(batch.toDF(), epochId, keys, ts, halfLifeSeconds, statePath)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[toDecayedTrendState]], exposed for replay
-    * tests. */
-  private[graft] def decayedTrendBatch(
+  def decayedTrendBatch(
       batch: DataFrame,
       epochId: Long,
       keys: Seq[String],
       ts: String,
       halfLifeSeconds: Double,
       statePath: String): Unit = {
+    require(halfLifeSeconds > 0, s"halfLifeSeconds must be positive, got $halfLifeSeconds")
     val us = graft.operators.Relational.epochMicros(col(ts))
     val withUs = batch.filter(col(ts).isNotNull).select(
       (keys.map(col) :+ us.as("__us")): _*)
     val ref = withUs.agg(max(col("__us")).as("__ref_us"))
-    withUs.crossJoin(broadcast(ref))
+    writeEpoch(withUs.crossJoin(broadcast(ref))
       .groupBy(keys.map(col): _*)
       .agg(sum(pow(lit(2.0), (col("__us") - col("__ref_us")) /
           lit(halfLifeSeconds * 1e6))).as("w"),
-        max(col("__ref_us")).as("ref_us"))
-      .write.mode("overwrite").parquet(s"$statePath/batch=$epochId")
+        max(col("__ref_us")).as("ref_us")), statePath, epochId)
   }
 
   /** E33 — streaming distribution-drift alarms: each micro-batch runs
@@ -518,35 +424,20 @@ private[streaming] trait StreamOpsStateful {
     * static enrichment side. Verdict rows are deterministic functions
     * of (batch, reference), so epoch-keyed OVERWRITE makes replay
     * idempotent — the E17 contract. */
-  def toKsDriftAlerts(
-      events: DataFrame,
-      value: String,
-      reference: DataFrame,
-      alpha: Double,
-      statePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(alpha > 0 && alpha < 1, s"alpha must be in (0, 1), got $alpha")
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        ksDriftBatch(batch.toDF(), epochId, value, reference, alpha, statePath)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[toKsDriftAlerts]], exposed for replay tests. */
-  private[graft] def ksDriftBatch(
+  def ksDriftBatch(
       batch: DataFrame,
       epochId: Long,
       value: String,
       reference: DataFrame,
       alpha: Double,
-      statePath: String): Unit =
-    graft.analytics.Stats.ksTest(batch, reference, col(value))
+      statePath: String): Unit = {
+    require(alpha > 0 && alpha < 1, s"alpha must be in (0, 1), got $alpha")
+    writeEpoch(graft.analytics.Stats.ksTest(batch, reference, col(value))
       .select(col("n_a").as("n_batch"), col("n_b").as("n_ref"),
         col("d_stat"), col("p_value"),
-        (col("p_value").isNotNull && col("p_value") < alpha).as("drifted"))
-      .write.mode("overwrite").parquet(s"$statePath/batch=$epochId")
+        (col("p_value").isNotNull && col("p_value") < alpha).as("drifted")),
+      statePath, epochId)
+  }
 
   /** E32 — streaming vocabulary-growth state, the live D84: each
     * micro-batch lands the tokens seen for the FIRST time ever (batch
@@ -562,21 +453,7 @@ private[streaming] trait StreamOpsStateful {
     * batch cost: one distinct over the batch + one anti-join against
     * the index (token-hash equi-join; the index is big but the probe is
     * batch-sized). */
-  def toVocabGrowthState(
-      events: DataFrame,
-      text: String,
-      statePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        vocabGrowthBatch(batch.toDF(), epochId, text, statePath)
-      }
-      .start()
-
-  /** One micro-batch of [[toVocabGrowthState]], exposed for replay
-    * tests. */
-  private[graft] def vocabGrowthBatch(
+  def vocabGrowthBatch(
       batch: DataFrame,
       epochId: Long,
       text: String,
@@ -597,11 +474,10 @@ private[streaming] trait StreamOpsStateful {
             org.apache.spark.sql.types.StructField("token",
               org.apache.spark.sql.types.StringType))))
     }
-    toks.join(existing, Seq("token"), "left_anti")
-      .write.mode("overwrite").parquet(s"$statePath/batch=$epochId")
+    writeEpoch(toks.join(existing, Seq("token"), "left_anti"), statePath, epochId)
   }
 
-  /** Vocabulary-growth curve from a [[toVocabGrowthState]] dir: one row
+  /** Vocabulary-growth curve from a [[vocabGrowthBatch]] dir: one row
     * per epoch with the new-type count and the running vocabulary size
     * — state-scale (|vocab| rows in, |epochs| rows out), the raw stream
     * is never rescanned. The cumulative runs over the bounded epoch
@@ -653,11 +529,11 @@ private[streaming] trait StreamOpsStateful {
     * stateful ops. On-time batches land in `onTimeRoot/batch=N`, late
     * rows (and null-timestamp rows — unplaceable on the time axis) in
     * `lateRoot/batch=N`, both epoch-keyed overwrites, so a replayed
-    * epoch rewrites exactly its own output (the toAuditedIngest
+    * epoch rewrites exactly its own output (the [[auditedIngestBatch]]
     * discipline).
     *
-    * The watermark is NOT the engine's internal one (invisible to
-    * foreachBatch) but a persisted per-epoch high-water marker table
+    * The watermark is NOT the engine's internal one (invisible to a
+    * micro-batch sink) but a persisted per-epoch high-water marker table
     * (`onTimeRoot/_watermark/batch=N` → max event-time of batch N):
     * epoch N routes against max(marker\[batch < N\]) − delay, so a
     * post-failure replay of epoch N sees the SAME watermark it saw the
@@ -667,35 +543,9 @@ private[streaming] trait StreamOpsStateful {
     *
     * Scale: the marker table is one tiny row per epoch (read
     * state-scale, never the stream); the split is two narrow filters
-    * of the batch; no shuffle anywhere. */
-  def toLateRouted(
-      events: DataFrame,
-      ts: String,
-      delay: String,
-      onTimeRoot: String,
-      lateRoot: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val delayUs = intervalMicros(delay)
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        lateRoutedBatch(batch.toDF(), epochId, ts, delayUs, onTimeRoot, lateRoot)
-      }
-      .start()
-  }
-
-  /** Parse a day-time interval literal ("10 minutes", "1 hour") to
-    * microseconds; month-bearing intervals are rejected (no fixed
-    * micros width). */
-  private[graft] def intervalMicros(interval: String): Long = {
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-      org.apache.spark.unsafe.types.UTF8String.fromString(interval))
-    require(iv.months == 0, s"interval must not contain months: $interval")
-    iv.days * 86400000000L + iv.microseconds
-  }
-
-  /** One micro-batch of [[toLateRouted]], exposed for replay tests. */
-  private[graft] def lateRoutedBatch(
+    * of the batch; no shuffle anywhere. `delayUs` is the watermark
+    * delay in microseconds ([[intervalMicros]] parses "10 minutes"). */
+  def lateRoutedBatch(
       batch: DataFrame,
       epochId: Long,
       ts: String,
@@ -718,24 +568,31 @@ private[streaming] trait StreamOpsStateful {
         case Some(w) => col(ts).isNull || tsUs < lit(w)
         case None    => col(ts).isNull
       }
-      b.filter(!isLate).write.mode("overwrite")
-        .parquet(s"$onTimeRoot/batch=$epochId")
-      b.filter(isLate).write.mode("overwrite")
-        .parquet(s"$lateRoot/batch=$epochId")
+      writeEpoch(b.filter(!isLate), onTimeRoot, epochId)
+      writeEpoch(b.filter(isLate), lateRoot, epochId)
       // an all-null batch writes a null marker (max() skips it later) —
       // the epoch still gets its row so replay stays per-epoch exact
       val batchMax = b.agg(max(tsUs).as("max_us")).head()
       val markerVal: Any = if (batchMax.isNullAt(0)) null else batchMax.getLong(0)
-      spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](
+      writeEpoch(spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](
           org.apache.spark.sql.Row(markerVal)),
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("max_us",
-            org.apache.spark.sql.types.LongType))))
-        .write.mode("overwrite").parquet(s"$markerRoot/batch=$epochId")
+            org.apache.spark.sql.types.LongType)))), markerRoot, epochId)
     } finally b.unpersist()
   }
 
-  /** Current trending top-k from a [[toDecayedTrendState]] state dir
+  /** Parse a day-time interval literal ("10 minutes", "1 hour") to
+    * microseconds; month-bearing intervals are rejected (no fixed
+    * micros width). */
+  def intervalMicros(interval: String): Long = {
+    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
+      org.apache.spark.unsafe.types.UTF8String.fromString(interval))
+    require(iv.months == 0, s"interval must not contain months: $interval")
+    iv.days * 86400000000L + iv.microseconds
+  }
+
+  /** Current trending top-k from a [[decayedTrendBatch]] state dir
     * "as of" the newest reference it contains: every state row decays
     * to the global max reference (all exponents ≤ 0) and adds per key;
     * the ranking is a TakeOrdered over the merged keys — state-scale
@@ -766,34 +623,14 @@ private[streaming] trait StreamOpsStateful {
     * `batch=<epochId>` — state-scale reads, the stream itself is never
     * rescanned. Event-time order across epochs is the stream's job:
     * late points that belong BEFORE already-folded ones should be
-    * routed out first ([[toLateRouted]]) — the recurrence, like any
+    * routed out first ([[lateRoutedBatch]]) — the recurrence, like any
     * online smoother, folds in arrival order within the watermark.
     *
     * [[forecastFrom]] reads the state dir, keeps each key's latest
     * state (`max_by` over the epoch axis), and emits the h-step linear
     * forecast — keys still in seed phase (n < 2) have no trend and
     * yield a null forecast, never a fabricated one. */
-  def toForecastState(
-      events: DataFrame,
-      keys: Seq[String],
-      ts: String,
-      value: String,
-      alpha: Double,
-      beta: Double,
-      statePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
-    require(beta >= 0 && beta <= 1, s"beta must be in [0,1], got $beta")
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        forecastStateBatch(batch.toDF(), epochId, keys, ts, value, alpha, beta, statePath)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[toForecastState]], exposed for replay tests. */
-  private[graft] def forecastStateBatch(
+  def forecastStateBatch(
       batch: DataFrame,
       epochId: Long,
       keys: Seq[String],
@@ -802,6 +639,8 @@ private[streaming] trait StreamOpsStateful {
       alpha: Double,
       beta: Double,
       statePath: String): Unit = {
+    require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
+    require(beta >= 0 && beta <= 1, s"beta must be in [0,1], got $beta")
     val spark = batch.sparkSession
     val us = graft.operators.Relational.epochMicros(col(ts))
     val pts = batch
@@ -824,7 +663,7 @@ private[streaming] trait StreamOpsStateful {
           .withColumn("__pb", lit(null).cast("double"))
           .withColumn("__pn", lit(null).cast("long"))
     }
-    pts.join(prior, keys, "left")
+    writeEpoch(pts.join(prior, keys, "left")
       .withColumn("__f", aggregate(
         col("__pts"),
         struct(col("__pl").cast("double").as("l"),
@@ -845,8 +684,7 @@ private[streaming] trait StreamOpsStateful {
           struct(nl.as("l"), nb.as("b"), (n + 1).as("n"))
         }))
       .select(keys.map(col) ++ Seq(col("__f.l").as("l"),
-        col("__f.b").as("b"), col("__f.n").as("n")): _*)
-      .write.mode("overwrite").parquet(s"$statePath/batch=$epochId")
+        col("__f.b").as("b"), col("__f.n").as("n")): _*), statePath, epochId)
   }
 
   /** E37 — streaming Markov transition state: the LIVE B33 — per-batch
@@ -873,22 +711,7 @@ private[streaming] trait StreamOpsStateful {
     * [[transitionsFrom]] rolls the counts up and row-normalizes —
     * feed it to [[graft.analytics.Markov.stationary]] for the live
     * "where do journeys settle" vector. */
-  def toMarkovState(
-      events: DataFrame,
-      entity: String,
-      ts: String,
-      state: String,
-      statePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        markovStateBatch(batch.toDF(), epochId, entity, ts, state, statePath)
-      }
-      .start()
-
-  /** One micro-batch of [[toMarkovState]], exposed for replay tests. */
-  private[graft] def markovStateBatch(
+  def markovStateBatch(
       batch: DataFrame,
       epochId: Long,
       entity: String,
@@ -940,18 +763,18 @@ private[streaming] trait StreamOpsStateful {
       .filter(col("__plast").isNotNull && col("__fge").isNotNull)
       .select(col("__plast").as("from_state"),
         col("__fge").getField("__s").as("to_state"))
-    within.unionAll(boundary)
-      .groupBy("from_state", "to_state").agg(count(lit(1)).as("cnt"))
-      .write.mode("overwrite").parquet(s"$statePath/trans/batch=$epochId")
-    firsts.select(col("__e"),
+    writeEpoch(within.unionAll(boundary)
+      .groupBy("from_state", "to_state").agg(count(lit(1)).as("cnt")),
+      s"$statePath/trans", epochId)
+    writeEpoch(firsts.select(col("__e"),
         when(col("__plast_us") > col("__last_us"), col("__plast"))
           .otherwise(col("__last")).as("__last"),
         when(col("__plast_us") > col("__last_us"), col("__plast_us"))
-          .otherwise(col("__last_us")).as("__last_us"))
-      .write.mode("overwrite").parquet(s"$statePath/last/batch=$epochId")
+          .otherwise(col("__last_us")).as("__last_us")),
+      s"$statePath/last", epochId)
   }
 
-  /** All-time transition matrix from a [[toMarkovState]] dir: counts
+  /** All-time transition matrix from a [[markovStateBatch]] dir: counts
     * sum additively across epochs (state-scale — the stream is never
     * rescanned), `p` row-normalizes. The output shape feeds
     * [[graft.analytics.Markov.stationary]] directly. */
@@ -974,32 +797,18 @@ private[streaming] trait StreamOpsStateful {
     * RE-LEARNS from the whole accumulated history at every read, so a
     * key's shrunk rate tightens as its volume grows without any
     * stream rescan (state-scale rollup only). */
-  def toRateState(
-      events: DataFrame,
-      keys: Seq[String],
-      success: String,
-      statePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        rateStateBatch(batch.toDF(), epochId, keys, success, statePath)
-      }
-      .start()
-
-  /** One micro-batch of [[toRateState]], exposed for replay tests. */
-  private[graft] def rateStateBatch(
+  def rateStateBatch(
       batch: DataFrame,
       epochId: Long,
       keys: Seq[String],
       success: String,
       statePath: String): Unit =
-    batch.filter(keys.map(col(_).isNotNull).reduce(_ && _) && col(success).isNotNull)
+    writeEpoch(batch.filter(keys.map(col(_).isNotNull).reduce(_ && _) && col(success).isNotNull)
       .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n"), sum(col(success).cast("double")).as("y"))
-      .write.mode("overwrite").parquet(s"$statePath/batch=$epochId")
+      .agg(count(lit(1)).as("n"), sum(col(success).cast("double")).as("y")),
+      statePath, epochId)
 
-  /** All-time EB-shrunk rates from a [[toRateState]] dir: counts sum
+  /** All-time EB-shrunk rates from a [[rateStateBatch]] dir: counts sum
     * additively (state-scale), the beta prior re-fits on the rollup,
     * posteriors follow — single-key composite keys arrive concatenated
     * as `key`. */
@@ -1025,29 +834,11 @@ private[streaming] trait StreamOpsStateful {
     * (equality spec-asserted against [[graft.analytics.Funnel.funnel]]
     * on the concatenated history). Entities still at step 0 write no
     * row — absent state IS step 0. Arrival-order contract as
-    * [[toForecastState]] (route stragglers with [[toLateRouted]]).
+    * [[forecastStateBatch]] (route stragglers with [[lateRoutedBatch]]).
     *
     * [[funnelFrom]] rolls the per-entity progress up to the C21 report
     * shape: (step_index, step, n_users, conversion). */
-  def toFunnelState(
-      events: DataFrame,
-      entity: String,
-      ts: String,
-      typeCol: String,
-      steps: Seq[String],
-      statePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(steps.size >= 2, "a funnel needs at least two steps")
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        funnelStateBatch(batch.toDF(), epochId, entity, ts, typeCol, steps, statePath)
-      }
-      .start()
-  }
-
-  /** One micro-batch of [[toFunnelState]], exposed for replay tests. */
-  private[graft] def funnelStateBatch(
+  def funnelStateBatch(
       batch: DataFrame,
       epochId: Long,
       entity: String,
@@ -1055,6 +846,7 @@ private[streaming] trait StreamOpsStateful {
       typeCol: String,
       steps: Seq[String],
       statePath: String): Unit = {
+    require(steps.size >= 2, "a funnel needs at least two steps")
     val spark = batch.sparkSession
     val us = graft.operators.Relational.epochMicros(col(ts))
     val stepsArr = array(steps.map(lit): _*)
@@ -1077,7 +869,7 @@ private[streaming] trait StreamOpsStateful {
           .withColumn("__ps", lit(null).cast("int"))
           .withColumn("__pt", lit(null).cast("long"))
     }
-    pts.join(prior, Seq("__e"), "left")
+    writeEpoch(pts.join(prior, Seq("__e"), "left")
       .withColumn("__f", aggregate(
         col("__evs"),
         struct(coalesce(col("__ps"), lit(0)).as("stage"),
@@ -1092,11 +884,11 @@ private[streaming] trait StreamOpsStateful {
             when(advance, e.getField("__us")).otherwise(acc.getField("t")).as("t"))
         }))
       .select(col("__e"), col("__f.stage").as("stage"), col("__f.t").as("t_us"))
-      .filter(col("stage") >= 1) // absent state IS step 0
-      .write.mode("overwrite").parquet(s"$statePath/batch=$epochId")
+      .filter(col("stage") >= 1), // absent state IS step 0
+      statePath, epochId)
   }
 
-  /** The C21 report from a [[toFunnelState]] dir: per-step user counts
+  /** The C21 report from a [[funnelStateBatch]] dir: per-step user counts
     * over each entity's LATEST progress, conversion vs step-1 — a
     * state-scale rollup, the stream is never rescanned. */
   def funnelFrom(spark: SparkSession, statePath: String,
@@ -1127,40 +919,25 @@ private[streaming] trait StreamOpsStateful {
     * re-skylines the stored candidates: state-scale, the stream is
     * never rescanned, and the read IS the compaction (candidates a
     * later epoch dominated vanish from every subsequent read). */
-  def toSkylineState(
-      events: DataFrame,
-      x: String,
-      y: String,
-      carry: Seq[String],
-      statePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-        skylineStateBatch(batch.toDF(), epochId, x, y, carry, statePath)
-      }
-      .start()
-
-  /** One micro-batch of [[toSkylineState]], exposed for replay tests. */
-  private[graft] def skylineStateBatch(
+  def skylineStateBatch(
       batch: DataFrame,
       epochId: Long,
       x: String,
       y: String,
       carry: Seq[String],
       statePath: String): Unit =
-    graft.operators.Ranking.skyline2D(
-        batch.select((Seq(x, y) ++ carry).map(col): _*), col(x), col(y))
-      .write.mode("overwrite").parquet(s"$statePath/batch=$epochId")
+    writeEpoch(graft.operators.Ranking.skyline2D(
+        batch.select((Seq(x, y) ++ carry).map(col): _*), col(x), col(y)),
+      statePath, epochId)
 
-  /** The all-time frontier from a [[toSkylineState]] dir — one skyline
+  /** The all-time frontier from a [[skylineStateBatch]] dir — one skyline
     * pass over the stored per-epoch frontiers (merge closure). */
   def skylineFrom(spark: SparkSession, statePath: String,
                   x: String, y: String): DataFrame =
     graft.operators.Ranking.skyline2D(
       spark.read.parquet(statePath).drop("batch"), col(x), col(y))
 
-  /** Latest per-key Holt state from a [[toForecastState]] dir, with the
+  /** Latest per-key Holt state from a [[forecastStateBatch]] dir, with the
     * `horizon`-step linear forecast l + h·b — state-scale; seed-phase
     * keys (n < 2) report null trend/forecast. */
   def forecastFrom(spark: SparkSession, statePath: String, keys: Seq[String],

@@ -67,7 +67,7 @@ object CorpusProfile {
     * shard) whose fields merge losslessly or within sketch bounds, so a
     * 100 TB corpus profiles as thousands of independent slice jobs (or
     * per-micro-batch appends, the
-    * [[graft.streaming.StreamOps.toSketchState]] pattern) with the
+    * [[graft.streaming.StreamOps.sketchStateBatch]] pattern) with the
     * global card assembled later by [[rollupCards]] — never a second
     * corpus pass. Counts and sums merge exactly (mean quality rides as
     * a sum + count); exact distinct-fingerprint counting is the ONE

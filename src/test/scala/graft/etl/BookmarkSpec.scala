@@ -9,8 +9,13 @@ class BookmarkSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  test("first pull takes everything; later pulls take strictly-newer tails only") {
-    val path = java.nio.file.Files.createTempDirectory("bookmark").toString + "/bm"
+  // the same local directory named by a scheme-qualified URI
+  // (file:///tmp/...): roots on hdfs:// or s3a:// look like this one
+  private def fileUri(path: String): String = java.nio.file.Paths.get(path).toUri.toString
+
+  for ((label, root) <- Seq("" -> ((p: String) => p), " (file:// root)" -> (fileUri _)))
+  test(s"first pull takes everything; later pulls take strictly-newer tails only$label") {
+    val path = root(java.nio.file.Files.createTempDirectory("bookmark").toString + "/bm")
     val day1 = Seq((1L, ts("2024-01-01 10:00:00")), (2L, ts("2024-01-01 11:00:00")))
       .toDF("id", "ts")
     assert(Bookmark.read(spark, path).isEmpty)

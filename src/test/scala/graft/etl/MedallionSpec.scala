@@ -10,9 +10,14 @@ class MedallionSpec extends SparkSpec {
   private def tmp(): String =
     Files.createTempDirectory("graft-medallion").resolve("data").toString
 
-  test("runIncremental processes each partition exactly once (.done markers)") {
-    val bronze = tmp()
-    val silver = tmp()
+  // the same local directory named by a scheme-qualified URI
+  // (file:///tmp/...): roots on hdfs:// or s3a:// look like this one
+  private def fileUri(path: String): String = java.nio.file.Paths.get(path).toUri.toString
+
+  for ((label, root) <- Seq("" -> ((p: String) => p), " on a file:// root" -> (fileUri _)))
+  test(s"runIncremental processes each partition exactly once (.done markers)$label") {
+    val bronze = root(tmp())
+    val silver = root(tmp())
     Seq((1L, "2024-01-01"), (2L, "2024-01-01"), (3L, "2024-01-02"))
       .toDF("id", Medallion.PartitionCol)
       .write.partitionBy(Medallion.PartitionCol).parquet(bronze)
@@ -90,7 +95,7 @@ class MedallionSpec extends SparkSpec {
     assert(done == (1 to 6).map(i => s"2024-02-0$i"))
     // every partition written exactly once, markers all present
     (1 to 6).foreach { i =>
-      assert(Medallion.isDone(silver, s"2024-02-0$i"))
+      assert(Medallion.isDone(spark, silver, s"2024-02-0$i"))
       assert(spark.read.parquet(s"$silver/${Medallion.PartitionCol}=2024-02-0$i").count() == 1)
     }
     assert(Medallion.runIncremental(spark, bronze, silver, identity, parallelism = 4).isEmpty)
@@ -109,9 +114,9 @@ class MedallionSpec extends SparkSpec {
       Medallion.runIncremental(spark, bronze, silver, boom, parallelism = 3))
     assert(err.getMessage != null)
     // healthy partitions committed their markers; the poison one did not
-    assert(Medallion.isDone(silver, "2024-03-01"))
-    assert(Medallion.isDone(silver, "2024-03-03"))
-    assert(!Medallion.isDone(silver, "2024-03-02"))
+    assert(Medallion.isDone(spark, silver, "2024-03-01"))
+    assert(Medallion.isDone(spark, silver, "2024-03-03"))
+    assert(!Medallion.isDone(spark, silver, "2024-03-02"))
     // resume processes ONLY the failed partition
     val resumed = Medallion.runIncremental(spark, bronze, silver,
       df => df.withColumn("x", col("id")))

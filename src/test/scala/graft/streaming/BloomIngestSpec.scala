@@ -14,9 +14,9 @@ class BloomIngestSpec extends SparkSpec {
     val indexRoot = java.nio.file.Files.createTempDirectory("bloom-idx").toString
     val ckpt = java.nio.file.Files.createTempDirectory("bloom-ckpt").toString
     val input = MemoryStream[(String, Long)]
-    val q = StreamOps.toBloomIndexedBronze(input.toDS().toDF("user", "v"),
-      column = "user", dataRoot = dataRoot, indexRoot = indexRoot,
-      checkpoint = ckpt, expectedPerFile = 100, fpp = 0.01)
+    val q = StreamOps.foreachEpoch(input.toDS().toDF("user", "v"), ckpt)(
+      StreamOps.bloomIndexedBatch(_, _, column = "user", dataRoot = dataRoot,
+        indexRoot = indexRoot, expectedPerFile = 100, fpp = 0.01))
     try {
       input.addData(("alice", 1L), ("bob", 2L))
       q.processAllAvailable()

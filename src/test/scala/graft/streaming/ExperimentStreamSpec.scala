@@ -13,11 +13,9 @@ class ExperimentStreamSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("exp-ckpt").toString
     // (user, variant, event_type, value)
     val input = MemoryStream[(Long, String, String, Double)]
-    val q = StreamOps.toExperimentState(
-      input.toDS().toDF("u", "v", "et", "value"),
-      entity = "u", variant = col("v"),
-      converted = col("et") === "buy", value = col("value"),
-      statePath = statePath, checkpoint = ckpt)
+    val q = StreamOps.foreachEpoch(input.toDS().toDF("u", "v", "et", "value"), ckpt)(
+      StreamOps.experimentStateBatch(_, _, entity = "u", variant = col("v"),
+        converted = col("et") === "buy", value = col("value"), statePath = statePath))
     try {
       // epoch 0: users 1,2 (A) and 3,4 (B) exposed; user 3 converts
       input.addData((1L, "A", "view", 0.0), (2L, "A", "view", 0.0),

@@ -29,8 +29,9 @@ class PitEnrichSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("pit-ckpt").toString
     val input = MemoryStream[(Long, Long, Timestamp)]
     val facts = input.toDS().toDF("fact_id", "user_id", "fact_ts")
-    val q = StreamOps.toPitEnriched(facts, dim, key = "user_id", factTs = "fact_ts",
-      attrCols = Seq("state"), outRoot = out, checkpoint = ckpt)
+    val q = StreamOps.foreachEpoch(facts, ckpt)(
+      StreamOps.pitEnrichedBatch(_, _, dim, key = "user_id", factTs = "fact_ts",
+        attrCols = Seq("state"), outRoot = out))
     try {
       input.addData((1L, 1L, ts("2024-01-01 10:30:00")), (2L, 1L, ts("2024-01-01 11:30:00")))
       q.processAllAvailable()

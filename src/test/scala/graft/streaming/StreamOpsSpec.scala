@@ -109,14 +109,13 @@ class StreamOpsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-bronze")
     val input = MemoryStream[(Long, Timestamp, Double)]
-    val q = StreamOps.toBronze(
-      input.toDF().toDF("event_id", "ts", "value"),
-      ts = "ts", outRoot = dir.resolve("bronze").toString,
-      checkpoint = dir.resolve("ckpt").toString)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("event_id", "ts", "value"),
+        dir.resolve("ckpt").toString)((b, _) =>
+      StreamOps.bronzeBatch(b, ts = "ts", outRoot = dir.resolve("bronze").toString))
     try {
       input.addData((1L, ts("2024-01-01 10:00:00"), 1.0), (2L, ts("2024-01-02 09:00:00"), 2.0))
       q.processAllAvailable()
-      val parts = graft.etl.Medallion.listPartitions(dir.resolve("bronze").toString)
+      val parts = graft.etl.Medallion.listPartitions(spark, dir.resolve("bronze").toString)
       assert(parts == Seq("2024-01-01", "2024-01-02"))
       val day1 = spark.read.parquet(s"${dir.resolve("bronze")}/ingestion_date=2024-01-01")
       assert(day1.select("event_id").as[Long].collect().toSeq == Seq(1L))
@@ -129,11 +128,10 @@ class StreamOpsSpec extends SparkSpec {
     val bronze = dir.resolve("bronze").toString
     val index = dir.resolve("index").toString
     val input = MemoryStream[(Long, String, Timestamp)]
-    val q = StreamOps.toBronzeDeduped(
-      input.toDF().toDF("doc_id", "text", "ts"),
-      id = "doc_id", text = "text", ts = "ts",
-      outRoot = bronze, indexPath = index,
-      checkpoint = dir.resolve("ckpt").toString)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("doc_id", "text", "ts"),
+        dir.resolve("ckpt").toString)((b, _) =>
+      StreamOps.bronzeDedupedBatch(b, id = "doc_id", text = "text", ts = "ts",
+        outRoot = bronze, indexPath = index))
     try {
       // batch 1: two distinct docs + an in-batch duplicate of doc 1
       input.addData(
@@ -170,11 +168,10 @@ class StreamOpsSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val cents = graft.similarity.Ann.ivfCentroids(boot, "vec_id", "embedding", 2)
     val input = MemoryStream[(Long, Array[Float])]
-    val q = StreamOps.toSemanticDeduped(
-      input.toDF().toDF("vec_id", "embedding"),
-      id = "vec_id", vec = "embedding", centroids = cents, threshold = 0.99,
-      outRoot = out, indexPath = index,
-      checkpoint = dir.resolve("ckpt").toString)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("vec_id", "embedding"),
+        dir.resolve("ckpt").toString)(
+      StreamOps.semanticDedupBatch(_, _, id = "vec_id", vec = "embedding",
+        centroids = cents, threshold = 0.99, outRoot = out, indexPath = index))
     try {
       // batch 1 bootstraps the index: 1 and 2 distinct, 3 ≡ 1 in-batch
       input.addData(
@@ -201,10 +198,10 @@ class StreamOpsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-cards")
     val cards = dir.resolve("cards").toString
     val input = MemoryStream[(Long, String, String)]
-    val q = StreamOps.toCorpusCards(
-      input.toDF().toDF("doc_id", "text", "source"),
-      text = "text", source = "source", slice = "source",
-      cardsPath = cards, checkpoint = dir.resolve("ckpt").toString)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("doc_id", "text", "source"),
+        dir.resolve("ckpt").toString)(
+      StreamOps.corpusCardsBatch(_, _, text = "text", source = "source", slice = "source",
+        cardsPath = cards))
     val b1 = Seq((1L, "the rain of spain", "web"), (2L, "der und das ist", "books"))
     val b2 = Seq((3L, "the rain of spain", "web"), (4L, "el que la y", "web"))
     try {
@@ -229,10 +226,9 @@ class StreamOpsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-aggstate")
     val statePath = dir.resolve("state").toString
     val input = MemoryStream[(String, Double)]
-    val q = StreamOps.toAggState(
-      input.toDF().toDF("k", "x"),
-      keys = Seq("k"), valueCols = Seq("x"),
-      statePath = statePath, checkpoint = dir.resolve("ckpt").toString)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("k", "x"), dir.resolve("ckpt").toString)(
+      StreamOps.aggStateBatch(_, _, keys = Seq("k"), valueCols = Seq("x"),
+        statePath = statePath))
     val b1 = Seq(("a", 1.0), ("a", 3.0), ("b", 10.0))
     val b2 = Seq(("a", 5.0), ("c", -2.0))
     try {
@@ -264,10 +260,10 @@ class StreamOpsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-drift")
     val cellsPath = dir.resolve("cells").toString
     val input = MemoryStream[(String, Double)]
-    val q = StreamOps.toDriftCells(
-      input.toDF().toDF("src", "score"),
-      slice = "src", value = col("score"),
-      cellsPath = cellsPath, checkpoint = dir.resolve("ckpt").toString, nBins = 4)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("src", "score"),
+        dir.resolve("ckpt").toString)(
+      StreamOps.driftCellsBatch(_, _, slice = "src", value = col("score"),
+        cellsPath = cellsPath, nBins = 4))
     val b1 = Seq(("web", 0.1), ("web", 0.2), ("books", 0.9))
     val b2 = Seq(("web", 0.15), ("books", 0.85), ("books", 0.95))
     try {
@@ -329,11 +325,10 @@ class StreamOpsSpec extends SparkSpec {
     val hier = graft.similarity.Ann.hierCentroids(boot, "vec_id", "embedding",
       nLists = 4, trainRounds = 0)
     val input = MemoryStream[(Long, Array[Float])]
-    val q = StreamOps.toSemanticDeduped(
-      input.toDF().toDF("vec_id", "embedding"),
-      id = "vec_id", vec = "embedding", hier = hier, threshold = 0.99,
-      outRoot = out, indexPath = index,
-      checkpoint = dir.resolve("ckpt").toString)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("vec_id", "embedding"),
+        dir.resolve("ckpt").toString)(
+      StreamOps.semanticDedupBatch(_, _, id = "vec_id", vec = "embedding", hier = hier,
+        threshold = 0.99, outRoot = out, indexPath = index))
     try {
       input.addData(
         (1L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
@@ -427,10 +422,9 @@ class StreamOpsSpec extends SparkSpec {
     val input = MemoryStream[(Long, String, Long, Boolean)]
     val root = java.nio.file.Files.createTempDirectory("snap").toString + "/t"
     val ckpt = java.nio.file.Files.createTempDirectory("snapckpt").toString
-    val q = StreamOps.toSnapshot(
-      input.toDF().toDF("k", "payload", "v", "deleted"),
-      keyCols = Seq("k"), version = "v", outRoot = root, checkpoint = ckpt,
-      tombstone = Some("deleted"))
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("k", "payload", "v", "deleted"), ckpt)(
+      (b, _) => StreamOps.snapshotBatch(b, keyCols = Seq("k"), version = "v", outRoot = root,
+        tombstone = Some("deleted")))
     try {
       input.addData((1L, "a", 1L, false), (2L, "b", 1L, false))
       q.processAllAvailable()
@@ -453,9 +447,8 @@ class StreamOpsSpec extends SparkSpec {
     val input = MemoryStream[(String, Long)]
     val state = java.nio.file.Files.createTempDirectory("sketchstate").toString + "/hll"
     val ckpt = java.nio.file.Files.createTempDirectory("sketchckpt").toString
-    val q = StreamOps.toSketchState(
-      input.toDF().toDF("day", "user_id"),
-      keys = Seq("day"), value = "user_id", statePath = state, checkpoint = ckpt)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("day", "user_id"), ckpt)((b, _) =>
+      StreamOps.sketchStateBatch(b, keys = Seq("day"), value = "user_id", statePath = state))
     try {
       // batch 1: day1 users 1..50, day2 users 1..10
       input.addData((1L to 50L).map(("d1", _)) ++ (1L to 10L).map(("d2", _)): _*)
@@ -489,9 +482,9 @@ class StreamOpsSpec extends SparkSpec {
     val input = MemoryStream[(String, Long)]
     val state = java.nio.file.Files.createTempDirectory("cmstate").toString + "/cm"
     val ckpt = java.nio.file.Files.createTempDirectory("cmckpt").toString
-    val q = StreamOps.toFrequencyState(
-      input.toDF().toDF("day", "user_id"),
-      keys = Seq("day"), value = "user_id", statePath = state, checkpoint = ckpt)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("day", "user_id"), ckpt)(
+      StreamOps.frequencyStateBatch(_, _, keys = Seq("day"), value = "user_id",
+        statePath = state))
     try {
       // user 7 appears 30x on d1; user 8 appears 5x on d2
       input.addData((1 to 30).map(_ => ("d1", 7L)) ++ (1 to 5).map(_ => ("d2", 8L)): _*)
@@ -526,9 +519,8 @@ class StreamOpsSpec extends SparkSpec {
     val input = MemoryStream[(String, String)]
     val state = java.nio.file.Files.createTempDirectory("tkstate").toString + "/tk"
     val ckpt = java.nio.file.Files.createTempDirectory("tkckpt").toString
-    val q = StreamOps.toTopKState(
-      input.toDF().toDF("src", "item"),
-      keys = Seq("src"), value = "item", statePath = state, checkpoint = ckpt)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("src", "item"), ckpt)(
+      StreamOps.topKStateBatch(_, _, keys = Seq("src"), value = "item", statePath = state))
     try {
       input.addData((1 to 20).map(_ => ("web", "x")) ++ (1 to 3).map(_ => ("web", "y")): _*)
       q.processAllAvailable()
@@ -560,10 +552,9 @@ class StreamOpsSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("dtckpt").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     val t1 = java.sql.Timestamp.valueOf("2024-01-01 02:00:00") // 2 half-lives later
-    val q = StreamOps.toDecayedTrendState(
-      input.toDF().toDF("k", "ts"),
-      keys = Seq("k"), ts = "ts", halfLifeSeconds = 3600.0,
-      statePath = state, checkpoint = ckpt)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("k", "ts"), ckpt)(
+      StreamOps.decayedTrendBatch(_, _, keys = Seq("k"), ts = "ts", halfLifeSeconds = 3600.0,
+        statePath = state))
     try {
       input.addData(Seq.fill(4)(("a", t0)) :+ (("b", t0)): _*)
       q.processAllAvailable()
@@ -598,9 +589,9 @@ class StreamOpsSpec extends SparkSpec {
     val state = java.nio.file.Files.createTempDirectory("ksstate").toString + "/ks"
     val ckpt = java.nio.file.Files.createTempDirectory("ksckpt").toString
     val ref = (1 to 400).map(i => (i % 100).toDouble).toDF("v").cache()
-    val q = StreamOps.toKsDriftAlerts(
-      input.toDF().toDF("v"), value = "v", reference = ref, alpha = 0.01,
-      statePath = state, checkpoint = ckpt)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("v"), ckpt)(
+      StreamOps.ksDriftBatch(_, _, value = "v", reference = ref, alpha = 0.01,
+        statePath = state))
     try {
       input.addData((1 to 200).map(i => (i % 100).toDouble): _*)   // same family
       q.processAllAvailable()
@@ -620,7 +611,7 @@ class StreamOpsSpec extends SparkSpec {
       .as[(Long, Boolean, Double)].collect().sortBy(_._1).toList
     assert(again == rows, "a replayed epoch must leave the verdicts unchanged")
     intercept[IllegalArgumentException] {
-      StreamOps.toKsDriftAlerts(input.toDF().toDF("v"), "v", ref, 1.5, state, ckpt)
+      StreamOps.ksDriftBatch(Seq(1.0).toDF("v"), 2L, "v", ref, 1.5, state)
     }
   }
 
@@ -629,8 +620,8 @@ class StreamOpsSpec extends SparkSpec {
     val input = MemoryStream[String]
     val state = java.nio.file.Files.createTempDirectory("vgstate").toString + "/vg"
     val ckpt = java.nio.file.Files.createTempDirectory("vgckpt").toString
-    val q = StreamOps.toVocabGrowthState(
-      input.toDF().toDF("text"), text = "text", statePath = state, checkpoint = ckpt)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("text"), ckpt)(
+      StreamOps.vocabGrowthBatch(_, _, text = "text", statePath = state))
     try {
       input.addData("the cat sat", "the dog sat")   // epoch 0: the,cat,sat,dog
       q.processAllAvailable()
@@ -661,10 +652,9 @@ class StreamOpsSpec extends SparkSpec {
     val quar = dir.resolve("quarantine").toString
     val ckpt = dir.resolve("ckpt").toString
     val input = MemoryStream[(Long, String)]
-    val q = StreamOps.toAuditedIngest(
-      input.toDF().toDF("k", "s"),
-      Seq(Checks.NotNull("s"), Checks.RowCountBetween(1L, 100L)),
-      data, quar, ckpt)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("k", "s"), ckpt)(
+      StreamOps.auditedIngestBatch(_, _,
+        Seq(Checks.NotNull("s"), Checks.RowCountBetween(1L, 100L)), data, quar))
     try {
       input.addData((1L, "a"), (2L, "b"))                 // clean
       q.processAllAvailable()
@@ -705,8 +695,8 @@ class StreamOpsSpec extends SparkSpec {
       (i.toLong, Seq(1 + a * 0.5 + b * 0.5, 1 + a * 0.5 - b * 0.5,
         1 + a * 0.5 + b * 0.5, 1 + a * 0.5 - b * 0.5).map(_.toFloat))
     }
-    val q = StreamOps.toPcaMomentState(
-      input.toDF().toDF("id", "vec"), "vec", dim = 4, statePath = state, checkpoint = ckpt)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("id", "vec"), ckpt)(
+      StreamOps.pcaMomentStateBatch(_, _, "vec", dim = 4, statePath = state))
     try {
       input.addData(cloud.take(120): _*)
       q.processAllAvailable()
@@ -741,11 +731,10 @@ class StreamOpsSpec extends SparkSpec {
     val out = dir.resolve("out").toString
     val index = dir.resolve("index").toString
     val input = MemoryStream[(Long, String)]
-    val q = StreamOps.toParagraphDeduped(
-      input.toDF().toDF("doc_id", "text"),
-      id = "doc_id", text = "text",
-      outRoot = out, indexPath = index,
-      checkpoint = dir.resolve("ckpt").toString)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("doc_id", "text"),
+        dir.resolve("ckpt").toString)(
+      StreamOps.paragraphDedupBatch(_, _, id = "doc_id", text = "text",
+        outRoot = out, indexPath = index))
     try {
       input.addData((1L, "shared boilerplate\n\nfirst unique"))
       q.processAllAvailable()
@@ -835,11 +824,10 @@ class StreamOpsSpec extends SparkSpec {
     val out = dir.resolve("out").toString
     val index = dir.resolve("index").toString
     val input = MemoryStream[(Long, String)]
-    val q = StreamOps.toContentDiff(
-      input.toDF().toDF("doc_id", "text"),
-      id = "doc_id", contentCols = Seq("text"),
-      outRoot = out, indexPath = index,
-      checkpoint = dir.resolve("ckpt").toString)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("doc_id", "text"),
+        dir.resolve("ckpt").toString)(
+      StreamOps.contentDiffBatch(_, _, id = "doc_id", contentCols = Seq("text"),
+        outRoot = out, indexPath = index))
     try {
       input.addData((1L, "alpha"), (2L, "beta"))
       q.processAllAvailable()
@@ -860,11 +848,10 @@ class StreamOpsSpec extends SparkSpec {
     val index = dir.resolve("index").toString
     val prose = (1 to 15).map(i => s"the word$i and word${i}b").mkString(" ")
     val input = MemoryStream[(Long, String)]
-    val q = StreamOps.toCleanIngest(
-      input.toDF().toDF("doc_id", "text"),
-      id = "doc_id", text = "text",
-      outRoot = out, indexPath = index,
-      checkpoint = dir.resolve("ckpt").toString)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("doc_id", "text"),
+        dir.resolve("ckpt").toString)(
+      StreamOps.cleanIngestBatch(_, _, id = "doc_id", text = "text",
+        outRoot = out, indexPath = index))
     try {
       input.addData(
         (1L, "Accept Cookies\n" + prose),  // banner stripped, prose survives
@@ -914,9 +901,10 @@ class StreamOpsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-shards-e2e")
     val input = MemoryStream[(Long, Long)]
-    val q = StreamOps.toBalancedShards(input.toDF().toDF("doc_id", "cost"),
-      "doc_id", col("cost"), dir.resolve("out").toString,
-      dir.resolve("state").toString, dir.resolve("ckpt").toString, shards = 3)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("doc_id", "cost"),
+        dir.resolve("ckpt").toString)(
+      StreamOps.balancedShardBatch(_, _, "doc_id", col("cost"), dir.resolve("out").toString,
+        dir.resolve("state").toString, shards = 3))
     try {
       input.addData((1L, 30L), (2L, 20L), (3L, 10L))
       q.processAllAvailable()
@@ -939,8 +927,9 @@ class StreamOpsSpec extends SparkSpec {
     val short3 = Seq.fill(3)(line).mkString("\n")  // C4-clean but < minWords
     val junk = "no terminal punctuation here at all\n{ code }"
     val input = MemoryStream[(Long, String)]
-    val q = StreamOps.toQualityRouted(input.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", keep, rej, dir.resolve("ckpt").toString, minWords = 40)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("doc_id", "text"),
+        dir.resolve("ckpt").toString)(
+      StreamOps.qualityRoutedBatch(_, _, "doc_id", "text", keep, rej, minWords = 40))
     try {
       input.addData((1L, good), (2L, short3), (3L, junk))
       q.processAllAvailable()
@@ -999,8 +988,9 @@ class StreamOpsSpec extends SparkSpec {
     val ckpt = dir.resolve("ckpt").toString
     def ts(s: String) = Timestamp.valueOf(s)
     val input = MemoryStream[(Long, Timestamp)]
-    val q = StreamOps.toLateRouted(input.toDF().toDF("k", "ts"),
-      "ts", "10 minutes", onTime, late, ckpt)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("k", "ts"), ckpt)(
+      StreamOps.lateRoutedBatch(_, _, "ts", StreamOps.intervalMicros("10 minutes"),
+        onTime, late))
     try {
       // epoch 0: no prior marker — everything on-time (even old rows)
       input.addData((1L, ts("2024-01-01 10:00:00")), (2L, ts("2024-01-01 10:05:00")))
@@ -1070,9 +1060,9 @@ class StreamOpsSpec extends SparkSpec {
     val input = MemoryStream[(Timestamp, String, Double)]
     val state = java.nio.file.Files.createTempDirectory("fcstate").toString + "/fc"
     val ckpt = java.nio.file.Files.createTempDirectory("fcckpt").toString
-    val q = StreamOps.toForecastState(
-      input.toDF().toDF("ts", "k", "v"), keys = Seq("k"), ts = "ts", value = "v",
-      alpha = 0.5, beta = 0.4, statePath = state, checkpoint = ckpt)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("ts", "k", "v"), ckpt)(
+      StreamOps.forecastStateBatch(_, _, keys = Seq("k"), ts = "ts", value = "v",
+        alpha = 0.5, beta = 0.4, statePath = state))
     val e0 = Seq(
       (ts("2024-01-01 10:00:00"), "a", 3.0), (ts("2024-01-01 11:00:00"), "a", 5.0),
       (ts("2024-01-01 10:00:00"), "solo", 9.0))
@@ -1120,9 +1110,9 @@ class StreamOpsSpec extends SparkSpec {
     val input = MemoryStream[(Timestamp, String, String)]
     val state = java.nio.file.Files.createTempDirectory("mkstate").toString + "/mk"
     val ckpt = java.nio.file.Files.createTempDirectory("mkckpt").toString
-    val q = StreamOps.toMarkovState(
-      input.toDF().toDF("ts", "u", "s"), entity = "u", ts = "ts", state = "s",
-      statePath = state, checkpoint = ckpt)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("ts", "u", "s"), ckpt)(
+      StreamOps.markovStateBatch(_, _, entity = "u", ts = "ts", state = "s",
+        statePath = state))
     // u1 path view→click→view→buy SPLIT across the epoch boundary after
     // "click" — the view→(boundary)→view pair only exists cross-batch
     val e0 = Seq(
@@ -1216,9 +1206,8 @@ class StreamOpsSpec extends SparkSpec {
     val input = MemoryStream[(String, Int)]
     val state = java.nio.file.Files.createTempDirectory("rstate").toString + "/rs"
     val ckpt = java.nio.file.Files.createTempDirectory("rckpt").toString
-    val q = StreamOps.toRateState(
-      input.toDF().toDF("k", "ok"), keys = Seq("k"), success = "ok",
-      statePath = state, checkpoint = ckpt)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("k", "ok"), ckpt)(
+      StreamOps.rateStateBatch(_, _, keys = Seq("k"), success = "ok", statePath = state))
     val e0 = Seq(("a", 1), ("a", 0), ("b", 1), ("b", 1))
     val e1 = Seq(("a", 1), ("a", 1), ("b", 0), ("b", 0), ("c", 1), ("c", 0))
     try {
@@ -1247,9 +1236,9 @@ class StreamOpsSpec extends SparkSpec {
     val state = java.nio.file.Files.createTempDirectory("fnstate").toString + "/fn"
     val ckpt = java.nio.file.Files.createTempDirectory("fnckpt").toString
     val steps = Seq("view", "click", "buy")
-    val q = StreamOps.toFunnelState(
-      input.toDF().toDF("ts", "u", "e"), entity = "u", ts = "ts", typeCol = "e",
-      steps = steps, statePath = state, checkpoint = ckpt)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("ts", "u", "e"), ckpt)(
+      StreamOps.funnelStateBatch(_, _, entity = "u", ts = "ts", typeCol = "e",
+        steps = steps, statePath = state))
     // u1 completes across the boundary; u2 clicks BEFORE viewing (no
     // credit), then views and clicks in epoch 1; u3 never starts
     val e0 = Seq(
@@ -1284,9 +1273,9 @@ class StreamOpsSpec extends SparkSpec {
     val input = MemoryStream[(Double, Double, String)]
     val state = java.nio.file.Files.createTempDirectory("skstate").toString + "/sk"
     val ckpt = java.nio.file.Files.createTempDirectory("skckpt").toString
-    val q = StreamOps.toSkylineState(
-      input.toDF().toDF("x", "y", "id"), x = "x", y = "y", carry = Seq("id"),
-      statePath = state, checkpoint = ckpt)
+    val q = StreamOps.foreachEpoch(input.toDF().toDF("x", "y", "id"), ckpt)(
+      StreamOps.skylineStateBatch(_, _, x = "x", y = "y", carry = Seq("id"),
+        statePath = state))
     val e0 = Seq((1.0, 5.0, "a"), (3.0, 3.0, "b"), (2.0, 2.0, "dom0"))
     val e1 = Seq((4.0, 4.0, "c"), (0.5, 0.5, "dom1")) // c dominates b
     try {

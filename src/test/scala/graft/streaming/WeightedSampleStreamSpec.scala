@@ -12,9 +12,9 @@ class WeightedSampleStreamSpec extends SparkSpec {
     val statePath = java.nio.file.Files.createTempDirectory("wsk-state").toString
     val ckpt = java.nio.file.Files.createTempDirectory("wsk-ckpt").toString
     val input = MemoryStream[(Long, Double)]
-    val q = StreamOps.toWeightedSample(input.toDS().toDF("id", "w"),
-      key = "id", weight = col("w"), k = 20, salt = "s1",
-      statePath = statePath, checkpoint = ckpt)
+    val q = StreamOps.foreachEpoch(input.toDS().toDF("id", "w"), ckpt)(
+      StreamOps.weightedSampleBatch(_, _, key = "id", weight = col("w"), k = 20, salt = "s1",
+        statePath = statePath))
     val epoch0 = (1L to 300L).map(i => (i, if (i % 3 == 0) 10.0 else 1.0))
     val epoch1 = (301L to 600L).map(i => (i, if (i % 3 == 0) 10.0 else 1.0))
     try {
