@@ -86,6 +86,22 @@ private[graft] object StreamDrive {
 
 
 
+  /** Run `stream` to completion into a `memory` sink and return the
+    * sink's table: output mode `mode`, a query name of `prefix` plus a
+    * fresh UUID (names are session-global, and a run may drive one
+    * query several times), checkpoint at `checkpoint`, trigger
+    * AvailableNow. */
+  private[graft] def drainToMemory(stream: DataFrame, mode: String, prefix: String,
+                                   checkpoint: String): DataFrame = {
+    val name = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
+    stream.writeStream.outputMode(mode).format("memory")
+      .queryName(name).option("checkpointLocation", checkpoint)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    stream.sparkSession.table(name)
+  }
+
   /** Split `df` into three ascending id-tercile batches and append
     * them to `dir` as mtime-pinned single files — arrival order = id
     * order, so a first-arrival streaming winner is the global min-id

@@ -34,14 +34,7 @@ private[graft] object StreamQueries2 {
       val bars = StreamOps.streamingOhlcBars(stream, ts = "ts",
         watermark = "0 seconds", bucket = "1 day", groupCol = "event_type",
         valueCol = "value", tieBreak = Seq("event_id"))
-      val name = "graft_e30_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = bars.writeStream.outputMode("complete").format("memory")
-        .queryName(name).option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
+      drainToMemory(bars, "complete", "graft_e30_", ck)
         .select(col("event_type"), col("bucket_start"),
           round(col("open"), 4).as("open"), round(col("high"), 4).as("high"),
           round(col("low"), 4).as("low"), round(col("close"), 4).as("close"),
@@ -87,14 +80,7 @@ private[graft] object StreamQueries2 {
         symbols = Map("signup" -> "s", "view" -> "v", "click" -> "c",
           "purchase" -> "p", "error" -> "e"),
         pattern = "s[vc]*p", maxTail = 1 << 20)
-      val name = "graft_e27_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = matches.toDF().writeStream.outputMode("append").format("memory")
-        .queryName(name).option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
+      drainToMemory(matches.toDF(), "append", "graft_e27_", ck)
         .groupBy("user_id")
         .agg(sum(col("n_new_matches")).as("total_matches"))
         .orderBy("user_id")
@@ -120,14 +106,7 @@ private[graft] object StreamQueries2 {
       val agg = StreamOps.windowedAgg(stream, ts = "ts",
         watermark = "0 seconds", bucket = "1 day", groupCol = "event_type",
         valueCol = "value")
-      val name = "graft_e1_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = agg.writeStream.outputMode("complete").format("memory")
-        .queryName(name).option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
+      drainToMemory(agg, "complete", "graft_e1_", ck)
         .select(col("bucket_start"), col("event_type"), col("n"),
           round(col("sum_value"), 4).as("sum_value"))
         .orderBy("bucket_start", "event_type")
@@ -165,14 +144,8 @@ private[graft] object StreamQueries2 {
         .as[StreamOps.SessionEvent]
       val sessions = StreamOps.sessionize(s, stream,
         watermark = "0 seconds", gapSeconds = 1800)
-      val name = "graft_e2_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = sessions.toDF().writeStream.outputMode("append").format("memory")
-        .queryName(name).option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).filter(col("user_id") >= 0)
+      drainToMemory(sessions.toDF(), "append", "graft_e2_", ck)
+        .filter(col("user_id") >= 0)
         .select(col("user_id"), col("n_events"), col("duration_sec"),
           round(col("sum_value"), 4).as("sum_value"))
         .orderBy("user_id", "n_events", "duration_sec", "sum_value")
@@ -195,14 +168,7 @@ private[graft] object StreamQueries2 {
       val stream = s.readStream.schema(e.schema)
         .option("maxFilesPerTrigger", 1).parquet(in)
       val enriched = StreamOps.enrich(stream, cust, "c_custkey")
-      val name = "graft_e3_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = enriched.writeStream.outputMode("append").format("memory")
-        .queryName(name).option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
+      drainToMemory(enriched, "append", "graft_e3_", ck)
         .select(col("event_id"), col("c_custkey"), col("c_mktsegment"),
           round(col("c_acctbal"), 4).as("acctbal"))
         .orderBy("event_id")
@@ -236,14 +202,8 @@ private[graft] object StreamQueries2 {
       val stream = s.readStream.schema(e.schema)
         .option("maxFilesPerTrigger", 1).parquet(in)
       val deduped = StreamOps.streamDedup(stream, "ts", "3650 days", "event_id")
-      val name = "graft_e4_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = deduped.writeStream.outputMode("append").format("memory")
-        .queryName(name).option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).select(col("event_id"), col("event_type"))
+      drainToMemory(deduped, "append", "graft_e4_", ck)
+        .select(col("event_id"), col("event_type"))
         .orderBy("event_id")
     }),
 
@@ -282,14 +242,8 @@ private[graft] object StreamQueries2 {
       val joined = StreamOps.intervalJoin(sp, sv, leftKey = "p_user",
         rightKey = "v_user", leftTs = "pts", rightTs = "vts",
         watermark = "0 seconds", maxGap = "1 hour")
-      val name = "graft_e5_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = joined.writeStream.outputMode("append").format("memory")
-        .queryName(name).option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).select(col("p_id"), col("v_id")).orderBy("p_id", "v_id")
+      drainToMemory(joined, "append", "graft_e5_", ck)
+        .select(col("p_id"), col("v_id")).orderBy("p_id", "v_id")
     }),
 
     // E20 — streaming rolling z-score alerts through the REAL
@@ -316,14 +270,7 @@ private[graft] object StreamQueries2 {
         .as[StreamOps.ScoreEvent]
       val alerts = StreamOps.zScoreAlerts(s, stream, watermark = "0 seconds",
         lookback = 3, zThreshold = 2.0, stateTtlSeconds = 315360000L)
-      val name = "graft_e20_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = alerts.toDF().writeStream.outputMode("append").format("memory")
-        .queryName(name).option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
+      drainToMemory(alerts.toDF(), "append", "graft_e20_", ck)
         .select(col("user_id"), col("ts"), round(col("value"), 4).as("value"),
           round(col("z"), 4).as("z"))
         .orderBy("user_id", "ts", "value")
@@ -435,14 +382,8 @@ private[graft] object StreamQueries2 {
       val sess = StreamOps.sessionWindowAgg(stream, ts = "ts",
         watermark = "0 seconds", gap = "30 minutes", groupCol = "user_id",
         valueCol = "value")
-      val name = "graft_e35_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = sess.writeStream.outputMode("append").format("memory")
-        .queryName(name).option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).filter(col("user_id") >= 0)
+      drainToMemory(sess, "append", "graft_e35_", ck)
+        .filter(col("user_id") >= 0)
         .select(col("user_id"), col("session_start"), col("n_events"),
           round(col("sum_value"), 4).as("sum_value"))
         .orderBy("user_id", "session_start")
@@ -659,14 +600,8 @@ private[graft] object StreamQueries2 {
         .as[StreamOps.ScoreEvent]
       val alerts = StreamOps.silenceAlerts(s, stream,
         watermark = "0 seconds", gapSeconds = gapSec)
-      val name = "graft_e21_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = alerts.toDF().writeStream.outputMode("append").format("memory")
-        .queryName(name).option("checkpointLocation", ck)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).filter(col("user_id") >= 0)
+      drainToMemory(alerts.toDF(), "append", "graft_e21_", ck)
+        .filter(col("user_id") >= 0)
         .select(col("user_id"),
           unix_timestamp(col("last_seen")).as("last_seen_sec"), col("gap_sec"))
         .orderBy("user_id", "last_seen_sec")

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.operators.{Lineage, Scans}
 import graft.text.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -108,26 +109,6 @@ object Dedup {
     (Math.floorMod(mix(i + 1), P - 1) + 1, Math.floorMod(mix(i + 0x10001), P))
   }
 
-  /** MinHash signature of the document's word-3-gram set as a per-row
-    * column expression: for each of `numHashes` universal-hash functions,
-    * min over shingles of (a·(xxhash64(s) mod P) + b) mod P. No shuffle —
-    * useful for signature-only outputs. For candidate GENERATION prefer
-    * [[minHashCandidates]], whose explode + hash-aggregate formulation is
-    * codegen'd end-to-end. */
-  def minHashSignature(text: Column, numHashes: Int): Column = {
-    val hashes = transform(TextFunctions.shingles(text, 3), s => pmod(xxhash64(s), lit(P)))
-    val params = array((0 until numHashes).map { i =>
-      val (a, b) = hashParams(i)
-      struct(lit(a).as("a"), lit(b).as("b"))
-    }: _*)
-    val folded = aggregate(hashes, array_repeat(lit(P), numHashes),
-      (acc, h) => zip_with(acc, params,
-        (m, p) => least(m, pmod(h * p.getField("a") + p.getField("b"), lit(P)))))
-    // cheap guard (tokenize only, no shingle/hash work): <3 tokens ⇒ no
-    // shingles ⇒ signature undefined
-    when(size(TextFunctions.tokens(text)) >= 3, folded)
-  }
-
   /** LSH band keys from a MinHash signature: `numBands` strings, each
     * hashing `rowsPerBand` consecutive signature values. Two documents
     * with Jaccard j collide in ≥1 band with prob 1-(1-j^r)^b. */
@@ -176,12 +157,22 @@ object Dedup {
     * must only run on scan-shaped frames). */
   private def shingleHashes(df: DataFrame, id: Column, text: Column, k: Int,
                             spreadInput: Boolean = false): DataFrame = {
-    val base0 = df.select(id.as("doc_id"), text.as("__t"))
-    val base = if (spreadInput) graft.operators.Scans.spread(base0, col("doc_id")) else base0
-    base.select(col("doc_id"), TextFunctions.tokens(col("__t")).as("__toks"))
-      .select(col("doc_id"), explode(TextFunctions.shinglesOf(col("__toks"), k)).as("gs"))
+    val toks = if (spreadInput) docTokens(df, id, text)
+      else df.select(id.as("doc_id"), TextFunctions.tokens(text).as("__t"))
+    toks.select(col("doc_id"), explode(TextFunctions.shinglesOf(col("__t"), k)).as("gs"))
       .select(col("doc_id"), xxhash64(col("gs")).as("g"))
   }
+
+  /** (doc_id, __t) token table of a raw narrow scan: the (id, text)
+    * projection is spread to session parallelism (r14,
+    * [[graft.operators.Scans.spread]]) so the tokenize + per-window hash
+    * work does not fuse into one task on a single-row-group input
+    * (guide §2.5 input skew; a structural no-op on many-split
+    * production scans), and the tokens are staged in their own
+    * projection before any shingle HOF reads them. */
+  private def docTokens(df: DataFrame, id: Column, text: Column): DataFrame =
+    Scans.spread(df.select(id.as("doc_id"), text.as("__tx")), col("doc_id"))
+      .select(col("doc_id"), TextFunctions.tokens(col("__tx")).as("__t"))
 
   /** MinHash+LSH candidate pairs: (doc_a < doc_b, n_bands collided).
     *
@@ -213,13 +204,8 @@ object Dedup {
     val rowsPerBand = numHashes / numBands
     // Non-distinct shingles: the running minimum is unchanged by
     // duplicates, so the O(n²) array_distinct pass is skipped.
-    // spread (r14): the shingle+32-minhash work fuses into the scan —
-    // one task on a single-row-group input (guide §2.5 input skew);
-    // structural no-op on many-split production scans.
-    val grams = graft.operators.Scans
-      .spread(df.select(id.as("doc_id"), text.as("__t")), col("doc_id"))
-      .select(col("doc_id"), TextFunctions.tokens(col("__t")).as("__toks"))
-      .select(col("doc_id"), explode(TextFunctions.shinglesAllOf(col("__toks"), 3)).as("gs"))
+    val grams = docTokens(df, id, text)
+      .select(col("doc_id"), explode(TextFunctions.shinglesAllOf(col("__t"), 3)).as("gs"))
       .select(col("doc_id"), pmod(xxhash64(col("gs")), lit(P)).as("h"))
     val minCols = (0 until numHashes).map { i =>
       val (a, b) = hashParams(i)
@@ -242,7 +228,7 @@ object Dedup {
     // dedupe the copies (measured: the explosion executed twice). The
     // materialized table is numBands small rows per document —
     // negligible next to re-shingling the corpus.
-    val bands = graft.operators.Lineage.truncate(bandTable(df, id, text, numHashes, numBands))
+    val bands = Lineage.truncate(bandTable(df, id, text, numHashes, numBands))
     val a = bands.select(col("band"), col("doc_id").as("doc_a"))
     val b = bands.select(col("band"), col("doc_id").as("doc_b"))
     a.join(b, Seq("band")).filter(col("doc_a") < col("doc_b"))
@@ -315,12 +301,8 @@ object Dedup {
     * array accumulator.) Carries cannot cross fields: every field ≤
     * n_tokens < 2^30, enforced post-aggregate per document. */
   def simHashSignatures(df: DataFrame, id: Column, text: Column): DataFrame = {
-    // spread (r14): the per-token md5 signature work fuses into the
-    // scan — one task on a single-row-group input (guide §2.5);
-    // structural no-op on many-split production scans.
-    val toks = graft.operators.Scans
-      .spread(df.select(id.as("doc_id"), text.as("__t")), col("doc_id"))
-      .select(col("doc_id"), explode(TextFunctions.tokens(col("__t"))).as("w"))
+    val toks = docTokens(df, id, text)
+      .select(col("doc_id"), explode(col("__t")).as("w"))
       .select(col("doc_id"), tokenHash60(col("w")).as("h"))
     val packs = (0 until SimHashBits / 2).map { j =>
       val fields = (0 until 2).map { i =>
@@ -409,6 +391,16 @@ object Dedup {
       threshold: Double,
       k: Int = 3,
       maxDf: Int = 1000): DataFrame = {
+    val (inter, sizes) = shingleOverlaps(df, id, text, k, maxDf)
+    scoreJaccard(inter, sizes, threshold)
+  }
+
+  /** The inverted-index self-join shared by [[jaccardPairs]] and
+    * [[containmentPairs]]: (doc_a < doc_b, inter) shared-shingle counts
+    * and (doc_id, n) set sizes, both over the shingle universe capped
+    * at document frequency `maxDf`. */
+  private def shingleOverlaps(df: DataFrame, id: Column, text: Column, k: Int,
+                              maxDf: Int): (DataFrame, DataFrame) = {
     require(maxDf > 0, "maxDf must be positive (use NoDfCap to disable the stop-shingle cap)")
     // The raw shingle table feeds the df-cap AND the capped survivor
     // set, which itself has three consumers (sizes + both join sides) —
@@ -417,22 +409,21 @@ object Dedup {
     // stays a groupBy+semi-join, NOT a window count: partial
     // aggregation is what absorbs the very stop-shingle skew the cap
     // exists to remove. Materializing doc-distinct shingle hashes is
-    // within this operator's documented small-corpus contract (the
+    // within these operators' documented small-corpus contract (the
     // corpus-scale path is minHashCandidates → jaccardVerify).
-    val sh0 = graft.operators.Lineage.truncate(
-      shingleHashes(df, id, text, k, spreadInput = true))
+    val sh0 = Lineage.truncate(shingleHashes(df, id, text, k, spreadInput = true))
     // NoDfCap skips the df-count job entirely
     val sh = if (maxDf == NoDfCap) sh0 else {
       val keep = sh0.groupBy("g").agg(count(lit(1)).as("__df"))
         .filter(col("__df") <= maxDf).select("g")
-      graft.operators.Lineage.truncate(sh0.join(keep, Seq("g"), "left_semi"))
+      Lineage.truncate(sh0.join(keep, Seq("g"), "left_semi"))
     }
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val a = sh.select(col("g"), col("doc_id").as("doc_a"))
     val b = sh.select(col("g"), col("doc_id").as("doc_b"))
     val inter = a.join(b, Seq("g")).filter(col("doc_a") < col("doc_b"))
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-    scoreJaccard(inter, sizes, threshold)
+    (inter, sizes)
   }
 
   /** Attach set sizes to (doc_a, doc_b, inter) rows, compute the set
@@ -474,19 +465,8 @@ object Dedup {
       threshold: Double,
       k: Int = 3,
       maxDf: Int = 1000): DataFrame = {
-    require(maxDf > 0, "maxDf must be positive (use NoDfCap to disable the stop-shingle cap)")
-    val sh0 = graft.operators.Lineage.truncate(
-      shingleHashes(df, id, text, k, spreadInput = true))
-    val sh = if (maxDf == NoDfCap) sh0 else {
-      val keep = sh0.groupBy("g").agg(count(lit(1)).as("__df"))
-        .filter(col("__df") <= maxDf).select("g")
-      graft.operators.Lineage.truncate(sh0.join(keep, Seq("g"), "left_semi"))
-    }
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val a = sh.select(col("g"), col("doc_id").as("doc_a"))
-    val b = sh.select(col("g"), col("doc_id").as("doc_b"))
-    a.join(b, Seq("g")).filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
+    val (inter, sizes) = shingleOverlaps(df, id, text, k, maxDf)
+    inter
       .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")
       .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
       .withColumn("containment", col("inter").cast("double") / least(col("n_a"), col("n_b")))
@@ -606,7 +586,6 @@ object Dedup {
   }
 
   def clusterPairs(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    import graft.operators.Lineage
     // Truncate the PAIR table itself, exactly once: `nodes` and `edges`
     // both consume it, and the producing pipeline (e.g. MinHash bands +
     // exact-Jaccard verify) is routinely the most expensive plan in the
@@ -681,14 +660,14 @@ object Dedup {
     * truncation itself (r14) — the count the convergence gate needs,
     * without a separate job over the just-checkpointed table. */
   private[graft] def starRoundCounted(edges: DataFrame): (DataFrame, Long) = {
-    val (out, m) = graft.operators.Lineage.truncateObserved(
+    val (out, m) = Lineage.truncateObserved(
       starRoundBody(edges, truncate = true), count(lit(1)).as("n"))
     (out, m("n").asInstanceOf[Long])
   }
 
   private def starRoundBody(edges: DataFrame, truncate: Boolean): DataFrame = {
     def cut(df: DataFrame): DataFrame =
-      if (truncate) graft.operators.Lineage.truncate(df) else df
+      if (truncate) Lineage.truncate(df) else df
     // large-star over the symmetrized edges: per center u, point every
     // neighbor v > u at m = min(u, min neighbors). Output stays
     // high→low oriented (v > u ≥ m). NO dedup here: duplicate (v, m)
@@ -737,12 +716,12 @@ object Dedup {
     // - the candidate shingles: consumed by the sizes aggregate and
     //   both pair sides — bounded by the near-dup cluster members'
     //   shingles, not the corpus, because the semi-join prunes first.
-    val pairs = graft.operators.Lineage.truncate(
+    val pairs = Lineage.truncate(
       candidates.select(col("doc_a"), col("doc_b")))
     val ids = pairs.select(col("doc_a").as("__cid"))
       .union(pairs.select(col("doc_b").as("__cid"))).distinct()
     val docs = df.join(ids, id === col("__cid"), "left_semi")
-    val sh = graft.operators.Lineage.truncate(shingleHashes(docs, id, text, k))
+    val sh = Lineage.truncate(shingleHashes(docs, id, text, k))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val a = sh.select(col("doc_id").as("doc_a"), col("g"))
     val b = sh.select(col("doc_id").as("doc_b"), col("g"))
@@ -785,14 +764,10 @@ object Dedup {
     * duplicated.) */
   def duplicatedSpanStats(df: DataFrame, id: Column, text: Column, w: Int = 4): DataFrame = {
     require(w >= 1, s"window width must be >= 1, got $w")
-    // spread (r14): the tokenize + per-window md5 work fuses into the
-    // scan — one task on a single-row-group input (guide §2.5)
-    val grams = graft.operators.Scans
-      .spread(df.select(id.as("doc_id"), text.as("__tx")), col("doc_id"))
-      .select(col("doc_id"), TextFunctions.tokens(col("__tx")).as("__toks"))
-      .select(col("doc_id"), explode(TextFunctions.shinglesAllOf(col("__toks"), w)).as("__g"))
+    val grams = docTokens(df, id, text)
+      .select(col("doc_id"), explode(TextFunctions.shinglesAllOf(col("__t"), w)).as("__g"))
       .select(col("doc_id"), unhex(md5(col("__g"))).as("__gh"))
-    val perDoc = graft.operators.Lineage.truncate(
+    val perDoc = Lineage.truncate(
       grams.groupBy("doc_id", "__gh").agg(count(lit(1)).as("__cnt")))
     // doc-distinct per gram, so count(*) per gram IS its document
     // frequency; only the (typically rare) duplicated grams join back
@@ -840,42 +815,51 @@ object Dedup {
     * sweep — O(tokens + starts) per row inside whole-stage codegen
     * (the interpreted filter/exists HOF pair it replaced re-walked the
     * start array once per token). */
-  def removeDuplicatedSpans(df: DataFrame, id: Column, text: Column, w: Int = 4): DataFrame = {
+  def removeDuplicatedSpans(df: DataFrame, id: Column, text: Column, w: Int = 4): DataFrame =
+    removeSpans(df, id, text, w) { grams =>
+      val perDoc = Lineage.truncate(
+        grams.groupBy("doc_id", "__gh").agg(collect_list(col("__pos")).as("__ps")))
+      val dup = perDoc.groupBy("__gh").agg(count(lit(1)).as("__ndocs"))
+        .filter(col("__ndocs") >= 2)
+        .select(col("__gh"))
+      perDoc.join(dup, Seq("__gh"), "left_semi")
+        .select(col("doc_id"), explode(col("__ps")).as("__pos"))
+    }
+
+  /** The plan every span remover shares: tokens staged once
+    * ([[docTokens]]), w-gram occurrences as (doc_id, __pos, __gh) with
+    * the gram reduced to its 128-bit md5 inside the scan, the
+    * occurrences the `drop` policy picks collected into sorted per-doc
+    * start arrays, and the native
+    * [[graft.expressions.SpanExpressions.spanMask]] sweep over the
+    * tokens. Emits one row per document:
+    * (doc_id, clean_text, n_tokens, n_kept). */
+  private def removeSpans(df: DataFrame, id: Column, text: Column, w: Int)(
+      drop: DataFrame => DataFrame): DataFrame = {
     require(w >= 1, s"window width must be >= 1, got $w")
-    // spread (r14): the tokenize + per-window md5 work fuses into the
-    // scan — one task on a single-row-group input (guide §2.5 input
-    // skew); structural no-op on many-split production scans. The mask
-    // side below inherits the same parallelism (its dupStarts join is
-    // broadcast-sized, preserving the probe side's partitioning).
     // Truncated (r14 session 2): toks has TWO plan parents (the gram
     // explosion and the final mask join), so tokenize + the spread
-    // exchange ran twice — the d31b fix applied here too.
-    val toks = graft.operators.Lineage.truncate(graft.operators.Scans
-      .spread(df.select(id.as("doc_id"), text.as("__tx")), col("doc_id"))
-      .select(col("doc_id"), TextFunctions.tokens(col("__tx")).as("__t")))
+    // exchange ran twice — the d31b fix. The mask side inherits the
+    // spread parallelism (its starts join is broadcast-sized,
+    // preserving the probe side's partitioning).
+    val toks = Lineage.truncate(docTokens(df, id, text))
     val grams = toks
       .select(col("doc_id"), posexplode(TextFunctions.shinglesAllOf(col("__t"), w)))
       .select(col("doc_id"), col("pos").as("__pos"), unhex(md5(col("col"))).as("__gh"))
-    val perDoc = graft.operators.Lineage.truncate(
-      grams.groupBy("doc_id", "__gh").agg(collect_list(col("__pos")).as("__ps")))
-    val dup = perDoc.groupBy("__gh").agg(count(lit(1)).as("__ndocs"))
-      .filter(col("__ndocs") >= 2)
-      .select(col("__gh"))
-    val dupStarts = perDoc.join(dup, Seq("__gh"), "left_semi")
-      .select(col("doc_id"), explode(col("__ps")).as("__pos"))
+    val starts = drop(grams)
       .groupBy("doc_id").agg(sort_array(collect_set(col("__pos"))).as("__starts"))
-    val masked = toks.join(dupStarts, Seq("doc_id"), "left")
+    toks.join(starts, Seq("doc_id"), "left")
       .withColumn("__starts", coalesce(col("__starts"), array().cast("array<int>")))
-      // token at 0-based index i survives iff no duplicated window
+      // token at 0-based index i survives iff no dropped window
       // starting at s covers it (s <= i <= s + w - 1): the native
       // sorted-merge sweep, O(tokens + starts) — the HOF filter/exists
       // pair it replaced re-walked the starts per token
       .withColumn("__kept", graft.expressions.SpanExpressions.spanMask(
         col("__t"), col("__starts"), w))
-    masked.select(col("doc_id"),
-      array_join(col("__kept"), " ").as("clean_text"),
-      size(col("__t")).cast("long").as("n_tokens"),
-      size(col("__kept")).cast("long").as("n_kept"))
+      .select(col("doc_id"),
+        array_join(col("__kept"), " ").as("clean_text"),
+        size(col("__t")).cast("long").as("n_tokens"),
+        size(col("__kept")).cast("long").as("n_kept"))
   }
 
   /** Duplicated-span removal, CANONICAL-OWNER policy — the variant
@@ -895,41 +879,18 @@ object Dedup {
     * task), and non-owner occurrences come from the inner join back to
     * the truncated per-(doc, gram) table. Deterministic: min-id
     * ownership needs no tie-break. */
-  def removeDuplicatedSpansKeepFirst(df: DataFrame, id: Column, text: Column, w: Int = 4): DataFrame = {
-    require(w >= 1, s"window width must be >= 1, got $w")
-    // toks has TWO plan parents (the gram explosion and the final mask
-    // join), so tokenization ran twice, both times fused into the
-    // single-split scan (profiled: a 0.71 s one-task job). Spread +
-    // truncate: tokenize once, 32-way, both consumers read the
-    // materialized blocks. (The r14 session-1 bare spread regressed
-    // because each consumer re-ran the exchange subtree; the truncate
-    // is what makes the spread pay here.)
-    val toks = graft.operators.Lineage.truncate(
-      graft.operators.Scans.spread(
-          df.select(id.as("doc_id"), text.as("__tx")), col("doc_id"))
-        .select(col("doc_id"), TextFunctions.tokens(col("__tx")).as("__t")))
-    val grams = toks
-      .select(col("doc_id"), posexplode(TextFunctions.shinglesAllOf(col("__t"), w)))
-      .select(col("doc_id"), col("pos").as("__pos"), unhex(md5(col("col"))).as("__gh"))
-    val perDoc = graft.operators.Lineage.truncate(
-      grams.groupBy("doc_id", "__gh").agg(collect_list(col("__pos")).as("__ps")))
-    val owners = perDoc.groupBy("__gh")
-      .agg(count(lit(1)).as("__ndocs"), min("doc_id").as("__owner"))
-      .filter(col("__ndocs") >= 2)
-      .select(col("__gh"), col("__owner"))
-    val dupStarts = perDoc.join(owners, Seq("__gh"))
-      .filter(col("doc_id") =!= col("__owner"))
-      .select(col("doc_id"), explode(col("__ps")).as("__pos"))
-      .groupBy("doc_id").agg(sort_array(collect_set(col("__pos"))).as("__starts"))
-    val masked = toks.join(dupStarts, Seq("doc_id"), "left")
-      .withColumn("__starts", coalesce(col("__starts"), array().cast("array<int>")))
-      .withColumn("__kept", graft.expressions.SpanExpressions.spanMask(
-        col("__t"), col("__starts"), w))
-    masked.select(col("doc_id"),
-      array_join(col("__kept"), " ").as("clean_text"),
-      size(col("__t")).cast("long").as("n_tokens"),
-      size(col("__kept")).cast("long").as("n_kept"))
-  }
+  def removeDuplicatedSpansKeepFirst(df: DataFrame, id: Column, text: Column, w: Int = 4): DataFrame =
+    removeSpans(df, id, text, w) { grams =>
+      val perDoc = Lineage.truncate(
+        grams.groupBy("doc_id", "__gh").agg(collect_list(col("__pos")).as("__ps")))
+      val owners = perDoc.groupBy("__gh")
+        .agg(count(lit(1)).as("__ndocs"), min("doc_id").as("__owner"))
+        .filter(col("__ndocs") >= 2)
+        .select(col("__gh"), col("__owner"))
+      perDoc.join(owners, Seq("__gh"))
+        .filter(col("doc_id") =!= col("__owner"))
+        .select(col("doc_id"), explode(col("__ps")).as("__pos"))
+    }
 
   /** Soft dedup — duplicate-aware sampling WEIGHTS instead of dropping:
     * every document gets `weight = 1/|near-dup cluster|` (singletons
@@ -1000,7 +961,7 @@ object Dedup {
     // and the executed shape can't flap on AQE exchange-reuse timing
     // (the c20/§6d single-parent rule; observed as a one-off golden
     // drift under suite load in r9)
-    val pairs = graft.operators.Lineage.truncate(
+    val pairs = Lineage.truncate(
       jaccardVerify(minHashCandidates(df, id, text), df, id, text, threshold))
     val clusters = clusterPairs(pairs)
     val sizes = clusters.groupBy("cluster_id").agg(count(lit(1)).as("n_members"))
@@ -1032,38 +993,15 @@ object Dedup {
     * uniformly-distributed 16-byte hash, no skew). Emits one row per
     * training document: (doc_id, clean_text, n_tokens, n_kept). */
   def removeContaminatedSpans(df: DataFrame, evalDf: DataFrame, id: Column,
-                              text: Column, evalText: Column, w: Int = 4): DataFrame = {
-    require(w >= 1, s"window width must be >= 1, got $w")
-    // spread (r14): the tokenize + per-window md5 work fuses into the
-    // scan — one task on a single-row-group input (guide §2.5 input
-    // skew); structural no-op on many-split production scans. The mask
-    // side below inherits the same parallelism (its dupStarts join is
-    // broadcast-sized, preserving the probe side's partitioning).
-    // Truncated (r14 session 2): toks has TWO plan parents (the gram
-    // explosion and the final mask join), so tokenize + the spread
-    // exchange ran twice — the d31b fix applied here too.
-    val toks = graft.operators.Lineage.truncate(graft.operators.Scans
-      .spread(df.select(id.as("doc_id"), text.as("__tx")), col("doc_id"))
-      .select(col("doc_id"), TextFunctions.tokens(col("__tx")).as("__t")))
-    val grams = toks
-      .select(col("doc_id"), posexplode(TextFunctions.shinglesAllOf(col("__t"), w)))
-      .select(col("doc_id"), col("pos").as("__pos"), unhex(md5(col("col"))).as("__gh"))
-    val evalGrams = evalDf
-      .select(TextFunctions.shinglesAllOf(TextFunctions.tokens(evalText), w).as("__eg"))
-      .select(explode(col("__eg")).as("__g"))
-      .select(unhex(md5(col("__g"))).as("__gh"))
-      .distinct()
-    val starts = grams.join(broadcast(evalGrams), Seq("__gh"), "left_semi")
-      .groupBy("doc_id").agg(sort_array(collect_set(col("__pos"))).as("__starts"))
-    val masked = toks.join(starts, Seq("doc_id"), "left")
-      .withColumn("__starts", coalesce(col("__starts"), array().cast("array<int>")))
-      .withColumn("__kept", graft.expressions.SpanExpressions.spanMask(
-        col("__t"), col("__starts"), w))
-    masked.select(col("doc_id"),
-      array_join(col("__kept"), " ").as("clean_text"),
-      size(col("__t")).cast("long").as("n_tokens"),
-      size(col("__kept")).cast("long").as("n_kept"))
-  }
+                              text: Column, evalText: Column, w: Int = 4): DataFrame =
+    removeSpans(df, id, text, w) { grams =>
+      val evalGrams = evalDf
+        .select(TextFunctions.shinglesAllOf(TextFunctions.tokens(evalText), w).as("__eg"))
+        .select(explode(col("__eg")).as("__g"))
+        .select(unhex(md5(col("__g"))).as("__gh"))
+        .distinct()
+      grams.join(broadcast(evalGrams), Seq("__gh"), "left_semi")
+    }
 
   /** D91 — EXACT-substring dedup at ≥k-token granularity (Lee et al.
     * 2021, "Deduplicating Training Data Makes Language Models Better"):
@@ -1097,46 +1035,28 @@ object Dedup {
     * the mask is the native [[graft.expressions.SpanMask]] sweep. At
     * the canonical k = 50 the gram table is ~(tokens − 49) × 24 B rows
     * — the same budget §5b prices for D28. */
-  def exactSubstringDedup(df: DataFrame, id: Column, text: Column, k: Int = 50): DataFrame = {
-    require(k >= 1, s"substring granularity must be >= 1 token, got $k")
-    // the d31/d31b/d59 treatment: toks has two plan parents (gram
-    // explosion + mask join) and fuses into the single-split scan, so
-    // tokenize ran twice on one task — spread + truncate once
-    val toks = graft.operators.Lineage.truncate(graft.operators.Scans
-      .spread(df.select(id.as("doc_id"), text.as("__tx")), col("doc_id"))
-      .select(col("doc_id"), TextFunctions.tokens(col("__tx")).as("__t")))
-    val grams = toks
-      .select(col("doc_id"), posexplode(TextFunctions.shinglesAllOf(col("__t"), k)))
-      .select(col("doc_id"), col("pos").as("__pos"), unhex(md5(col("col"))).as("__gh"))
-    val perDoc = graft.operators.Lineage.truncate(
-      grams.groupBy("doc_id", "__gh")
-        .agg(sort_array(collect_list(col("__pos"))).as("__ps"),
-          count(lit(1)).as("__n")))
-    val dup = perDoc.groupBy("__gh")
-      .agg(sum(col("__n")).as("__nocc"),
-        min(struct(col("doc_id").as("d"),
-          element_at(col("__ps"), 1).as("p"))).as("__own"))
-      .filter(col("__nocc") >= 2)
-      .select(col("__gh"), col("__own"))
-    val dropStarts = perDoc.join(dup, Seq("__gh"))
-      .select(col("doc_id"),
-        // the globally-first occurrence survives: the owner doc sheds
-        // only the owner POSITION (its other repeats of the same gram
-        // are still duplicates); per-(doc, gram) arrays are bounded by
-        // within-document repeats of one gram, so the HOF is row-local
-        explode(when(col("doc_id") === col("__own.d"),
-            filter(col("__ps"), p => p =!= col("__own.p")))
-          .otherwise(col("__ps"))).as("__pos"))
-      .groupBy("doc_id").agg(sort_array(collect_set(col("__pos"))).as("__starts"))
-    val masked = toks.join(dropStarts, Seq("doc_id"), "left")
-      .withColumn("__starts", coalesce(col("__starts"), array().cast("array<int>")))
-      .withColumn("__kept", graft.expressions.SpanExpressions.spanMask(
-        col("__t"), col("__starts"), k))
-    masked.select(col("doc_id"),
-      array_join(col("__kept"), " ").as("clean_text"),
-      size(col("__t")).cast("long").as("n_tokens"),
-      size(col("__kept")).cast("long").as("n_kept"))
-  }
+  def exactSubstringDedup(df: DataFrame, id: Column, text: Column, k: Int = 50): DataFrame =
+    removeSpans(df, id, text, k) { grams =>
+      val perDoc = Lineage.truncate(
+        grams.groupBy("doc_id", "__gh")
+          .agg(sort_array(collect_list(col("__pos"))).as("__ps"),
+            count(lit(1)).as("__n")))
+      val dup = perDoc.groupBy("__gh")
+        .agg(sum(col("__n")).as("__nocc"),
+          min(struct(col("doc_id").as("d"),
+            element_at(col("__ps"), 1).as("p"))).as("__own"))
+        .filter(col("__nocc") >= 2)
+        .select(col("__gh"), col("__own"))
+      perDoc.join(dup, Seq("__gh"))
+        .select(col("doc_id"),
+          // the globally-first occurrence survives: the owner doc sheds
+          // only the owner POSITION (its other repeats of the same gram
+          // are still duplicates); per-(doc, gram) arrays are bounded by
+          // within-document repeats of one gram, so the HOF is row-local
+          explode(when(col("doc_id") === col("__own.d"),
+              filter(col("__ps"), p => p =!= col("__own.p")))
+            .otherwise(col("__ps"))).as("__pos"))
+    }
 
   /** Cross-document PARAGRAPH dedup with document reassembly — the
     * RefinedWeb/C4 granularity between whole-document dedup
@@ -1160,18 +1080,28 @@ object Dedup {
     * corpus-frequency key). Reassembly groups by doc id, a partition
     * bounded by each document's own paragraph count. */
   def paragraphDedup(df: DataFrame, id: Column, text: Column): DataFrame = {
-    val paras = df
-      .select(id.as("doc_id"), posexplode(split(coalesce(text, lit("")), "\n{2,}")))
+    val staged = Lineage.truncate(paragraphs(df, id, text))
+    val winners = staged.groupBy("__fp")
+      .agg(min(struct(col("doc_id"), col("__pos"))).as("__win"))
+    reassemble(staged.join(winners, Seq("__fp"))
+      .withColumn("__keep",
+        col("doc_id") === col("__win.doc_id") && col("__pos") === col("__win.__pos")))
+  }
+
+  /** (doc_id, __pos, __p, __fp): the non-blank blank-line-separated
+    * paragraphs of each document with their position and the md5 of
+    * their normalized content. */
+  private def paragraphs(df: DataFrame, id: Column, text: Column): DataFrame =
+    df.select(id.as("doc_id"), posexplode(split(coalesce(text, lit("")), "\n{2,}")))
       .filter(length(trim(col("col"))) > 0)
       .select(col("doc_id"), col("pos").as("__pos"), col("col").as("__p"),
         unhex(md5(TextFunctions.normalize(col("col")))).as("__fp"))
-    val staged = graft.operators.Lineage.truncate(paras)
-    val winners = staged.groupBy("__fp")
-      .agg(min(struct(col("doc_id"), col("__pos"))).as("__win"))
-    staged.join(winners, Seq("__fp"))
-      .withColumn("__keep",
-        col("doc_id") === col("__win.doc_id") && col("__pos") === col("__win.__pos"))
-      .groupBy("doc_id")
+
+  /** One row per document from its judged paragraphs
+    * (doc_id, __pos, __p, __keep): (doc_id, n_paras, n_kept,
+    * clean_text), the kept paragraphs rejoined in original order. */
+  private def reassemble(judged: DataFrame): DataFrame =
+    judged.groupBy("doc_id")
       .agg(
         count(lit(1)).as("n_paras"),
         sum(when(col("__keep"), 1L).otherwise(0L)).as("n_kept"),
@@ -1179,15 +1109,12 @@ object Dedup {
           transform(
             array_sort(collect_list(when(col("__keep"), struct(col("__pos"), col("__p"))))),
             s => s.getField("__p"))).as("clean_text"))
-  }
 
   /** (para_hash) index of a corpus's paragraph fingerprints — persist
     * this (parquet, bucketed by hash) as the paragraph-dedup state. */
   def paragraphIndex(df: DataFrame, text: Column): DataFrame =
-    df.select(posexplode(split(coalesce(text, lit("")), "\n{2,}")))
-      .filter(length(trim(col("col"))) > 0)
-      .select(unhex(md5(TextFunctions.normalize(col("col")))).as("para_hash"))
-      .distinct()
+    // no id: only the fingerprints are kept, so the optimizer prunes it
+    paragraphs(df, lit(null), text).select(col("__fp").as("para_hash")).distinct()
 
   /** Incremental paragraph dedup — [[exactDedupAgainst]]'s day-2
     * discipline applied to [[paragraphDedup]]: a NEW batch's paragraph
@@ -1202,26 +1129,13 @@ object Dedup {
     * survivors to advance the state. */
   def paragraphDedupAgainst(newDocs: DataFrame, id: Column, text: Column,
                             index: DataFrame): DataFrame = {
-    val paras = newDocs
-      .select(id.as("doc_id"), posexplode(split(coalesce(text, lit("")), "\n{2,}")))
-      .filter(length(trim(col("col"))) > 0)
-      .select(col("doc_id"), col("pos").as("__pos"), col("col").as("__p"),
-        unhex(md5(TextFunctions.normalize(col("col")))).as("__fp"))
-    val staged = graft.operators.Lineage.truncate(paras)
+    val staged = Lineage.truncate(paragraphs(newDocs, id, text))
     val winners = staged.groupBy("__fp")
       .agg(min(struct(col("doc_id"), col("__pos"))).as("__win"))
       .join(index.select(col("para_hash").as("__fp")), Seq("__fp"), "left_anti")
-    staged.join(winners, Seq("__fp"), "left")
+    reassemble(staged.join(winners, Seq("__fp"), "left")
       .withColumn("__keep",
         col("__win").isNotNull &&
-          col("doc_id") === col("__win.doc_id") && col("__pos") === col("__win.__pos"))
-      .groupBy("doc_id")
-      .agg(
-        count(lit(1)).as("n_paras"),
-        sum(when(col("__keep"), 1L).otherwise(0L)).as("n_kept"),
-        concat_ws("\n\n",
-          transform(
-            array_sort(collect_list(when(col("__keep"), struct(col("__pos"), col("__p"))))),
-            s => s.getField("__p"))).as("clean_text"))
+          col("doc_id") === col("__win.doc_id") && col("__pos") === col("__win.__pos")))
   }
 }

@@ -30,9 +30,6 @@ object Tmp {
   /** A fresh scratch directory under the per-JVM root. */
   def dir(prefix: String): Path = Files.createTempDirectory(root, prefix)
 
-  /** String-path convenience for the registry call sites. */
-  def dirStr(prefix: String): String = dir(prefix).toString
-
   private def deleteRecursively(f: java.io.File): Unit = {
     try {
       if (f.isDirectory) {

@@ -167,6 +167,27 @@ object StreamOps extends StreamOpsStateful {
   def writeEpoch(df: DataFrame, root: String, epochId: Long): Unit =
     df.write.mode("overwrite").parquet(s"$root/batch=$epochId")
 
+  /** The read side of [[writeEpoch]]: the COMMITTED epochs under
+    * `root` as one frame with `batch` as a partition column, or None
+    * when no epoch other than `epochId` has committed (the first epoch,
+    * or its replay). An epoch counts once its write's commit left
+    * `root/batch=<n>/_SUCCESS`; a partition a crash left behind (only
+    * `_temporary`, or files without the marker) is not read, so a
+    * replayed first epoch bootstraps instead of failing to infer a
+    * schema. Each caller applies its own epoch filter (a replay must
+    * not see its own epoch) and builds its own typed empty frame for
+    * None. */
+  def priorEpochs(spark: SparkSession, root: String, epochId: Long): Option[DataFrame] = {
+    val dir = new org.apache.hadoop.fs.Path(root)
+    val fs = HadoopFs.of(spark, dir)
+    val committed =
+      if (!fs.exists(dir)) Seq.empty
+      else fs.listStatus(dir).toSeq.map(_.getPath).filter(p =>
+        p.getName.startsWith("batch=") && fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
+    if (committed.forall(_.getName == s"batch=$epochId")) None
+    else Some(spark.read.option("basePath", root).parquet(committed.map(_.toString): _*))
+  }
+
   /** Streaming → Bronze ingest: write each micro-batch Hive-partitioned
     * by `ingestion_date` derived from event time — the streaming mouth
     * of the [[graft.etl.Medallion]] layer (downstream incremental
@@ -404,7 +425,9 @@ object StreamOps extends StreamOpsStateful {
       emptyIndex: () => DataFrame,
       judge: DataFrame => DataFrame,
       indexOf: DataFrame => DataFrame): Unit = {
-    val index = priorIndex(batch.sparkSession, indexPath, epochId, emptyIndex)
+    val index = priorEpochs(batch.sparkSession, indexPath, epochId)
+      .map(_.filter(col("batch") =!= lit(epochId)).drop("batch"))
+      .getOrElse(emptyIndex())
     val keptIds = judge(index).filter(col("kept")).select(col("vid"))
     val kept = batch.join(keptIds, batch(id) === col("vid"), "left_semi")
     kept.persist()
@@ -453,8 +476,9 @@ object StreamOps extends StreamOpsStateful {
         cleaned.withColumn("__q", GopherFilter.flags(col(text), minWords)), col(text), "__r")
       .filter(col("__q.keep") && col("__r.keep"))
       .drop("__q", "__r")
-    val index = priorIndex(batch.sparkSession, indexPath, epochId,
-      () => Dedup.contentHashIndex(batch.limit(0), col(text)))
+    val index = priorEpochs(batch.sparkSession, indexPath, epochId)
+      .map(_.filter(col("batch") =!= lit(epochId)).drop("batch"))
+      .getOrElse(Dedup.contentHashIndex(batch.limit(0), col(text)))
     val kept = Dedup.exactDedupAgainst(gated, col(text), index)
     kept.persist()
     try {
@@ -462,25 +486,6 @@ object StreamOps extends StreamOpsStateful {
       writeEpoch(Dedup.contentHashIndex(kept, col(text)), indexPath, epochId)
     } finally kept.unpersist()
   }
-
-  /** The PRE-batch state of an epoch-keyed persisted index: drops any
-    * half-written state of THIS epoch (crash + replay — the batch must
-    * be judged against exactly the pre-batch index). An index written
-    * by a pre-epoch-keyed layout (flat files, no `batch=` dirs) has no
-    * `batch` column — all its rows are by definition prior state, so
-    * it reads unfiltered; do NOT mix the two layouts in one directory
-    * (parquet partition discovery rejects that), start a new index
-    * path instead. A missing directory bootstraps via `emptyIndex` —
-    * a TYPED zero-row frame, keeping the first batch on the exact code
-    * path every other batch runs. */
-  private def priorIndex(spark: SparkSession, indexPath: String, epochId: Long,
-                         emptyIndex: () => DataFrame): DataFrame =
-    if (HadoopFs.exists(spark, indexPath)) {
-      val raw = spark.read.parquet(indexPath)
-      if (raw.columns.contains("batch"))
-        raw.filter(col("batch") =!= lit(epochId)).drop("batch")
-      else raw
-    } else emptyIndex()
 
   /** Streaming PARAGRAPH-dedup ingest: per micro-batch, judge arriving
     * documents' paragraphs against the persisted fingerprint index with
@@ -504,8 +509,9 @@ object StreamOps extends StreamOpsStateful {
       outRoot: String,
       indexPath: String): Unit = {
     import graft.dedup.Dedup
-    val index = priorIndex(batch.sparkSession, indexPath, epochId,
-      () => Dedup.paragraphIndex(batch.limit(0), col(text)))
+    val index = priorEpochs(batch.sparkSession, indexPath, epochId)
+      .map(_.filter(col("batch") =!= lit(epochId)).drop("batch"))
+      .getOrElse(Dedup.paragraphIndex(batch.limit(0), col(text)))
     val result = Dedup.paragraphDedupAgainst(batch, col(id), col(text), index)
     result.persist()
     try {
@@ -747,12 +753,10 @@ object StreamOps extends StreamOpsStateful {
     val cur = batch.select(col(id).as("key"),
         SnapshotDiff.digestOf(contentCols.map(batch(_))).as("digest"))
       .groupBy("key").agg(max("digest").as("digest"))
-    val prior =
-      if (HadoopFs.exists(batch.sparkSession, indexPath))
-        batch.sparkSession.read.parquet(indexPath)
-          .filter(col("batch") =!= lit(epochId))
-          .groupBy("key").agg(max_by(col("digest"), col("batch")).as("digest"))
-      else cur.limit(0)
+    val prior = priorEpochs(batch.sparkSession, indexPath, epochId)
+      .map(_.filter(col("batch") =!= lit(epochId))
+        .groupBy("key").agg(max_by(col("digest"), col("batch")).as("digest")))
+      .getOrElse(cur.limit(0))
     val classified = cur
       .join(prior.withColumnRenamed("digest", "prev_digest"), Seq("key"), "left_outer")
       .withColumn("change",
@@ -803,8 +807,9 @@ object StreamOps extends StreamOpsStateful {
     require(shards >= 1, s"need shards >= 1, got $shards")
     val spark = batch.sparkSession
     import org.apache.spark.sql.expressions.Window
-    val prior = priorIndex(spark, statePath, epochId,
-      () => spark.range(0).select(col("id").cast("int").as("shard"), col("id").as("tokens")))
+    val prior = priorEpochs(spark, statePath, epochId)
+      .map(_.filter(col("batch") =!= lit(epochId)).drop("batch"))
+      .getOrElse(spark.range(0).select(col("id").cast("int").as("shard"), col("id").as("tokens")))
       .groupBy("shard").agg(sum("tokens").as("tokens"))
     // all S shards, zero-filled, ordered lightest-first → rank → the
     // serpentine target list (tiny: S rows, collected nowhere — joined)

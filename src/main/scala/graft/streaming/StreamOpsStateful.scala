@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.etl.HadoopFs
 import java.sql.Timestamp
 import StreamOps.{ScoreEvent, ZState, ZAlert, TypedEvent, CepState, CepMatch, SilenceState, SilenceAlert,
-  writeEpoch}
+  priorEpochs, writeEpoch}
 
 /** The stateful-alerting / keyed-state half of [[StreamOps]], split
   * out along the SURVEY E-series boundary purely for file size (the
@@ -463,17 +463,13 @@ private[streaming] trait StreamOpsStateful {
       .select(explode(graft.text.TextFunctions.tokens(col(text))).as("token"))
       .filter(length(col("token")) > 0)
       .groupBy("token").agg(count(lit(1)).as("n_first_epoch"))
-    val existing = try {
-      spark.read.parquet(statePath)
-        .filter(col("batch") =!= epochId) // replay: own epoch is rewritten
-        .select("token")
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => // first epoch ever
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("token",
-              org.apache.spark.sql.types.StringType))))
-    }
+    val existing = priorEpochs(spark, statePath, epochId)
+      .map(_.filter(col("batch") =!= epochId) // replay: own epoch is rewritten
+        .select("token"))
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("token",
+            org.apache.spark.sql.types.StringType)))))
     writeEpoch(toks.join(existing, Seq("token"), "left_anti"), statePath, epochId)
   }
 
@@ -554,13 +550,11 @@ private[streaming] trait StreamOpsStateful {
       lateRoot: String): Unit = {
     val spark = batch.sparkSession
     val markerRoot = s"$onTimeRoot/_watermark"
-    val wmUs: Option[Long] =
-      try {
-        val prev = spark.read.parquet(markerRoot)
-          .filter(col("batch") < epochId)
-          .agg(max(col("max_us")).as("m")).head()
-        if (prev.isNullAt(0)) None else Some(prev.getLong(0) - delayUs)
-      } catch { case _: org.apache.spark.sql.AnalysisException => None }
+    val wmUs: Option[Long] = priorEpochs(spark, markerRoot, epochId).flatMap { markers =>
+      val prev = markers.filter(col("batch") < epochId)
+        .agg(max(col("max_us")).as("m")).head()
+      if (prev.isNullAt(0)) None else Some(prev.getLong(0) - delayUs)
+    }
     val b = batch.cache()
     try {
       val tsUs = unix_micros(col(ts).cast("timestamp"))
@@ -648,21 +642,17 @@ private[streaming] trait StreamOpsStateful {
       .groupBy(keys.map(col): _*)
       .agg(sort_array(collect_list(struct(us.as("__us"),
         col(value).cast("double").as("__x")))).as("__pts"))
-    val prior = try {
-      spark.read.parquet(statePath)
-        .filter(col("batch") =!= epochId) // replay: own epoch is rewritten
+    val prior = priorEpochs(spark, statePath, epochId)
+      .map(_.filter(col("batch") =!= epochId) // replay: own epoch is rewritten
         .groupBy(keys.map(col): _*)
         .agg(max_by(struct(col("l"), col("b"), col("n")),
           col("batch").cast("long")).as("__st"))
         .select(keys.map(col) ++ Seq(col("__st.l").as("__pl"),
-          col("__st.b").as("__pb"), col("__st.n").as("__pn")): _*)
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => // first epoch ever
-        pts.select(keys.map(col): _*).limit(0)
-          .withColumn("__pl", lit(null).cast("double"))
-          .withColumn("__pb", lit(null).cast("double"))
-          .withColumn("__pn", lit(null).cast("long"))
-    }
+          col("__st.b").as("__pb"), col("__st.n").as("__pn")): _*))
+      .getOrElse(pts.select(keys.map(col): _*).limit(0)
+        .withColumn("__pl", lit(null).cast("double"))
+        .withColumn("__pb", lit(null).cast("double"))
+        .withColumn("__pn", lit(null).cast("long")))
     writeEpoch(pts.join(prior, keys, "left")
       .withColumn("__f", aggregate(
         col("__pts"),
@@ -728,19 +718,15 @@ private[streaming] trait StreamOpsStateful {
     val within = s.withColumn("__next", lead(col("__s"), 1).over(w))
       .filter(col("__next").isNotNull)
       .select(col("__s").as("from_state"), col("__next").as("to_state"))
-    val prior = try {
-      spark.read.parquet(s"$statePath/last")
-        .filter(col("batch") =!= epochId) // replay: own epoch is rewritten
+    val prior = priorEpochs(spark, s"$statePath/last", epochId)
+      .map(_.filter(col("batch") =!= epochId) // replay: own epoch is rewritten
         .groupBy("__e")
         .agg(max_by(struct(col("__last"), col("__last_us")),
           col("batch").cast("long")).as("__p"))
         .select(col("__e"), col("__p.__last").as("__plast"),
-          col("__p.__last_us").as("__plast_us"))
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => // first epoch ever
-        s.select(col("__e"), col("__s").as("__plast"),
-          col("__us").as("__plast_us")).limit(0)
-    }
+          col("__p.__last_us").as("__plast_us")))
+      .getOrElse(s.select(col("__e"), col("__s").as("__plast"),
+        col("__us").as("__plast_us")).limit(0))
     // Boundary pair targets the first in-batch event NOT BEFORE the
     // prior last event (ties included): a batch wholly predating the
     // prior state emits no pair (a time-reversed transition would be
@@ -855,20 +841,16 @@ private[streaming] trait StreamOpsStateful {
       .groupBy(col(entity).as("__e"))
       .agg(sort_array(collect_list(struct(us.as("__us"),
         col(typeCol).cast("string").as("__t")))).as("__evs"))
-    val prior = try {
-      spark.read.parquet(statePath)
-        .filter(col("batch") =!= epochId) // replay: own epoch is rewritten
+    val prior = priorEpochs(spark, statePath, epochId)
+      .map(_.filter(col("batch") =!= epochId) // replay: own epoch is rewritten
         .groupBy("__e")
         .agg(max_by(struct(col("stage"), col("t_us")),
           col("batch").cast("long")).as("__st"))
         .select(col("__e"), col("__st.stage").as("__ps"),
-          col("__st.t_us").as("__pt"))
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => // first epoch ever
-        pts.select("__e").limit(0)
-          .withColumn("__ps", lit(null).cast("int"))
-          .withColumn("__pt", lit(null).cast("long"))
-    }
+          col("__st.t_us").as("__pt")))
+      .getOrElse(pts.select("__e").limit(0)
+        .withColumn("__ps", lit(null).cast("int"))
+        .withColumn("__pt", lit(null).cast("long")))
     writeEpoch(pts.join(prior, Seq("__e"), "left")
       .withColumn("__f", aggregate(
         col("__evs"),

@@ -26,10 +26,6 @@ object Readability {
     greatest(size(filter(transform(split(coalesce(text, lit("")), "[.!?]+"), s => trim(s)),
       s => length(s) > 0)), lit(1)).cast("long")
 
-  /** Syllable count of a single word: vowel groups, floored at 1. */
-  def syllablesOf(word: Column): Column =
-    greatest(size(regexp_extract_all(word, lit("[aeiouy]+"), lit(0))), lit(1))
-
   /** Struct of (n_sentences, n_words, n_syllables, reading_ease,
     * fk_grade) over raw text. Empty documents (zero words) score 0.0
     * on both indices rather than null. The arithmetic is written in

@@ -486,4 +486,25 @@ class DedupSpec extends SparkSpec {
       .orderBy("doc_id").select("clean_text").as[String].collect().toSeq
     assert(rows == Seq("one two three four x1 y1", "x9 y9")) // doc 1 owns the gram
   }
+
+  test("span removers and duplicatedSpanStats reject a window width below 1") {
+    val (id, text) = (col("doc_id"), col("text"))
+    val calls: Seq[(String, Int => Any)] = Seq(
+      "removeDuplicatedSpans" -> (w => Dedup.removeDuplicatedSpans(docs, id, text, w)),
+      "removeDuplicatedSpansKeepFirst" -> (w => Dedup.removeDuplicatedSpansKeepFirst(docs, id, text, w)),
+      "removeContaminatedSpans" -> (w => Dedup.removeContaminatedSpans(docs, docs, id, text, text, w)),
+      "exactSubstringDedup" -> (w => Dedup.exactSubstringDedup(docs, id, text, w)),
+      "duplicatedSpanStats" -> (w => Dedup.duplicatedSpanStats(docs, id, text, w)))
+    for ((name, call) <- calls; w <- Seq(0, -1))
+      withClue(s"$name(w = $w): ") { intercept[IllegalArgumentException](call(w)) }
+  }
+
+  test("jaccardPairs and containmentPairs reject a non-positive maxDf") {
+    for (maxDf <- Seq(0, -1)) {
+      intercept[IllegalArgumentException](
+        Dedup.jaccardPairs(docs, col("doc_id"), col("text"), 0.5, maxDf = maxDf))
+      intercept[IllegalArgumentException](
+        Dedup.containmentPairs(docs, col("doc_id"), col("text"), 0.5, maxDf = maxDf))
+    }
+  }
 }

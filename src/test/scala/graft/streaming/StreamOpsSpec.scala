@@ -10,6 +10,14 @@ class StreamOpsSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  /** Leaves `root` as a crash inside epoch 0's write does: the
+    * partition holds only the committer's `_temporary` tree. */
+  private def crashedEpoch0(root: String): Unit = {
+    val task = java.nio.file.Paths.get(root, "batch=0", "_temporary", "0", "_temporary")
+    java.nio.file.Files.createDirectories(task)
+    java.nio.file.Files.createFile(task.resolve("part-00000.snappy.parquet"))
+  }
+
   test("windowedAgg: watermarked tumbling windows emit per-window counts") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, String, Double)]
@@ -644,6 +652,15 @@ class StreamOpsSpec extends SparkSpec {
     assert(curve2 == curve, "a replayed epoch must leave the curve unchanged")
   }
 
+  test("vocabGrowthBatch replays a first epoch that crashed mid-write") {
+    val state = java.nio.file.Files.createTempDirectory("vgcrash").toString + "/vg"
+    crashedEpoch0(state)
+    StreamOps.vocabGrowthBatch(Seq("the cat sat", "the cat").toDF("text"), 0L, "text", state)
+    val curve = StreamOps.vocabGrowthCurve(spark, state)
+      .as[(Long, Long, Long)].collect().toList
+    assert(curve == List((0L, 3L, 3L)), s"got $curve")
+  }
+
   test("toAuditedIngest: clean batches land, poisoned batches quarantine with their audit") {
     implicit val sqlCtx = spark.sqlContext
     import graft.etl.Checks
@@ -765,6 +782,20 @@ class StreamOpsSpec extends SparkSpec {
     assert(landed(2L) == "gamma para", s"got ${landed(2L)}")
     val fps = spark.read.parquet(index).select("para_hash").distinct().count()
     assert(fps == 3L, s"index must hold exactly 3 paragraph fingerprints, got $fps")
+  }
+
+  test("paragraphDedupBatch replays a first epoch that crashed mid-write") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-paradedup-crash")
+    val out = dir.resolve("out").toString
+    val index = dir.resolve("index").toString
+    crashedEpoch0(out)
+    crashedEpoch0(index)
+    val b0 = Seq((1L, "alpha para\n\nbeta para\n\nalpha para")).toDF("doc_id", "text")
+    StreamOps.paragraphDedupBatch(b0, 0L, "doc_id", "text", out, index)
+    val landed = spark.read.parquet(out).select("doc_id", "clean_text").as[(Long, String)]
+      .collect().toSeq
+    assert(landed == Seq(1L -> "alpha para\n\nbeta para"), s"got $landed")
+    assert(spark.read.parquet(index).count() == 2L)
   }
 
   test("contentDiffBatch classifies against the LATEST prior digest, not any older one") {
