@@ -323,7 +323,7 @@ object ScaleProbe {
     // existence: a run killed mid-write leaves a partial/_temporary
     // directory that bare existence would treat as a complete 10×
     // amplification, silently skewing every later decade ratio.
-    if (new java.io.File(s"$dst/documents.parquet/_SUCCESS").exists()) return
+    if (graft.etl.HadoopFs.committed(spark, s"$dst/documents.parquet")) return
     new java.io.File(dst).mkdirs()
     val copies = spark.range(10).select(col("id").as("__copy"))
     val doc = spark.read.parquet(s"$src/documents.parquet")
@@ -349,7 +349,7 @@ object ScaleProbe {
     // _SUCCESS, not bare existence — same partial-write hazard as
     // [[generateDocsGram3]] (embeddings is the last table written, so
     // its committed marker implies the whole set).
-    if (new java.io.File(s"$sf1/embeddings.parquet/_SUCCESS").exists()) return
+    if (graft.etl.HadoopFs.committed(spark, s"$sf1/embeddings.parquet")) return
     new java.io.File(sf1).mkdirs()
     val copies = spark.range(10).select(col("id").as("__copy"))
 

@@ -26,9 +26,10 @@ import org.apache.spark.sql.functions._
   */
 object Bookmark {
 
-  /** Current high-watermark, or None before the first [[advance]]. */
+  /** Current high-watermark, or None before the first committed
+    * [[advance]] (a crashed one means a full re-pull). */
   def read(spark: SparkSession, path: String): Option[Timestamp] =
-    if (!HadoopFs.exists(spark, path)) None
+    if (!HadoopFs.committed(spark, path)) None
     else spark.read.parquet(path).collect().headOption.map(_.getTimestamp(0))
 
   /** Rows STRICTLY newer than the bookmark (everything on None). The

@@ -24,16 +24,10 @@ object Medallion {
 
   /** Partition values under `root` laid out Hive-style
     * (`ingestion_date=YYYY-MM-DD`), on the filesystem of `root`'s
-    * scheme (local, `file://`, `hdfs://`, `s3a://`). */
-  def listPartitions(spark: SparkSession, root: String): Seq[String] = {
-    val p = new Path(root)
-    val fs = HadoopFs.of(spark, p)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$PartitionCol="))
-      .map(_.getPath.getName.stripPrefix(s"$PartitionCol="))
-      .sorted
-  }
+    * scheme. Not gated on `_SUCCESS`: a partitioned append commits one
+    * marker at the root, none per partition. */
+  def listPartitions(spark: SparkSession, root: String): Seq[String] =
+    HadoopFs.partitions(spark, root, PartitionCol)
 
   private def marker(outRoot: String, value: String) =
     new Path(outRoot, s".done_$value")

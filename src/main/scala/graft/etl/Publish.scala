@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,25 +38,16 @@ object Publish {
   final case class AuditFailedException(failures: Seq[String])
     extends RuntimeException(s"write-audit-publish gate failed: ${failures.mkString("; ")}")
 
-  private val VersionDir = "^v=(\\d+)$".r
+  private val Digits = "^(\\d+)$".r
 
-  private def fs(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Committed version numbers present on disk (pointed or not). */
-  def versions(spark: SparkSession, root: String): Seq[Long] = {
-    val f = fs(spark, root)
-    val p = new Path(root)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq.flatMap(s => s.getPath.getName match {
-      case VersionDir(n) if s.isDirectory => Some(n.toLong)
-      case _ => None
-    }).sorted
-  }
+  /** Version numbers present on disk (pointed or not). Every `v=<n>`
+    * dir counts, orphans included, so the next publish never collides. */
+  def versions(spark: SparkSession, root: String): Seq[Long] =
+    HadoopFs.partitions(spark, root, "v").collect { case Digits(n) => n.toLong }.sorted
 
   /** The version `_LATEST` points at, if ever published. */
   def currentVersion(spark: SparkSession, root: String): Option[Long] = {
-    val f = fs(spark, root)
+    val f = HadoopFs.of(spark, new Path(root))
     val ptr = new Path(root, "_LATEST")
     if (!f.exists(ptr)) None
     else {
@@ -84,8 +75,6 @@ object Publish {
       root: String,
       checks: Seq[Checks.Check] = Seq.empty): Long = {
     val spark = df.sparkSession
-    val f = fs(spark, root)
-    f.mkdirs(new Path(root))
     val n = versions(spark, root).lastOption.getOrElse(0L) + 1L
     val staging = new Path(root, s"_staging_v$n")
     df.write.mode("overwrite").parquet(staging.toString)
@@ -96,12 +85,11 @@ object Publish {
         .select(concat(col("check"), lit(" metric="), col("metric").cast("string")))
         .collect().map(_.getString(0)).toSeq
       if (failed.nonEmpty) {
-        f.delete(staging, true)
+        HadoopFs.of(spark, staging).delete(staging, true)
         throw AuditFailedException(failed)
       }
     }
-    val committed = new Path(root, s"v=$n")
-    require(f.rename(staging, committed), s"rename $staging -> $committed failed")
+    HadoopFs.promote(spark, staging, new Path(root, s"v=$n"))
     swapPointer(spark, root, n)
     n
   }
@@ -114,12 +102,11 @@ object Publish {
   }
 
   private def swapPointer(spark: SparkSession, root: String, v: Long): Unit = {
-    val f = fs(spark, root)
+    val f = HadoopFs.of(spark, new Path(root))
     val tmp = new Path(root, s"_LATEST.tmp.$v")
     val out = f.create(tmp, true)
     try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    val fc = FileContext.getFileContext(new Path(root).toUri,
-      spark.sparkContext.hadoopConfiguration)
+    val fc = FileContext.getFileContext(new Path(root).toUri, HadoopFs.conf(spark))
     fc.rename(tmp, new Path(root, "_LATEST"), Options.Rename.OVERWRITE)
   }
 }

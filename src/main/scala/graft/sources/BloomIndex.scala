@@ -77,12 +77,6 @@ object BloomIndex {
     * [[candidateFiles]]; re-deriving it here would double every
     * driver round-trip). */
   def prunedRead(spark: SparkSession, dir: String, column: String,
-      value: String, paths: Seq[String]): DataFrame = {
-    if (paths.isEmpty) {
-      val schema = spark.read.parquet(dir).schema
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else
-      spark.read.option("basePath", dir).parquet(paths: _*)
-        .filter(col(column).cast("string") === value)
-  }
+      value: String, paths: Seq[String]): DataFrame =
+    Manifest.readCandidates(spark, dir, paths, col(column).cast("string") === value)
 }

@@ -1,9 +1,10 @@
 package graft.sources
 
+import graft.etl.HadoopFs
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** File-level min/max manifest over a plain-parquet dataset — the
@@ -38,23 +39,15 @@ object Manifest {
   def build(spark: SparkSession, dir: String, columns: Seq[String]): DataFrame = {
     require(columns.nonEmpty, "need at least one column")
     import spark.implicits._
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // recursive: a Hive-partitioned layout keeps data files under
     // col=value subdirectories — a top-level-only listing would yield
     // an EMPTY manifest there, and empty manifests prune everything
-    def walk(d: Path): Seq[String] =
-      fs.listStatus(d).toSeq.flatMap { st =>
-        if (st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith(".")) Nil
-        else if (st.isDirectory) walk(st.getPath)
-        else Seq(st.getPath.toString)
-      }
-    val files = walk(p)
+    val files = HadoopFs.dataFiles(spark, dir).map(_.getPath.toString)
     // Hadoop Configuration is not Serializable; ship its entries as a
     // plain map and rebuild per task (so s3a/hdfs credentials and
     // filesystem settings survive into the executors)
     import scala.jdk.CollectionConverters._
-    val confEntries = spark.sparkContext.hadoopConfiguration.iterator().asScala
+    val confEntries = HadoopFs.conf(spark).iterator().asScala
       .map(e => e.getKey -> e.getValue).toMap
     val confB = spark.sparkContext.broadcast(confEntries)
     val cols = columns.toArray
@@ -135,13 +128,17 @@ object Manifest {
       hi: Double,
       manifest: Option[DataFrame] = None): DataFrame = {
     val m = manifest.getOrElse(build(spark, dir, Seq(column)))
-    val paths = candidateFiles(m, column, lo, hi)
-    val rowPredicate = col(column) >= lit(lo) && col(column) <= lit(hi)
+    readCandidates(spark, dir, candidateFiles(m, column, lo, hi),
+      col(column) >= lit(lo) && col(column) <= lit(hi))
+  }
+
+  /** The candidate `paths` under `dir` filtered by `rowPredicate`, or,
+    * when none survive, an empty frame with the layout's schema. */
+  private[graft] def readCandidates(spark: SparkSession, dir: String, paths: Seq[String],
+      rowPredicate: Column): DataFrame =
     if (paths.isEmpty) {
-      // schema-only: no data files are opened for a fully-pruned read
       val schema = spark.read.parquet(dir).schema
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     } else
       spark.read.option("basePath", dir).parquet(paths: _*).filter(rowPredicate)
-  }
 }

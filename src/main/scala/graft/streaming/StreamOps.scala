@@ -170,23 +170,25 @@ object StreamOps extends StreamOpsStateful {
   /** The read side of [[writeEpoch]]: the COMMITTED epochs under
     * `root` as one frame with `batch` as a partition column, or None
     * when no epoch other than `epochId` has committed (the first epoch,
-    * or its replay). An epoch counts once its write's commit left
-    * `root/batch=<n>/_SUCCESS`; a partition a crash left behind (only
-    * `_temporary`, or files without the marker) is not read, so a
+    * or its replay). An epoch a crash left behind is not read, so a
     * replayed first epoch bootstraps instead of failing to infer a
     * schema. Each caller applies its own epoch filter (a replay must
-    * not see its own epoch) and builds its own typed empty frame for
-    * None. */
+    * not see its own epoch) and builds its own typed empty frame. */
   def priorEpochs(spark: SparkSession, root: String, epochId: Long): Option[DataFrame] = {
-    val dir = new org.apache.hadoop.fs.Path(root)
-    val fs = HadoopFs.of(spark, dir)
-    val committed =
-      if (!fs.exists(dir)) Seq.empty
-      else fs.listStatus(dir).toSeq.map(_.getPath).filter(p =>
-        p.getName.startsWith("batch=") && fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-    if (committed.forall(_.getName == s"batch=$epochId")) None
-    else Some(spark.read.option("basePath", root).parquet(committed.map(_.toString): _*))
+    val done = committedValues(spark, root, "batch")
+    if (done.forall(_ == epochId.toString)) None
+    else Some(spark.read.option("basePath", root).parquet(done.map(n => s"$root/batch=$n"): _*))
   }
+
+  /** Every committed epoch of a [[writeEpoch]] root — what the readouts
+    * read. Fails naming `root` when none has committed. */
+  def epochs(spark: SparkSession, root: String): DataFrame =
+    priorEpochs(spark, root, epochId = -1L) // no epoch id is negative
+      .getOrElse(throw new IllegalStateException(s"no committed epoch under $root"))
+
+  /** The `n` of each `root/<key>=<n>` dir whose write committed. */
+  private def committedValues(spark: SparkSession, root: String, key: String): Seq[String] =
+    HadoopFs.partitions(spark, root, key).filter(n => HadoopFs.committed(spark, s"$root/$key=$n"))
 
   /** Streaming → Bronze ingest: write each micro-batch Hive-partitioned
     * by `ingestion_date` derived from event time — the streaming mouth
@@ -259,7 +261,8 @@ object StreamOps extends StreamOpsStateful {
     * `outRoot`; (4) append survivors' hashes to the index. A batch
     * replayed after a crash between (3) and (4) re-appends its rows —
     * same at-least-once contract as [[bronzeBatch]]; downstream Silver
-    * key-dedup (A7) remains the exactly-once backstop. */
+    * key-dedup (A7) remains the exactly-once backstop. An index whose
+    * first append crashed reads as no index. */
   def bronzeDedupedBatch(
       batch: DataFrame,
       id: String,
@@ -271,7 +274,7 @@ object StreamOps extends StreamOpsStateful {
     val spark = batch.sparkSession
     val inBatch = Dedup.exactDedup(batch, col(id), col(text))
     val novel =
-      if (HadoopFs.exists(spark, indexPath))
+      if (HadoopFs.committed(spark, indexPath))
         Dedup.exactDedupAgainst(inBatch, col(text), spark.read.parquet(indexPath))
       else inBatch
     // one batch, two actions — cache survivors so the text column is
@@ -313,7 +316,8 @@ object StreamOps extends StreamOpsStateful {
     * deletion once readers drain. A replayed batch merges the same
     * updates again — upsert is idempotent per (key, version), so the
     * extra snapshot version holds the same ROWS (file layout may
-    * differ), not wrong data. */
+    * differ), not wrong data. The latest is the highest COMMITTED
+    * version: the next batch writes over a `v=N` a crash left behind. */
   def snapshotBatch(
       batch: DataFrame,
       keyCols: Seq[String],
@@ -321,7 +325,7 @@ object StreamOps extends StreamOpsStateful {
       outRoot: String,
       tombstone: Option[String] = None): Unit = {
     val spark = batch.sparkSession
-    val latest = latestSnapshotVersion(spark, outRoot)
+    val latest = committedValues(spark, outRoot, "v").map(_.toLong).maxOption
     val cur = latest
       .map(v => spark.read.parquet(s"$outRoot/v=$v"))
       .getOrElse(tombstone.fold(batch)(batch.drop(_)).limit(0))
@@ -329,20 +333,11 @@ object StreamOps extends StreamOpsStateful {
       .write.mode("overwrite").parquet(s"$outRoot/v=${latest.getOrElse(0L) + 1}")
   }
 
-  private def latestSnapshotVersion(spark: SparkSession, outRoot: String): Option[Long] = {
-    val root = new org.apache.hadoop.fs.Path(outRoot)
-    val fs = HadoopFs.of(spark, root)
-    if (!fs.exists(root)) None
-    else fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .map(_.getPath.getName.drop(2).toLong)
-      .maxOption
-  }
-
-  /** The current snapshot of a [[snapshotBatch]] dir (`latest = max N` —
-    * the trivially atomic pointer the versioned layout buys). */
+  /** The current snapshot of a [[snapshotBatch]] dir: the highest
+    * committed `v=N` (the trivially atomic pointer the versioned
+    * layout buys). */
   def latestSnapshot(spark: SparkSession, outRoot: String): DataFrame =
-    latestSnapshotVersion(spark, outRoot) match {
+    committedValues(spark, outRoot, "v").map(_.toLong).maxOption match {
       case Some(v) => spark.read.parquet(s"$outRoot/v=$v")
       case None => throw new IllegalStateException(s"no snapshot versions under $outRoot")
     }
@@ -581,7 +576,7 @@ object StreamOps extends StreamOpsStateful {
     * algebra. The merged state feeds [[graft.analytics.Experiment.abTest]]
     * directly — its entity-grain collapse is idempotent over partials. */
   def experimentReadout(spark: SparkSession, statePath: String): DataFrame = {
-    val merged = spark.read.parquet(statePath)
+    val merged = epochs(spark, statePath)
       .groupBy("entity", "variant")
       .agg(max(col("conv")).as("conv"), sum(col("val")).as("val"))
     graft.analytics.Experiment.abTest(merged,
@@ -622,7 +617,7 @@ object StreamOps extends StreamOpsStateful {
       k: Int,
       salt: String): DataFrame =
     graft.operators.Sampling.weightedSampleK(
-      spark.read.parquet(statePath).drop("batch").dropDuplicates(key),
+      epochs(spark, statePath).drop("batch").dropDuplicates(key),
       col(key), col(weight), k, salt)
 
   /** Streaming incremental-aggregate maintenance: each micro-batch's
@@ -776,7 +771,7 @@ object StreamOps extends StreamOpsStateful {
     * latest-batch-wins per key. Materialize this to a fresh path and
     * repoint the sink to compact the change log. */
   def latestContentState(spark: SparkSession, indexPath: String): DataFrame =
-    spark.read.parquet(indexPath)
+    epochs(spark, indexPath)
       .groupBy("key").agg(max_by(col("digest"), col("batch")).as("digest"))
 
   /** Streaming balanced-shard writer — [[graft.operators.Packing
@@ -835,7 +830,7 @@ object StreamOps extends StreamOpsStateful {
 
   /** Current per-shard token loads of a [[balancedShardBatch]] state log. */
   def shardLoads(spark: SparkSession, statePath: String): DataFrame =
-    spark.read.parquet(statePath)
+    epochs(spark, statePath)
       .groupBy("shard").agg(sum("tokens").as("tokens"))
 
   /** Streaming quality-gate ROUTER: per micro-batch, C4-clean each

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.etl.HadoopFs
 import java.sql.Timestamp
 import StreamOps.{ScoreEvent, ZState, ZAlert, TypedEvent, CepState, CepMatch, SilenceState, SilenceAlert,
-  priorEpochs, writeEpoch}
+  epochs, priorEpochs, writeEpoch}
 
 /** The stateful-alerting / keyed-state half of [[StreamOps]], split
   * out along the SURVEY E-series boundary purely for file size (the
@@ -185,7 +185,7 @@ private[streaming] trait StreamOpsStateful {
   def pcaFromState(
       spark: SparkSession, statePath: String, dim: Int, k: Int): graft.vectors.Pca.PcaModel = {
     import spark.implicits._
-    val rows = spark.read.parquet(statePath)
+    val rows = epochs(spark, statePath)
       .select(col("n"), col("sum"), col("gram"))
       .as[(Long, Seq[Double], Seq[Double])].collect().toSeq
     val (n, mean, cov) = graft.vectors.Pca.momentsFromRows(rows, dim)
@@ -218,7 +218,6 @@ private[streaming] trait StreamOpsStateful {
     require(checks.nonEmpty, "an audited ingest needs at least one check")
     import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    val fs = HadoopFs.of(spark, new Path(dataRoot))
     val staging = new Path(dataRoot, s"_staging_batch=$epochId")
     batch.write.mode("overwrite").parquet(staging.toString)
     val audit = graft.etl.Checks.audit(spark.read.parquet(staging.toString), checks)
@@ -228,9 +227,7 @@ private[streaming] trait StreamOpsStateful {
       val target =
         if (passed) new Path(dataRoot, s"batch=$epochId")
         else new Path(quarantineRoot, s"batch=$epochId")
-      fs.mkdirs(target.getParent)
-      fs.delete(target, true) // replay overwrite contract
-      require(fs.rename(staging, target), s"rename $staging -> $target failed")
+      HadoopFs.promote(spark, staging, target) // replaces a replayed epoch's dir
       if (!passed) writeEpoch(audit, s"$quarantineRoot/_audit", epochId)
     } finally audit.unpersist()
   }
@@ -482,7 +479,7 @@ private[streaming] trait StreamOpsStateful {
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col("epoch"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spark.read.parquet(statePath)
+    epochs(spark, statePath)
       .groupBy(col("batch").cast("long").as("epoch"))
       .agg(count(lit(1)).as("new_types"))
       .withColumn("vocab", sum(col("new_types")).over(w))
@@ -594,7 +591,7 @@ private[streaming] trait StreamOpsStateful {
   def trendingTopK(spark: SparkSession, statePath: String, keys: Seq[String],
       halfLifeSeconds: Double, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val st = spark.read.parquet(statePath)
+    val st = epochs(spark, statePath)
     val ref = st.agg(max(col("ref_us")).as("__gref"))
     st.crossJoin(broadcast(ref))
       .groupBy(keys.map(col): _*)
@@ -766,7 +763,7 @@ private[streaming] trait StreamOpsStateful {
     * [[graft.analytics.Markov.stationary]] directly. */
   def transitionsFrom(spark: SparkSession, statePath: String): DataFrame = {
     val cnt = graft.operators.Lineage.truncate(
-      spark.read.parquet(s"$statePath/trans")
+      epochs(spark, s"$statePath/trans")
         .groupBy("from_state", "to_state").agg(sum("cnt").as("cnt")))
     val tot = cnt.groupBy("from_state").agg(sum("cnt").as("__rt"))
     cnt.join(tot, "from_state")
@@ -800,7 +797,7 @@ private[streaming] trait StreamOpsStateful {
     * as `key`. */
   def shrunkRatesFrom(spark: SparkSession, statePath: String,
                       keys: Seq[String]): DataFrame = {
-    val rolled = spark.read.parquet(statePath)
+    val rolled = epochs(spark, statePath)
       .groupBy(keys.map(col): _*)
       .agg(sum("n").as("n"), sum("y").as("y"))
       .select(concat_ws("|", keys.map(col): _*).as("key"), col("n"), col("y"))
@@ -875,7 +872,7 @@ private[streaming] trait StreamOpsStateful {
     * state-scale rollup, the stream is never rescanned. */
   def funnelFrom(spark: SparkSession, statePath: String,
                  steps: Seq[String]): DataFrame = {
-    val latest = spark.read.parquet(statePath)
+    val latest = epochs(spark, statePath)
       .groupBy("__e")
       .agg(max_by(col("stage"), col("batch").cast("long")).as("__stage"))
     val nCols = steps.indices.map(i =>
@@ -917,7 +914,7 @@ private[streaming] trait StreamOpsStateful {
   def skylineFrom(spark: SparkSession, statePath: String,
                   x: String, y: String): DataFrame =
     graft.operators.Ranking.skyline2D(
-      spark.read.parquet(statePath).drop("batch"), col(x), col(y))
+      epochs(spark, statePath).drop("batch"), col(x), col(y))
 
   /** Latest per-key Holt state from a [[forecastStateBatch]] dir, with the
     * `horizon`-step linear forecast l + h·b — state-scale; seed-phase
@@ -925,7 +922,7 @@ private[streaming] trait StreamOpsStateful {
   def forecastFrom(spark: SparkSession, statePath: String, keys: Seq[String],
                    horizon: Int): DataFrame = {
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
-    spark.read.parquet(statePath)
+    epochs(spark, statePath)
       .groupBy(keys.map(col): _*)
       .agg(max_by(struct(col("l"), col("b"), col("n")),
         col("batch").cast("long")).as("__st"))

@@ -33,4 +33,12 @@ object TestSession {
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
+
+  /** Leaves `dir` as a crash inside a write's tasks does: only the
+    * committer's `_temporary` tree holding a part file, no `_SUCCESS`. */
+  def crashedWrite(dir: String): Unit = {
+    val task = java.nio.file.Paths.get(dir, "_temporary", "0", "_temporary")
+    java.nio.file.Files.createDirectories(task)
+    java.nio.file.Files.createFile(task.resolve("part-00000.snappy.parquet"))
+  }
 }

@@ -49,6 +49,17 @@ class BookmarkSpec extends SparkSpec {
     assert(Bookmark.read(spark, path) === Some(ts("2024-01-01 10:00:00")))
   }
 
+  test("a first advance that crashed mid-write reads as no bookmark (full re-pull)") {
+    val path = java.nio.file.Files.createTempDirectory("bookmark-crash").toString + "/bm"
+    crashedWrite(path)
+    assert(Bookmark.read(spark, path).isEmpty)
+    val src = Seq((1L, ts("2024-01-01 10:00:00"))).toDF("id", "ts")
+    val pull = Bookmark.incrementalPull(src, col("ts"), Bookmark.read(spark, path))
+    assert(pull.count() === 1L)
+    Bookmark.advance(spark, path, pull, col("ts"))
+    assert(Bookmark.read(spark, path) === Some(ts("2024-01-01 10:00:00")))
+  }
+
   test("the bookmark predicate pushes into the parquet scan") {
     val dataDir = java.nio.file.Files.createTempDirectory("bm-src").toString
     (1 to 100).map(i => (i.toLong, ts(f"2024-01-01 10:00:${i % 60}%02d")))

@@ -21,6 +21,16 @@ class CompactionSpec extends SparkSpec {
     assert(back.toSeq == (0L until 1000L).map(i => (i, s"row$i")))
   }
 
+  test("compactDir counts the files Spark reads, not a crashed write's _temporary") {
+    val in = tmp(); val out = tmp()
+    (0L until 100L).map(i => (i, s"row$i")).toDF("id", "s")
+      .coalesce(1).write.mode("overwrite").parquet(in)
+    crashedWrite(in)
+    val stats = Compaction.compactDir(spark, in, out, targetBytes = 1L << 40)
+    assert(stats.filesBefore == 1 && stats.filesAfter == 1, s"got $stats")
+    assert(spark.read.parquet(out).count() == 100)
+  }
+
   test("compactDir derives the file count from listed bytes") {
     val in = tmp(); val out = tmp()
     (0L until 2000L).map(i => (i, "x" * 50)).toDF("id", "s")

@@ -10,14 +10,6 @@ class StreamOpsSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  /** Leaves `root` as a crash inside epoch 0's write does: the
-    * partition holds only the committer's `_temporary` tree. */
-  private def crashedEpoch0(root: String): Unit = {
-    val task = java.nio.file.Paths.get(root, "batch=0", "_temporary", "0", "_temporary")
-    java.nio.file.Files.createDirectories(task)
-    java.nio.file.Files.createFile(task.resolve("part-00000.snappy.parquet"))
-  }
-
   test("windowedAgg: watermarked tumbling windows emit per-window counts") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, String, Double)]
@@ -425,6 +417,22 @@ class StreamOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("bronzeDedupedBatch reads an index whose first append crashed as no index") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bronze-dedup-crash")
+    val bronze = dir.resolve("bronze").toString
+    val index = dir.resolve("index").toString
+    crashedWrite(index)
+    val b = Seq(
+      (1L, "the quick brown fox", ts("2024-01-01 10:00:00")),
+      (2L, "the quick brown fox", ts("2024-01-01 10:01:00")),
+      (3L, "an entirely different text", ts("2024-01-01 10:02:00"))).toDF("doc_id", "text", "ts")
+    StreamOps.bronzeDedupedBatch(b, id = "doc_id", text = "text", ts = "ts",
+      outRoot = bronze, indexPath = index)
+    val landed = spark.read.parquet(bronze).select("doc_id").as[Long].collect().toSeq.sorted
+    assert(landed == Seq(1L, 3L), s"got $landed")
+    assert(spark.read.parquet(index).count() == 2L)
+  }
+
   test("toSnapshot: CDC batches maintain a versioned keyed snapshot with deletes") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, Long, Boolean)]
@@ -447,6 +455,18 @@ class StreamOpsSpec extends SparkSpec {
     // time travel: the previous version still answers
     val v1 = spark.read.parquet(s"$root/v=1").select("k").as[Long].collect().toSet
     assert(v1 == Set(1L, 2L))
+  }
+
+  test("snapshotBatch writes over a crashed version instead of reading it") {
+    val root = java.nio.file.Files.createTempDirectory("snapcrash").toString + "/t"
+    StreamOps.snapshotBatch(Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("k", "payload", "v"),
+      keyCols = Seq("k"), version = "v", outRoot = root)
+    crashedWrite(s"$root/v=2")
+    StreamOps.snapshotBatch(Seq((2L, "b2", 2L), (3L, "c", 1L)).toDF("k", "payload", "v"),
+      keyCols = Seq("k"), version = "v", outRoot = root)
+    val latest = StreamOps.latestSnapshot(spark, root).orderBy("k")
+      .select("k", "payload", "v").as[(Long, String, Long)].collect().toSeq
+    assert(latest == Seq((1L, "a", 1L), (2L, "b2", 2L), (3L, "c", 1L)), s"got $latest")
   }
 
   test("toSketchState: appended micro-batch sketches roll up to the full-scan answer") {
@@ -654,7 +674,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("vocabGrowthBatch replays a first epoch that crashed mid-write") {
     val state = java.nio.file.Files.createTempDirectory("vgcrash").toString + "/vg"
-    crashedEpoch0(state)
+    crashedWrite(s"$state/batch=0")
     StreamOps.vocabGrowthBatch(Seq("the cat sat", "the cat").toDF("text"), 0L, "text", state)
     val curve = StreamOps.vocabGrowthCurve(spark, state)
       .as[(Long, Long, Long)].collect().toList
@@ -788,8 +808,8 @@ class StreamOpsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-paradedup-crash")
     val out = dir.resolve("out").toString
     val index = dir.resolve("index").toString
-    crashedEpoch0(out)
-    crashedEpoch0(index)
+    crashedWrite(s"$out/batch=0")
+    crashedWrite(s"$index/batch=0")
     val b0 = Seq((1L, "alpha para\n\nbeta para\n\nalpha para")).toDF("doc_id", "text")
     StreamOps.paragraphDedupBatch(b0, 0L, "doc_id", "text", out, index)
     val landed = spark.read.parquet(out).select("doc_id", "clean_text").as[(Long, String)]
@@ -926,6 +946,26 @@ class StreamOpsSpec extends SparkSpec {
     assert(a1r == a1, "replay changed assignments")
     val loadsR = StreamOps.shardLoads(spark, state).as[(Int, Long)].collect().toMap
     assert(loadsR == loads, "replay changed state")
+  }
+
+  test("readouts read committed epochs only; none committed fails naming the root") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-shards-uncommitted")
+    val out = dir.resolve("out").toString
+    val state = dir.resolve("state").toString
+    StreamOps.balancedShardBatch(Seq((1L, 100L), (2L, 90L)).toDF("doc_id", "cost"),
+      0L, "doc_id", col("cost"), out, state, shards = 2)
+    val loads0 = StreamOps.shardLoads(spark, state).as[(Int, Long)].collect().toMap
+    assert(loads0 == Map(0 -> 100L, 1 -> 90L), s"got $loads0")
+    // epoch 1's part files landed but its job commit never wrote _SUCCESS
+    StreamOps.balancedShardBatch(Seq((3L, 50L)).toDF("doc_id", "cost"),
+      1L, "doc_id", col("cost"), out, state, shards = 2)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(state, "batch=1", "_SUCCESS"))
+    val loads = StreamOps.shardLoads(spark, state).as[(Int, Long)].collect().toMap
+    assert(loads == loads0, s"an uncommitted epoch leaked into the readout: $loads")
+    val none = dir.resolve("none").toString
+    crashedWrite(s"$none/batch=0")
+    val ex = intercept[IllegalStateException](StreamOps.shardLoads(spark, none))
+    assert(ex.getMessage.contains(none), ex.getMessage)
   }
 
   test("toBalancedShards end-to-end over a MemoryStream") {
