@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{avg, count, lit, max, sum}
 
 /** What every measurement main shares (Bench, Verify, Profile,
   * ScaleProbe, DotBench, and SkewProbe in test scope): one session
@@ -31,9 +32,23 @@ object Harness {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM (class loading, Janino codegen compiler, shuffle
-    // machinery) on a synthetic job so the first timed query measures
-    // its operator, not session startup. Touches no benchmark tables.
-    spark.range(1000000L).selectExpr("sum(id * 2)").write.format("noop").mode("overwrite").save()
+    // machinery) on synthetic jobs so the first timed query measures
+    // its operator, not session startup. A range job alone left the
+    // first query paying for the parquet path (the schema-inference
+    // job, the vectorized reader, its first planning), so the warm-up
+    // writes a scratch parquet table, reads it back and runs a filter,
+    // a sort-merge join, an aggregate and a sort over it. Touches no
+    // benchmark tables.
+    val dir = graft.sources.Tmp.dir("graft-warmup").resolve("t").toString
+    spark.range(1000000L)
+      .selectExpr("id", "id % 7 AS k", "CAST(id AS DOUBLE) / 3 AS x", "CAST(id AS STRING) AS s")
+      .write.parquet(dir)
+    val t = spark.read.parquet(dir)
+    t.filter("x > 1").select("id", "k", "x")
+      .join(t.select("id", "s").hint("merge"), "id")
+      .groupBy("k").agg(sum("x"), avg("x"), count(lit(1)), max("s"))
+      .orderBy("k")
+      .write.format("noop").mode("overwrite").save()
     spark
   }
 

@@ -51,41 +51,18 @@ object Markov {
     * movement after k rounds is bounded by the chain's mixing rate).
     * States with no outgoing transitions (absorbing ends) redistribute
     * their mass uniformly each round — the PageRank dangling treatment,
-    * without it the vector leaks mass and stops summing to 1. Each
-    * round is one from-keyed join + one to-keyed hash aggregate over
-    * the |states|²-bounded matrix, lineage-truncated. Input is
-    * [[transitions]]' output (or any (from_state, to_state, p) table
-    * whose rows row-normalize). */
+    * without it the vector leaks mass and stops summing to 1. Runs on
+    * the C23 kernel [[graft.graph.PageRank.iterate]]: the matrix goes in
+    * as its (src, dst, __p) edge table with the vote `rank * __p`,
+    * damping 1 (no teleport) and ranks normalized to a distribution.
+    * Input is [[transitions]]' output (or any (from_state, to_state, p)
+    * table whose rows row-normalize). */
   def stationary(trans: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val t = Lineage.truncate(
-      trans.select(col("from_state"), col("to_state"), col("p")))
-    val states = Lineage.truncate(
-      t.select(col("from_state").as("state"))
-        .unionAll(t.select(col("to_state").as("state"))).distinct()
-        .join(t.select(col("from_state").as("state")).distinct()
-          .withColumn("__hasout", lit(true)), Seq("state"), "left"))
-    val invN = 1.0 / states.count().toDouble
-    // dangling mass rides each round's own truncation (the c23/c64
-    // treatment): the per-round one-row aggregate job + broadcast +
-    // crossJoin are gone from every round's plan
-    val dangledSum =
-      coalesce(sum(when(col("__hasout").isNull, col("pi"))), lit(0.0)).as("__dm")
-    var (pi, obs0) = Lineage.truncateObserved(
-      states.select(col("state"), col("__hasout"), lit(invN).as("pi")), dangledSum)
-    var dm = obs0("__dm").asInstanceOf[Double]
-    for (_ <- 0 until iters) {
-      val flow = pi.join(t, pi("state") === t("from_state"))
-        .select(col("to_state").as("state"), (col("pi") * col("p")).as("__f"))
-        .groupBy("state").agg(sum("__f").as("__in"))
-      val (next, obs) = Lineage.truncateObserved(
-        states.join(flow, Seq("state"), "left")
-          .select(col("state"), col("__hasout"),
-            (coalesce(col("__in"), lit(0.0)) + lit(dm) * lit(invN)).as("pi")),
-        dangledSum)
-      pi = next
-      dm = obs("__dm").asInstanceOf[Double]
-    }
-    pi.select(col("state"), col("pi"))
+    graft.graph.PageRank.iterate(
+        trans.select(col("from_state").as("src"), col("to_state").as("dst"),
+          col("p").as("__p")),
+        col("rank") * col("__p"), damping = 1.0, normalized = true, iters)
+      .select(col("v").as("state"), col("rank").as("pi"))
   }
 }

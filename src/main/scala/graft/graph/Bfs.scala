@@ -30,16 +30,13 @@ object Bfs {
     * `maxHops` edges; `dist` = minimum hop count (seeds are 0).
     * Unreachable vertices are absent. `directed=false` (default)
     * traverses edges both ways. Duplicate edges/seeds and self-loops
-    * are harmless (deduped / already-visited). */
+    * are harmless (deduped / dropped). */
   def hopDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int,
       directed: Boolean = false): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val fwd = edges.select(col("src"), col("dst"))
-    val e = Lineage.truncate(
-      (if (directed) fwd
-       else fwd.unionAll(edges.select(col("dst").as("src"), col("src").as("dst"))))
-        .filter(col("src").isNotNull && col("dst").isNotNull)
-        .distinct())
+    // self-loops are dropped with the nulls: one never reaches an
+    // unvisited vertex
+    val e = HyperBall.normalized(edges, directed)
     // ONE truncation per round (r14): the frontier is the last hop's
     // dist-slice of the (checkpointed) dist table, and its size rides
     // the union's own materialization (observe) — the separate `next`

@@ -39,12 +39,7 @@ object Communities {
   def labelPropagation(edges: DataFrame, iters: Int,
                        directed: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val fwd = edges.select(col("src"), col("dst"))
-    val e = Lineage.truncate(
-      (if (directed) fwd
-       else fwd.unionAll(edges.select(col("dst").as("src"), col("src").as("dst"))))
-        .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-        .distinct())
+    val e = HyperBall.normalized(edges, directed)
     var labels = Lineage.truncate(
       e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v"))).distinct()
         .withColumn("label", col("v")))

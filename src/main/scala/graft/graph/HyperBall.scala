@@ -25,45 +25,14 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructT
   * fills the remaining rows so the output always has maxT+1 rows. */
 object HyperBall {
 
-  /** (t, n_pairs_est) for t = 0..maxT. `edges` needs `src`/`dst`
-    * columns; `directed=false` traverses both ways. */
+  /** (t, n_pairs_est) for t = 0..maxT: the N(t) series of [[balls]].
+    * `edges` needs `src`/`dst` columns; `directed=false` traverses both
+    * ways. */
   def neighborhoodFunction(edges: DataFrame, maxT: Int, lgK: Int = 12,
                            directed: Boolean = false): DataFrame = {
     require(maxT >= 0, s"maxT must be >= 0, got $maxT")
-    val spark = edges.sparkSession
-    val e = normalized(edges, directed)
-    val nodes = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v"))).distinct()
-    // N(t) totals ride each round's own materialization (observe) — the
-    // former per-round `total()` aggregate job over the just-truncated
-    // balls is gone (r14, guide §1.2: remove actions outright).
-    val nfMetric = coalesce(sum(hll_sketch_estimate(col("sk"))), lit(0.0)).as("nf")
-    var (balls, m0) = Lineage.truncateObserved(
-      nodes.groupBy("v").agg(hll_sketch_agg(col("v"), lit(lgK)).as("sk")), nfMetric)
-    val out = scala.collection.mutable.ArrayBuffer[(Int, Double)](
-      (0, m0("nf").asInstanceOf[Double]))
-    var t = 1
-    var converged = false
-    while (t <= maxT && !converged) {
-      // Ball_v(t) in ONE union+aggregate: own ball and every in-ball ride
-      // the same hll_union_agg — HLL union is associative/commutative
-      // (register max), so folding the former two-step contrib-aggregate
-      // + left-outer re-attachment join into a single aggregate leaves
-      // every estimate identical while dropping a join (and its
-      // exchange) from every round's plan (guide §2.4).
-      val (nb, m) = Lineage.truncateObserved(
-        e.join(balls, e("dst") === balls("v"))
-          .select(e("src").as("v"), col("sk"))
-          .unionAll(balls.select(col("v"), col("sk")))
-          .groupBy("v").agg(hll_union_agg(col("sk")).as("sk")),
-        nfMetric)
-      balls = nb
-      val nf = m("nf").asInstanceOf[Double]
-      converged = nf == out.last._2
-      out += ((t, nf))
-      t += 1
-    }
-    while (out.size <= maxT) out += ((out.size, out.last._2))
-    toDf(spark, out.toSeq)
+    val (_, nf) = balls(normalized(edges, directed), maxT, lgK)
+    toDf(edges.sparkSession, nf.padTo(maxT + 1, nf.last).zipWithIndex.map(_.swap))
   }
 
   /** EXACT neighborhood function by distinct-pair frontier expansion —
@@ -105,9 +74,10 @@ object HyperBall {
     * disconnected graphs where closeness breaks) — computed from the
     * SAME ball recurrence: the t-shell size is |B(v,t)| − |B(v,t−1)|,
     * and H(v) = Σ_t shell_t/t accumulates per vertex as the balls grow.
-    * Same scale shape as [[neighborhoodFunction]]: |V|-scale sketch
-    * state, one edge join + one sketch aggregate per round, lineage
-    * truncated, early exit at the fixed point. Distances beyond `maxT`
+    * The score is the final state of [[balls]], the loop
+    * [[neighborhoodFunction]] runs too: |V|-scale sketch state, one
+    * edge join + one sketch aggregate per round, lineage truncated,
+    * early exit at the fixed point. Distances beyond `maxT`
     * contribute nothing (documented truncation — at web scale the
     * 1/d tail beyond the effective diameter is noise); for DIRECTED
     * in-centrality (paths TO v, the standard form) pass the reversed
@@ -119,45 +89,7 @@ object HyperBall {
   def harmonicCentrality(edges: DataFrame, maxT: Int, lgK: Int = 12,
                          directed: Boolean = false): DataFrame = {
     require(maxT >= 1, s"maxT must be >= 1, got $maxT")
-    val e = normalized(edges, directed)
-    val nodes = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v"))).distinct()
-    // convergence totals ride each round's materialization (observe) —
-    // the per-round `total()` job is gone (r14, guide §1.2)
-    val nfMetric = coalesce(sum(col("__prev")), lit(0.0)).as("nf")
-    var (state, m0) = Lineage.truncateObserved(
-      nodes.groupBy("v").agg(hll_sketch_agg(col("v"), lit(lgK)).as("sk"))
-        .select(col("v"), col("sk"),
-          hll_sketch_estimate(col("sk")).as("__prev"), lit(0.0).as("score")),
-      nfMetric)
-    var last = m0("nf").asInstanceOf[Double]
-    var t = 1
-    var converged = false
-    while (t <= maxT && !converged) {
-      // grown ball in ONE union+aggregate (the neighborhoodFunction r14
-      // shape): own sketch and in-neighbor sketches through a single
-      // hll_union_agg — register-max union is order-insensitive, so
-      // estimates are identical to the former two-step form; __prev and
-      // score ride the base leg (the single non-null value per group).
-      val merged = e.join(state, e("dst") === state("v"))
-        .select(e("src").as("v"), col("sk"),
-          lit(null).cast("double").as("__prev"), lit(null).cast("double").as("score"))
-        .unionAll(state.select(col("v"), col("sk"), col("__prev"), col("score")))
-        .groupBy("v").agg(hll_union_agg(col("sk")).as("sk"),
-          max(col("__prev")).as("__p0"), max(col("score")).as("__s0"))
-      val est = hll_sketch_estimate(col("sk"))
-      // registers only grow under union and the estimate is monotone in
-      // them, so the shell is ≥ 0; greatest() guards the contract
-      // explicitly rather than trusting it silently
-      val (ns, m) = Lineage.truncateObserved(
-        merged.select(col("v"), col("sk"), est.as("__prev"),
-          (col("__s0") + greatest(est - col("__p0"), lit(0.0)) / t).as("score")),
-        nfMetric)
-      state = ns
-      val nf = m("nf").asInstanceOf[Double]
-      converged = nf == last
-      last = nf
-      t += 1
-    }
+    val (state, _) = balls(normalized(edges, directed), maxT, lgK)
     state.select(col("v").as("vertex"), col("score").as("harmonic_est"))
   }
 
@@ -196,7 +128,59 @@ object HyperBall {
       .agg(sum(lit(1.0) / col("__d")).as("harmonic"))
   }
 
-  private def normalized(edges: DataFrame, directed: Boolean): DataFrame = {
+  /** The ball recurrence behind [[neighborhoodFunction]] and
+    * [[harmonicCentrality]] over a [[normalized]] edge table: rounds
+    * t = 1..maxT, stopping early at the fixed point. Returns the final
+    * truncated (v, sk, __prev, score) state — `sk` the HLL ball,
+    * `__prev` its estimate |B(v,t)|, `score` Σ_t shell_t/t — and the
+    * N(0..t) series, N(t) = Σ_v __prev, one entry per round run. */
+  private def balls(e: DataFrame, maxT: Int, lgK: Int): (DataFrame, Seq[Double]) = {
+    val nodes = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v"))).distinct()
+    // N(t) totals ride each round's own materialization (observe), so
+    // no round pays a separate aggregate job for them
+    val nfMetric = coalesce(sum(col("__prev")), lit(0.0)).as("nf")
+    var (state, m0) = Lineage.truncateObserved(
+      nodes.groupBy("v").agg(hll_sketch_agg(col("v"), lit(lgK)).as("sk"))
+        .select(col("v"), col("sk"),
+          hll_sketch_estimate(col("sk")).as("__prev"), lit(0.0).as("score")),
+      nfMetric)
+    val nf = scala.collection.mutable.ArrayBuffer(m0("nf").asInstanceOf[Double])
+    var t = 1
+    var converged = false
+    while (t <= maxT && !converged) {
+      // Ball_v(t) in ONE union+aggregate: own sketch and in-neighbor
+      // sketches through a single hll_union_agg — HLL union is
+      // associative/commutative (register max), so no re-attachment
+      // join is needed; __prev and score ride the base leg (the single
+      // non-null value per group).
+      val merged = e.join(state, e("dst") === state("v"))
+        .select(e("src").as("v"), col("sk"),
+          lit(null).cast("double").as("__prev"), lit(null).cast("double").as("score"))
+        .unionAll(state.select(col("v"), col("sk"), col("__prev"), col("score")))
+        .groupBy("v").agg(hll_union_agg(col("sk")).as("sk"),
+          max(col("__prev")).as("__p0"), max(col("score")).as("__s0"))
+      val est = hll_sketch_estimate(col("sk"))
+      // registers only grow under union and the estimate is monotone in
+      // them, so the shell is ≥ 0; greatest() guards the contract
+      // explicitly rather than trusting it silently
+      val (ns, m) = Lineage.truncateObserved(
+        merged.select(col("v"), col("sk"), est.as("__prev"),
+          (col("__s0") + greatest(est - col("__p0"), lit(0.0)) / t).as("score")),
+        nfMetric)
+      state = ns
+      val n = m("nf").asInstanceOf[Double]
+      converged = n == nf.last
+      nf += n
+      t += 1
+    }
+    (state, nf.toSeq)
+  }
+
+  /** The undirected-edge normaliser of the graph operators
+    * ([[HyperBall]], [[Communities]], [[Bfs]]): both directions unless
+    * `directed`, nulls and self-loops dropped, duplicates collapsed,
+    * truncated once. */
+  private[graph] def normalized(edges: DataFrame, directed: Boolean): DataFrame = {
     val fwd = edges.select(col("src"), col("dst"))
     Lineage.truncate(
       (if (directed) fwd

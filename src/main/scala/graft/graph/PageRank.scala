@@ -1,7 +1,7 @@
 package graft.graph
 
 import graft.operators.Lineage
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** PageRank over an edge table — the iterative-graph workload beyond
@@ -16,73 +16,27 @@ import org.apache.spark.sql.functions._
   * threshold would couple the answer to float noise; rank movement
   * after `iters` rounds is bounded by d^iters).
   *
-  * Scale shape per round: one (src)-keyed join ranks⋈edges, one (dst)
-  * hash aggregate — the d15 iteration discipline: [[Lineage.truncate]]
-  * cuts lineage each round (reliable checkpoint when the session has a
-  * checkpoint dir, localCheckpoint otherwise), the dangling-mass term
-  * is a one-row broadcast, nothing pairwise, no driver-side graph
-  * state. Vertices and degrees are computed ONCE up front and reused
-  * via the same truncation.
+  * Every random walk in the library runs on the one round in
+  * [[iterate]]: [[pageRank]], [[weightedPageRank]],
+  * [[graft.text.TextRank.textRank]] and
+  * [[graft.analytics.Markov.stationary]] only prepare its edge table and
+  * project its result.
   */
 object PageRank {
 
   /** (vertex, rank) after `iters` rounds over `edges(src, dst)`.
     * Duplicate edges count once; self-loops are legal. Ranks sum to 1
     * (up to float round-off) — dangling vertices' mass is
-    * redistributed uniformly, the standard stochastic completion. */
+    * redistributed uniformly, the standard stochastic completion.
+    *
+    * Passes [[iterate]] the distinct (src, dst) pairs with the vote
+    * `rank / __deg`, `damping`, and ranks normalized to a distribution. */
   def pageRank(edges: DataFrame, damping: Double = 0.85, iters: Int = 5): DataFrame = {
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = Lineage.truncate(edges.select(col("src"), col("dst")).distinct())
-    // Vertex table WITH out-degrees in ONE union+aggregate pass (r14,
-    // guide §2.4): replaces distinct + groupBy + left-join — three
-    // exchanges and three per-query truncation actions — with one
-    // exchange and one action. Dangling vertices (no outgoing edge)
-    // keep a null __deg exactly as the join-built table did. |V| and
-    // the dangling count ride the same materialization (observe), so
-    // initialization needs no further action at all.
-    val (verts, vm) = Lineage.truncateObserved(
-      e.select(col("src").as("v"), lit(1L).as("__o"))
-        .unionAll(e.select(col("dst").as("v"), lit(0L).as("__o")))
-        .groupBy("v").agg(sum("__o").as("__cnt"))
-        .select(col("v"), when(col("__cnt") > 0, col("__cnt")).as("__deg")),
-      count(lit(1)).as("n"),
-      coalesce(sum(when(col("__deg").isNull, lit(1L))), lit(0L)).as("nDangling"))
-    val invN = 1.0 / vm("n").asInstanceOf[Long].toDouble
-    // Dangling mass is carried as a DRIVER-side scalar, refreshed each
-    // round by the SAME materialization that truncates the new ranks
-    // (observe) — the former per-round one-row aggregate job + its
-    // broadcast exchange + crossJoin disappear from every round's plan
-    // (guide §1.2: remove actions outright). Round 0's mass is closed
-    // form: every vertex holds exactly 1/n.
-    var dm = vm("nDangling").asInstanceOf[Long] * invN
-    // ranks_0 is a cheap projection of the checkpointed vertex table —
-    // no truncation of its own needed (each round reads it twice, but
-    // both reads scan materialized RDD blocks)
-    var ranks = verts.select(col("v"), col("__deg"), lit(invN).as("rank"))
-    for (_ <- 0 until iters) {
-      // One src-keyed join + ONE union+aggregate per round: the base
-      // leg injects every vertex with a 0.0 contribution (and its
-      // __deg), so the former verts⋈contrib re-attachment join is gone;
-      // sum semantics are unchanged (x + 0.0 == x for the all-positive
-      // ranks), max(__deg) just picks the single non-null base value.
-      val contrib = ranks.filter(col("__deg").isNotNull)
-        .join(e, ranks("v") === e("src"))
-        .select(col("dst").as("v"), (col("rank") / col("__deg")).as("__c"),
-          lit(null).cast("long").as("__deg"))
-      val base = ranks.select(col("v"), lit(0.0).as("__c"), col("__deg"))
-      val (next, m) = Lineage.truncateObserved(
-        contrib.unionAll(base)
-          .groupBy("v").agg(sum("__c").as("__in"), max("__deg").as("__deg"))
-          .select(col("v"), col("__deg"),
-            (lit((1.0 - damping) * invN) +
-              lit(damping) * (col("__in") + lit(dm * invN)))
-              .as("rank")),
-        coalesce(sum(when(col("__deg").isNull, col("rank"))), lit(0.0)).as("dm"))
-      ranks = next
-      dm = m("dm").asInstanceOf[Double]
-    }
-    ranks.select(col("v").as("vertex"), round(col("rank"), 6).as("rank"))
+    iterate(edges.select(col("src"), col("dst")).distinct(),
+      col("rank") / col("__deg"), damping, normalized = true, iters)
+      .select(col("v").as("vertex"), round(col("rank"), 6).as("rank"))
   }
 
   /** Weighted PageRank over `edges(src, dst, weight)`: contributions
@@ -92,14 +46,13 @@ object PageRank {
     * bigram weights): an edge seen 40× should carry 40× the vote of a
     * hapax edge, which the unweighted walk throws away.
     *
-    * Same scale discipline as [[pageRank]]: parallel edges COLLAPSE BY
-    * SUMMING their weights (one partial-aggregating normalize pass),
-    * out-strengths fold into per-edge transition probabilities ONCE so
-    * every round is one src-keyed join + one dst hash aggregate with
-    * [[graft.operators.Lineage.truncate]] cutting lineage; dangling
-    * mass (vertices with no outgoing weight) redistributes uniformly
-    * via a one-row broadcast. Non-positive/null weights are dropped
-    * (they carry no vote; a zero-weight edge must not create a
+    * Parallel edges COLLAPSE BY SUMMING their weights (one
+    * partial-aggregating normalize pass), and out-strengths fold into
+    * per-edge transition probabilities `__p` ONCE. Passes [[iterate]]
+    * that (src, dst, __p) table with the vote `rank * __p`, `damping`,
+    * and ranks normalized to a distribution; vertices with no outgoing
+    * weight are its dangling vertices. Non-positive/null weights are
+    * dropped (they carry no vote; a zero-weight edge must not create a
     * spurious dangling escape). Ranks sum to 1 up to float round-off.
     * With all weights equal this IS [[pageRank]] (spec-asserted). */
   def weightedPageRank(edges: DataFrame, damping: Double = 0.85,
@@ -111,42 +64,69 @@ object PageRank {
         .filter(col("src").isNotNull && col("dst").isNotNull && col("__w") > 0)
         .groupBy("src", "dst").agg(sum(col("__w")).as("__w")))
     val outW = e0.groupBy("src").agg(sum(col("__w")).as("__ow"))
-    val trans = Lineage.truncate(
-      e0.join(outW, "src")
-        .select(col("src"), col("dst"), (col("__w") / col("__ow")).as("__p")))
-    // Same r14 shape as [[pageRank]]: vertex table + has-outgoing marker
-    // in one union+aggregate pass (the weights are all positive, so
-    // "has outgoing weight" = "appears as src"), |V| and the dangling
-    // count observed on the same materialization; dangling mass carried
-    // as a driver scalar refreshed by each round's own truncation.
-    val (vertices, vm) = Lineage.truncateObserved(
-      e0.select(col("src").as("v"), lit(1L).as("__o"))
-        .unionAll(e0.select(col("dst").as("v"), lit(0L).as("__o")))
+    iterate(e0.join(outW, "src")
+        .select(col("src"), col("dst"), (col("__w") / col("__ow")).as("__p")),
+      col("rank") * col("__p"), damping, normalized = true, iters)
+      .select(col("v").as("vertex"), round(col("rank"), 6).as("rank"))
+  }
+
+  /** The power-iteration kernel: `iters` rounds of
+    * rank ← t + d·(Σ in-vote + dangling mass/n) over `edges(src, dst, …)`,
+    * returned as the truncated (v, __deg, rank) table — `__deg` is the
+    * out-degree, null for a dangling vertex (no row as `src`).
+    *
+    * `vote` is the per-edge contribution, an expression over the source
+    * vertex's `rank` and `__deg` and the edge's own columns. With
+    * `normalized` the ranks are a distribution: start 1/n, teleport
+    * t = (1−d)/n. Without it they are salience scores: start 1,
+    * teleport t = 1−d. `damping` 1 is the plain chain π ← πP.
+    *
+    * Scale shape: `edges` is truncated once; the vertex table and its
+    * out-degrees come from ONE union+aggregate pass whose truncation
+    * also observes n and the dangling count. Each round is one
+    * src-keyed join + ONE union+aggregate (the base leg injects every
+    * vertex with a 0.0 vote and its __deg), truncated by
+    * [[Lineage.truncateObserved]], which also observes the next round's
+    * dangling mass as a driver-side scalar. Truncation is reliable
+    * checkpointing when the session has a checkpoint dir,
+    * localCheckpoint otherwise. */
+  private[graft] def iterate(edges: DataFrame, vote: Column, damping: Double,
+                             normalized: Boolean, iters: Int): DataFrame = {
+    val e = Lineage.truncate(edges)
+    // dangling vertices (no outgoing edge) keep a null __deg
+    val (verts, vm) = Lineage.truncateObserved(
+      e.select(col("src").as("v"), lit(1L).as("__o"))
+        .unionAll(e.select(col("dst").as("v"), lit(0L).as("__o")))
         .groupBy("v").agg(sum("__o").as("__cnt"))
-        .select(col("v"), when(col("__cnt") > 0, lit(true)).as("__hasout")),
+        .select(col("v"), when(col("__cnt") > 0, col("__cnt")).as("__deg")),
       count(lit(1)).as("n"),
-      coalesce(sum(when(col("__hasout").isNull, lit(1L))), lit(0L)).as("nDangling"))
+      coalesce(sum(when(col("__deg").isNull, lit(1L))), lit(0L)).as("nDangling"))
     val invN = 1.0 / vm("n").asInstanceOf[Long].toDouble
-    var dm = vm("nDangling").asInstanceOf[Long] * invN
-    var ranks = vertices.select(col("v"), col("__hasout"), lit(invN).as("rank"))
+    val unit = if (normalized) invN else 1.0
+    // round 0's dangling mass is closed form: every vertex holds `unit`
+    var dm = vm("nDangling").asInstanceOf[Long] * unit
+    // ranks_0 is a cheap projection of the checkpointed vertex table —
+    // no truncation of its own needed (each round reads it twice, but
+    // both reads scan materialized RDD blocks)
+    var ranks = verts.select(col("v"), col("__deg"), lit(unit).as("rank"))
     for (_ <- 0 until iters) {
-      // one src-keyed join + one union+aggregate per round (base leg =
-      // every vertex with a 0.0 contribution), the pageRank discipline
-      val contrib = ranks.join(trans, ranks("v") === trans("src"))
-        .select(col("dst").as("v"), (col("rank") * col("__p")).as("__c"),
-          lit(null).cast("boolean").as("__hasout"))
-      val base = ranks.select(col("v"), lit(0.0).as("__c"), col("__hasout"))
+      // x + 0.0 == x for the base leg's votes; max(__deg) just picks
+      // the single non-null base value
+      val contrib = ranks.filter(col("__deg").isNotNull)
+        .join(e, ranks("v") === e("src"))
+        .select(col("dst").as("v"), vote.as("__c"), lit(null).cast("long").as("__deg"))
+      val base = ranks.select(col("v"), lit(0.0).as("__c"), col("__deg"))
       val (next, m) = Lineage.truncateObserved(
         contrib.unionAll(base)
-          .groupBy("v").agg(sum("__c").as("__in"), max("__hasout").as("__hasout"))
-          .select(col("v"), col("__hasout"),
-            (lit((1.0 - damping) * invN) +
+          .groupBy("v").agg(sum("__c").as("__in"), max("__deg").as("__deg"))
+          .select(col("v"), col("__deg"),
+            (lit((1.0 - damping) * unit) +
               lit(damping) * (col("__in") + lit(dm * invN)))
               .as("rank")),
-        coalesce(sum(when(col("__hasout").isNull, col("rank"))), lit(0.0)).as("dm"))
+        coalesce(sum(when(col("__deg").isNull, col("rank"))), lit(0.0)).as("dm"))
       ranks = next
       dm = m("dm").asInstanceOf[Double]
     }
-    ranks.select(col("v").as("vertex"), round(col("rank"), 6).as("rank"))
+    ranks
   }
 }

@@ -21,14 +21,14 @@ import org.apache.spark.sql.functions._
   * edges BEFORE the iteration (the D86 noise floor, and the scale
   * bound: the surviving edge table is vocabulary²-bounded and usually
   * far smaller). Transition probabilities w(j,i)/Σₖw(j,k) are
-  * precomputed ONCE into the edge table, so each of the fixed `iters`
-  * power-iteration rounds is exactly one src-keyed join + one dst hash
-  * aggregate with [[Lineage.truncate]] cutting the plan — the C23
-  * round discipline; no dangling-mass term is needed (symmetric edges
-  * give every vertex out-weight > 0 by construction). Scores use the
-  * classic TextRank fixed point rank = (1−d) + d·Σ (NOT the
-  * probability-normalized C23 form — scores are per-vertex salience,
-  * not a distribution).
+  * precomputed ONCE into the (src, dst, __p) edge table, which goes to
+  * the C23 kernel [[graft.graph.PageRank.iterate]] with the vote
+  * `rank * __p`, `damping`, and `normalized = false`: scores follow the
+  * classic TextRank fixed point rank = (1−d) + d·Σ from a start of 1
+  * (NOT the probability-normalized C23 form — scores are per-vertex
+  * salience, not a distribution). The kernel's dangling-mass term is
+  * always 0 here (symmetric edges give every vertex out-weight > 0 by
+  * construction).
   *
   * Output: (token, rank) for every vertex of the pruned graph. */
 object TextRank {
@@ -56,25 +56,10 @@ object TextRank {
         .filter(col("__w") >= minCount))
     val outW = edges.groupBy("src").agg(sum("__w").as("__ow"))
     // transition probability folded in once — every round reuses it
-    val trans = Lineage.truncate(
-      edges.join(outW, "src")
-        .select(col("src"), col("dst"), (col("__w") / col("__ow")).as("__p")))
-    var ranks = Lineage.truncate(
-      trans.select(col("src").as("token")).distinct()
-        .withColumn("rank", lit(1.0)))
-    for (_ <- 0 until iters) {
-      val in = ranks.join(trans, ranks("token") === trans("src"))
-        .select(col("dst").as("token"), (col("rank") * col("__p")).as("__c"))
-        .groupBy("token").agg(sum("__c").as("__in"))
-      // symmetric graph ⇒ every vertex receives mass; inner join is
-      // total, but keep the left join + coalesce as the explicit
-      // contract for a future directed variant
-      ranks = Lineage.truncate(
-        ranks.select("token").join(in, Seq("token"), "left")
-          .select(col("token"),
-            (lit(1.0 - damping) +
-              lit(damping) * coalesce(col("__in"), lit(0.0))).as("rank")))
-    }
-    ranks
+    graft.graph.PageRank.iterate(
+        edges.join(outW, "src")
+          .select(col("src"), col("dst"), (col("__w") / col("__ow")).as("__p")),
+        col("rank") * col("__p"), damping, normalized = false, iters)
+      .select(col("v").as("token"), col("rank"))
   }
 }

@@ -53,15 +53,67 @@ class LineageSpec extends SparkSpec {
     }
   }
 
-  test("pageRank is bit-identical with and without a reliable checkpoint dir") {
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L)).toDF("src", "dst")
-    val base = graft.graph.PageRank.pageRank(edges, iters = 3)
-      .as[(Long, Double)].collect().toMap
-    val reliable = withCheckpointDir { _ =>
-      graft.graph.PageRank.pageRank(edges, iters = 3)
-        .as[(Long, Double)].collect().toMap
+  /** Every caller of the power-iteration kernel (`PageRank.iterate`),
+    * on a small input with a dangling vertex where one applies, as a
+    * function of the round count. */
+  private lazy val walks: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (1L, 5L)).toDF("src", "dst")
+    val weighted = Seq((1L, 2L, 3.0), (2L, 3L, 1.0), (3L, 1L, 2.0), (4L, 1L, 1.0), (1L, 5L, 1.0))
+      .toDF("src", "dst", "weight")
+    val docs = Seq("spark runs fast and spark scales", "fast spark jobs scale well")
+      .toDF("text")
+    val trans = Seq(("a", "b", 0.5), ("a", "c", 0.5), ("b", "a", 1.0), ("c", "end", 1.0))
+      .toDF("from_state", "to_state", "p")
+    Seq(
+      "pageRank" -> (i => graft.graph.PageRank.pageRank(edges, iters = i)),
+      "weightedPageRank" -> (i => graft.graph.PageRank.weightedPageRank(weighted, iters = i)),
+      "textRank" -> (i => graft.text.TextRank.textRank(docs, col("text"), iters = i,
+        minCount = 1)),
+      "stationary" -> (i => graft.analytics.Markov.stationary(trans, iters = i)))
+  }
+
+  test("every power-iteration caller is bit-identical with and without a reliable checkpoint dir") {
+    for ((name, walk) <- walks) {
+      val base = walk(3).collect().map(r => r.get(0) -> r.getDouble(1)).toMap
+      val reliable = withCheckpointDir { _ =>
+        walk(3).collect().map(r => r.get(0) -> r.getDouble(1)).toMap
+      }
+      assert(base.nonEmpty, name)
+      assert(reliable == base, name)
     }
-    assert(reliable == base)
+  }
+
+  /** Jobs fired on this thread while `body` runs, counted by a listener
+    * on the job group set around it. */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"round-cost-${java.util.UUID.randomUUID}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val lis = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(lis)
+    sc.setJobGroup(group, group)
+    try body
+    finally {
+      sc.clearJobGroup()
+      graft.Harness.drain(spark)
+      sc.removeSparkListener(lis)
+    }
+    n.get
+  }
+
+  test("one more round costs every power-iteration caller pageRank's jobs") {
+    // pageRank's per-round delta before the callers shared one round:
+    // one truncateObserved of one join + one union+aggregate (the
+    // checkpoint job plus the two map-stage jobs AQE submits)
+    val pageRankRound = 3
+    val perRound = walks.map { case (name, walk) =>
+      name -> (jobsOf(walk(3)) - jobsOf(walk(2)))
+    }
+    assert(perRound == walks.map(_._1 -> pageRankRound))
   }
 
   test("truncateObserved returns the same frame as truncate plus exact metrics") {
