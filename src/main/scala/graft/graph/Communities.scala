@@ -51,7 +51,7 @@ object Communities {
       // beats under the (−count, label) ordering and which wins alone
       // exactly when the vertex got no votes — the coalesce semantics,
       // one join cheaper.
-      val votes = labels.join(e, labels("v") === e("src"))
+      val votes = Lineage.coPartitionedJoin(labels, "v", e, "src")
         .groupBy(col("dst").as("v"), col("label"))
         .agg(count(lit(1)).as("__c"))
       labels = Lineage.truncate(

@@ -84,10 +84,11 @@ object PageRank {
     * Scale shape: `edges` is truncated once; the vertex table and its
     * out-degrees come from ONE union+aggregate pass whose truncation
     * also observes n and the dangling count. Each round is one
-    * src-keyed join + ONE union+aggregate (the base leg injects every
-    * vertex with a 0.0 vote and its __deg), truncated by
-    * [[Lineage.truncateObserved]], which also observes the next round's
-    * dangling mass as a driver-side scalar. Truncation is reliable
+    * src-keyed [[Lineage.coPartitionedJoin]] (in place, no broadcast,
+    * when both checkpoints are single-partition) + ONE union+aggregate
+    * (the base leg injects every vertex with a 0.0 vote and its __deg),
+    * truncated by [[Lineage.truncateObserved]], which also observes the
+    * next round's dangling mass as a driver-side scalar. Truncation is reliable
     * checkpointing when the session has a checkpoint dir,
     * localCheckpoint otherwise. */
   private[graft] def iterate(edges: DataFrame, vote: Column, damping: Double,
@@ -112,8 +113,7 @@ object PageRank {
     for (_ <- 0 until iters) {
       // x + 0.0 == x for the base leg's votes; max(__deg) just picks
       // the single non-null base value
-      val contrib = ranks.filter(col("__deg").isNotNull)
-        .join(e, ranks("v") === e("src"))
+      val contrib = Lineage.coPartitionedJoin(ranks.filter(col("__deg").isNotNull), "v", e, "src")
         .select(col("dst").as("v"), vote.as("__c"), lit(null).cast("long").as("__deg"))
       val base = ranks.select(col("v"), lit(0.0).as("__c"), col("__deg"))
       val (next, m) = Lineage.truncateObserved(

@@ -19,3 +19,14 @@ object ColumnBridge {
 object BusBridge {
   def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
+
+/** `Dataset.ofRows` is `private[sql]`: the Dataset-from-LogicalPlan
+  * factory that lets [[graft.operators.Lineage]] re-wrap a checkpoint's
+  * `LogicalRDD` with the statistics and partitioning it really has. */
+object DatasetBridge {
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+}

@@ -2,6 +2,10 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.dedup.Dedup
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition, UnknownPartitioning}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /** The reliable-checkpoint opt-in for iterative operators: setting a
@@ -56,7 +60,7 @@ class LineageSpec extends SparkSpec {
   /** Every caller of the power-iteration kernel (`PageRank.iterate`),
     * on a small input with a dangling vertex where one applies, as a
     * function of the round count. */
-  private lazy val walks: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = {
+  private lazy val walks: Seq[(String, Int => DataFrame)] = {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (1L, 5L)).toDF("src", "dst")
     val weighted = Seq((1L, 2L, 3.0), (2L, 3L, 1.0), (3L, 1L, 2.0), (4L, 1L, 1.0), (1L, 5L, 1.0))
       .toDF("src", "dst", "weight")
@@ -106,14 +110,109 @@ class LineageSpec extends SparkSpec {
   }
 
   test("one more round costs every power-iteration caller pageRank's jobs") {
-    // pageRank's per-round delta before the callers shared one round:
-    // one truncateObserved of one join + one union+aggregate (the
-    // checkpoint job plus the two map-stage jobs AQE submits)
-    val pageRankRound = 3
+    // pageRank's per-round delta: one truncateObserved of one join + one
+    // union+aggregate. The join reads two single-partition checkpoints in
+    // place (no broadcast job), so a round is the aggregate's map-stage
+    // job plus the checkpoint job.
+    val pageRankRound = 2
     val perRound = walks.map { case (name, walk) =>
       name -> (jobsOf(walk(3)) - jobsOf(walk(2)))
     }
     assert(perRound == walks.map(_._1 -> pageRankRound))
+  }
+
+  /** The checkpoint leaf a truncated frame reads. */
+  private def leafOf(df: DataFrame): LogicalRDD =
+    df.queryExecution.optimizedPlan.collectLeaves().collectFirst { case l: LogicalRDD => l }
+      .getOrElse(fail(s"no checkpoint leaf under ${df.queryExecution.optimizedPlan}"))
+
+  test("a small truncation declares SinglePartition and stats from its rows") {
+    val small = Lineage.truncate(spark.range(1000).groupBy((col("id") % 10).as("k")).count())
+    assert(leafOf(small).rdd.getNumPartitions == 1)
+    assert(leafOf(small).outputPartitioning == SinglePartition)
+    val stats = small.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(BigInt(10)))
+    assert(stats.sizeInBytes == BigInt(10 * (8 + 8 + 8)), stats)
+    // variable-width columns count their observed bytes, not a default
+    val text = Lineage.truncate(Seq("a" * 1000, "b" * 3000).toDF("s"))
+    assert(text.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(2 * 8 + 4000))
+    // PageRank's round checkpoints: each round's estimate was the
+    // product of its inputs' before, 4.2e32 bytes after 5 rounds
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (1L, 5L)).toDF("src", "dst")
+    val ranks = graft.graph.PageRank.pageRank(edges, iters = 5)
+    assert(leafOf(ranks).outputPartitioning == SinglePartition)
+    assert(ranks.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(10000),
+      ranks.queryExecution.optimizedPlan.stats)
+  }
+
+  test("a multi-partition checkpoint is never declared SinglePartition") {
+    val rows = spark.range(10000).select(col("id"), (col("id") % 97).as("k"))
+    // repartition(n) is not coalesced by AQE: 8 round-robin partitions
+    val rr = leafOf(Lineage.truncate(rows.repartition(8)))
+    assert(rr.rdd.getNumPartitions == 8)
+    assert(rr.outputPartitioning.isInstanceOf[UnknownPartitioning], rr.outputPartitioning)
+    // one partition over AQE's 1 MB minimum partition size: declaring it
+    // would keep every later round in one task
+    val big = leafOf(Lineage.truncate(spark.range(200000).toDF("id").repartition(1)))
+    assert(big.rdd.getNumPartitions == 1)
+    assert(big.outputPartitioning != SinglePartition)
+    // an exact hash exchange is declared, and a join in place returns
+    // the rows of the undeclared plan
+    val a = Lineage.truncate(rows.repartition(8, col("k")))
+    val b = Lineage.truncate(rows.select(col("k").as("k2"), (col("id") * 2).as("y"))
+      .repartition(8, col("k2")))
+    leafOf(a).outputPartitioning match {
+      case h: HashPartitioning => assert(h.numPartitions == 8 && h.references.toSeq.map(_.name) == Seq("k"))
+      case p => fail(s"expected hashpartitioning(k, 8), got $p")
+    }
+    val joined = Lineage.coPartitionedJoin(a, "k", b, "k2")
+    val plan = joined.queryExecution.executedPlan
+    assert(plan.toString.contains("ShuffledHashJoin"), plan)
+    joined.collect() // the final plan is the executed one
+    val finalPlan = plan.asInstanceOf[AdaptiveSparkPlanExec].executedPlan.toString
+    assert(!finalPlan.contains("Exchange"), finalPlan)
+    val plain = rows.join(rows.select(col("k").as("k2"), (col("id") * 2).as("y")),
+      col("k") === col("k2"))
+    def sorted(df: DataFrame) = df.select("id", "k", "k2", "y").as[(Long, Long, Long, Long)]
+      .collect().sorted.toSeq
+    assert(sorted(joined) == sorted(plain))
+    // a coalesced read keeps no hash partitioning, however many
+    // partitions it has left
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.get(advisory)
+    spark.conf.set(advisory, "2k")
+    val coalesced =
+      try leafOf(Lineage.truncate(rows.groupBy("k").agg(sum("id").as("s"))))
+      finally spark.conf.set(advisory, prev)
+    assert(!coalesced.outputPartitioning.isInstanceOf[HashPartitioning], coalesced.outputPartitioning)
+    if (coalesced.rdd.getNumPartitions > 1)
+      assert(coalesced.outputPartitioning != SinglePartition)
+  }
+
+  test("a pageRank round joins its checkpoints in place, with no broadcast") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val lis = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = qe.executedPlan match {
+        case a: AdaptiveSparkPlanExec => plans.add(a.executedPlan.toString)
+        case p => plans.add(p.toString)
+      }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(lis)
+    try {
+      val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (1L, 5L)).toDF("src", "dst")
+      graft.graph.PageRank.pageRank(edges, iters = 2)
+      graft.Harness.drain(spark)
+    } finally spark.listenerManager.unregister(lis)
+    import scala.jdk.CollectionConverters._
+    val rounds = plans.asScala.filter(_.contains("Join")).toSeq
+    assert(rounds.size == 2, plans)
+    rounds.foreach { p =>
+      assert(p.contains("ShuffledHashJoin"), p)
+      assert(!p.contains("BroadcastExchange"), p)
+    }
   }
 
   test("truncateObserved returns the same frame as truncate plus exact metrics") {
